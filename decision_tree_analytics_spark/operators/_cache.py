@@ -1,13 +1,13 @@
 """Cache hygiene for queries that persist intermediates.
 
-Several queries persist a mid-plan table (LSH band/bucket stores)
-because the consumer self-joins it and Catalyst does not reuse the
-exchange across the two sides.  The query functions return a *lazy*
-DataFrame, so they cannot unpersist in a ``finally`` the way
-``ml_inventory.q26_dt_train_predict`` does — the action happens in
-the caller.  Left alone, the cached blocks accumulate for the life of
-the session when many queries share one SparkSession (the driver's
-correctness sweep, the verify sweep, bench).
+Several queries persist a mid-plan table (LSH band/bucket stores,
+q26's training features) because the consumer reads it more than
+once and Catalyst does not reuse the exchange or scan across the
+reads.  The query functions return a *lazy* DataFrame, so they cannot
+unpersist in a ``finally``: that would run before the caller's action
+and leave the action to recompute the table from its sources.  Left
+alone, the cached blocks accumulate for the life of the session when
+many queries share one SparkSession (oracle sweeps, bench).
 
 ``tether_cache`` ties the cached table's lifetime to the *result*
 DataFrame: when the caller drops its last reference to the result

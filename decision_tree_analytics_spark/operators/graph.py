@@ -37,12 +37,15 @@ def _ckpt1(df: DataFrame) -> DataFrame:
     """Eager SINGLE-PARTITION checkpoint whose SinglePartition stays
     visible to consumers.  The contracted graph state is ≤n² ≤625
     rows at ANY corpus scale, and SinglePartition satisfies every
-    downstream join/groupBy clustering, so loop rounds over these
-    tables plan with ZERO exchanges (one single-task stage per
-    round).  The trailing coalesce(1) is load-bearing: when the
-    checkpointed plan contains an exchange it is AQE-wrapped, and
-    Dataset.localCheckpoint then returns an ExistingRDD with UNKNOWN
-    partitioning — consumers would re-shuffle the KB-scale table to
+    downstream join/groupBy clustering, so the first loop rounds over
+    these tables plan with no exchange.  From round 2 on, the
+    checkpoint's compounding size estimate can pass
+    spark.sql.maxSinglePartitionBytes and the round re-shuffles its
+    KB-scale state (OPTIMIZATION_r15.md).  The trailing coalesce(1)
+    is load-bearing: when the checkpointed plan contains an exchange
+    it is AQE-wrapped, and Dataset.localCheckpoint then returns an
+    ExistingRDD with UNKNOWN partitioning — consumers would
+    re-shuffle the KB-scale table to
     spark.sql.shuffle.partitions micro-tasks.  Coalescing the
     1-partition RDD is a free narrow op that re-establishes the
     partitioning property."""
@@ -707,8 +710,9 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Single partition (_ckpt1): the bottleneck matrix is ≤n² ≤625
     # rows at ANY corpus scale (contract-then-solve), and a visible
     # SinglePartition on both self-join sides satisfies the join and
-    # the groupBy clustering, so each squaring plans with ZERO
-    # exchanges and runs as one single-task job.
+    # the groupBy clustering, so the first squarings plan with no
+    # exchange.  Later ones may re-shuffle the small matrix once the
+    # size estimate passes maxSinglePartitionBytes (see _ckpt1).
     m = _ckpt1(bd.unionByName(self_loops))
     for _ in range(MST_SQUARINGS):
         l = m.select(F.col("src").alias("ls"), F.col("dst").alias("mid"), F.col("cd").alias("lc"))
@@ -920,9 +924,11 @@ def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager checkpoint job otherwise re-derives it from the persisted
     # fact edges (mean-weight scalar broadcast + distinct exchange,
     # re-paid BC_ROUNDS times).  With sym and the BFS state both on a
-    # visible single partition (_ckpt1), every round — frontier join,
-    # count aggregate, first-reached anti-join, union — plans with
-    # ZERO exchanges and runs as one single-task job.
+    # visible single partition (_ckpt1), the first rounds — frontier
+    # join, count aggregate, first-reached anti-join, union — plan
+    # with no exchange; from round 2 on a round may re-shuffle its
+    # small state once the size estimate passes
+    # maxSinglePartitionBytes (see _ckpt1).
     sym = _ckpt1(
         und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
             und.select(F.col("b").alias("u"), F.col("a").alias("v"))

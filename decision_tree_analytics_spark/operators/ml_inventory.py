@@ -46,6 +46,9 @@ def q26_dt_train_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     (keys + vector + label), not the 16-column lineitem row — the
     projection prunes the parquet scan and every per-level pass
     (~25% faster at sf0.1, and the gap widens with row width).
+    The cache is tethered to the result (``tether_cache``), so the
+    caller's scoring action reads it too instead of re-reading
+    lineitem and rebuilding the features.
     """
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_extendedprice", *_FEATURES
@@ -60,23 +63,20 @@ def q26_dt_train_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    try:
-        training = assembled.select(FEATURES_COL, "label")
-        model = DecisionTreeRegressor(
-            featuresCol=FEATURES_COL,
-            labelCol="label",
-            impurity="variance",
-            maxDepth=5,
-            maxBins=64,
-            seed=12345,
-        ).fit(training)
-        return (
-            model.setPredictionCol("predicted_price")
-            .transform(assembled)
-            .select("l_orderkey", "l_linenumber", "predicted_price")
-        )
-    finally:
-        assembled.unpersist()
+    model = DecisionTreeRegressor(
+        featuresCol=FEATURES_COL,
+        labelCol="label",
+        impurity="variance",
+        maxDepth=5,
+        maxBins=64,
+        seed=12345,
+    ).fit(assembled.select(FEATURES_COL, "label"))
+    result = (
+        model.setPredictionCol("predicted_price")
+        .transform(assembled)
+        .select("l_orderkey", "l_linenumber", "predicted_price")
+    )
+    return tether_cache(result, assembled)
 
 
 # Fixed per-feature split-candidate grids (the bounded-bins move
@@ -1346,7 +1346,7 @@ def ml_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is also computed ONCE as a named column (sc_t) — the inline form
     # re-expanded the score tree 3×|cands|+|cands| times per round and
     # re-analysis of that nested tree was most of the remaining build.
-    r6s = lambda s: f"floor(({s}) * 1e6 + 0.5) / 1e6"  # noqa: E731
+    r6s = lambda s: f"floor(({s}) * 1e6 + 0.5D) / 1e6"  # noqa: E731
     state = li.agg(F.expr(r6s("avg(y)")).alias("f0"))
 
     def fhat_sql(m: int) -> str:

@@ -95,6 +95,17 @@ def enable_runtime_bloom_filters(
     return spark
 
 
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` when ``$SPARK_GRAFT_DRIVER_MEM`` is
+    unset: 75% of physical RAM, capped at 16g, so the driver heap
+    leaves room for the Python workers and the OS on small hosts."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, ValueError, OSError):
+        return "16g"
+    return f"{min(ram * 3 // 4, 16 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "decision-tree-analytics-spark",
     master: str | None = None,
@@ -117,7 +128,10 @@ def get_spark(
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_memory(),
+        )
         # Broadcast threshold: bounded dims (region/nation) always fit;
         # AQE upgrades joins whose runtime size turns out small.
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")

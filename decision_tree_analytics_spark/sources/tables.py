@@ -6,12 +6,21 @@ documents embeddings``.
 
 Scale notes
 -----------
-* Readers are plain ``spark.read.parquet`` — predicate pushdown and
-  column pruning reach the scan for free (verify with
+* Readers are ``spark.read.parquet`` — predicate pushdown and column
+  pruning reach the scan for free (verify with
   ``df.explain('formatted')`` → ``PushedFilters`` / ``ReadSchema``).
-  At 100 TB the same tables would be directories of many files,
-  partitioned (e.g. orders by month); nothing here assumes a single
-  file.
+  A schema-less read starts a one-task Spark job to infer the schema
+  from the footer (36-56 ms per read on a 4-core host), so each
+  single-file table's inferred schema is pinned under its footer
+  digest (``parquet_footer_tag``) and the session's inference confs:
+  the first read of a footer infers as usual, every later read passes
+  the recorded schema and launches no job.  The pin is exact, not a
+  heuristic — a parquet schema lives in its footer, so an equal
+  digest under equal confs infers an equal schema, and a file
+  rewritten at the same path gets a new digest.  At 100 TB the same
+  tables would be directories of many files, partitioned (e.g. orders
+  by month); directories keep the plain inferring read, and nothing
+  here assumes a single file.
 * ``events.ts`` is a parquet INT64 timestamp whose *unit has changed
   across testdata generations* (TIMESTAMP(NANOS) originally, now
   TIMESTAMP(MICROS)); Spark 4.1 also dropped the
@@ -30,6 +39,8 @@ from __future__ import annotations
 
 import glob as _glob
 import os
+import threading
+from collections import OrderedDict
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -209,6 +220,44 @@ assert frozenset(BASE_TABLES) == frozenset(TABLES)
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+# The session confs Spark 4.1.2's parquet schema inference reads
+# (ParquetFileFormat.mergeSchemasInParallel builds its
+# ParquetToSparkSchemaConverter from exactly these); everything else
+# it reads is the footer.
+_INFERENCE_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.reader.respectUnknownTypeAnnotation.enabled",
+)
+_PINNED_MAX = 256
+# (footer tag, *inference conf values) -> inferred schema, LRU order.
+_pinned: OrderedDict[tuple, StructType] = OrderedDict()
+_pinned_lock = threading.Lock()
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, with a single file's schema
+    pinned by footer digest so only its first read runs the
+    schema-inference job (see the module docstring)."""
+    if not os.path.isfile(path):
+        return spark.read.parquet(path)
+    key = (parquet_footer_tag(path), *(spark.conf.get(k, None) for k in _INFERENCE_CONFS))
+    with _pinned_lock:
+        schema = _pinned.get(key)
+        if schema is not None:
+            _pinned.move_to_end(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    with _pinned_lock:
+        _pinned[key] = df.schema
+        if len(_pinned) > _PINNED_MAX:
+            _pinned.popitem(last=False)
+    return df
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one table of the star schema as a DataFrame."""
     if name not in TABLES:
@@ -216,7 +265,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     prepare_session(spark)
     if name == "events":
         return _load_events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFrame, ...]:

@@ -283,3 +283,38 @@ def test_conformal_coverage_near_nominal(spark, sf_dir):
     assert 0.85 <= row.coverage <= 0.96
     assert row.q90 > 0 and row.mean_width == pytest.approx(2 * row.q90, rel=1e-9)
     assert row.n_train > row.n_cal > row.n_test > 0
+
+
+def test_q26_scoring_reads_the_tethered_cache(spark, sf_dir):
+    """q26 caches its training features and tethers the cache to the
+    result: the caller's scoring action reads the cache instead of
+    re-reading lineitem, and dropping the collected result frees it."""
+    import gc
+    import time
+
+    from decision_tree_analytics_spark.operators.ml_inventory import (
+        q26_dt_train_predict,
+    )
+    from decision_tree_analytics_spark.plans.inspect import simple_plan, uncached_scans
+    from decision_tree_analytics_spark.sources.tables import load_table
+
+    sc = spark.sparkContext._jsc.sc()
+
+    def cached_rdds() -> set[int]:  # RDDs with blocks in storage
+        return {info.id() for info in sc.getRDDStorageInfo()}
+
+    n = load_table(spark, sf_dir, "lineitem").count()
+    before = cached_rdds()
+    result = q26_dt_train_predict(spark, sf_dir)
+    plan = simple_plan(result)
+    assert "InMemoryRelation" in plan
+    assert uncached_scans(plan, "lineitem") == 0
+    assert len(result.collect()) == n
+    ours = cached_rdds() - before
+    assert ours, "the fit cached no features"
+    del result
+    gc.collect()
+    deadline = time.monotonic() + 10
+    while cached_rdds() & ours and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert not cached_rdds() & ours
