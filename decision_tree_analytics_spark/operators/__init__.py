@@ -53,9 +53,7 @@ ALL_MODULES = (
     stats_ext,
     retrieval,
     source_io,
-    # r12: the five round-12 operators + mm_video_frame_plan (r14);
-    # the module also holds the one still-pending candidate
-    # (rel_hodges_lehmann), NOT in its QUERIES.
+    # r12: the five round-12 operators + mm_video_frame_plan (r14).
     pending_r12,
     # r14: the arrow-optimized Python UDTF lane (udf_token_spans).
     pending_r14,

@@ -29,6 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
+from decision_tree_analytics_spark.operators._loop import checkpoint
 from decision_tree_analytics_spark.sources.tables import (
     load_table,
     parquet_footer_tag,
@@ -295,30 +296,18 @@ def connected_components(
     fixpoint raises instead of silently returning a partial labeling
     (a wrong answer must never look like a converged one).
 
-    ``parts``: materialized partition count for the checkpoints.  A
-    checkpoint otherwise materializes the full
-    ``spark.sql.shuffle.partitions`` width (AQE's coalescing does not
-    apply on the checkpoint path — the graph_closeness measurement),
-    so a vanilla 200-partition session pays 200 micro-tasks per round
-    per consumer for a KB-scale label table.  Callers derive it from
-    the input's ON-DISK size (size_aware_parallelism), so it scales
-    with the corpus instead of encoding a local core count."""
-    _ck = (
-        (lambda df: df.coalesce(parts).localCheckpoint(eager=True))
-        if parts
-        else (lambda df: df.localCheckpoint(eager=True))
-    )
-    edges = _ck(
+    ``parts``: materialized partition count of every round's
+    checkpoint (operators/_loop.py).  Callers derive it from the
+    input's ON-DISK size (size_aware_parallelism), so it scales with
+    the corpus instead of encoding a local core count."""
+    edges = checkpoint(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))),
+        parts,
     )
-    # Lineage control: each round's labels are materialized with
-    # ``localCheckpoint`` (eager), which both caches the rows AND
-    # truncates the logical plan.  A plain persist() is NOT enough for
-    # an iterative self-join — the analyzed plan still nests the whole
-    # history, so analysis cost (and driver heap) grows exponentially
-    # with rounds; Spark 4.1's analyzer OOMs on it within ~4 rounds.
-    labels = _ck(docs.select("doc_id", F.col("doc_id").alias("component_id")))
+    labels = checkpoint(
+        docs.select("doc_id", F.col("doc_id").alias("component_id")), parts
+    )
     prev_sum = labels.agg(F.sum("component_id")).first()[0]
     converged = False
     for _ in range(max_iter):
@@ -337,9 +326,10 @@ def connected_components(
         parents = stepped.select(
             F.col("doc_id").alias("p_doc"), F.col("component_id").alias("p_label")
         )
-        new_labels = _ck(
+        new_labels = checkpoint(
             stepped.join(parents, stepped.component_id == parents.p_doc)
-            .select("doc_id", F.col("p_label").alias("component_id"))
+            .select("doc_id", F.col("p_label").alias("component_id")),
+            parts,
         )
         new_sum = new_labels.agg(F.sum("component_id")).first()[0]
         labels.unpersist()
@@ -706,8 +696,8 @@ def dedup_semantic_components(
 
     Same scale story as the lexical pipeline: candidates come from the
     LSH bucket join (never all-pairs), and the min-label/pointer-
-    jumping iteration is one join + partial-min per round with eager
-    localCheckpoint lineage truncation.  Output labels EVERY vector
+    jumping iteration is one join + partial-min per round with an
+    eager checkpoint per round.  Output labels EVERY vector
     (singletons label themselves)."""
     vecs = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").cast("long").alias("doc_id")

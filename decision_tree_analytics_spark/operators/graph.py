@@ -15,10 +15,10 @@ Iteration shape (the part that matters at 100 TB):
 * each iteration is edges ⋈ ranks (shuffle keyed on src) followed by
   a groupBy(dst) with map-side partial sums — the classic distributed
   PageRank step; state per iteration is one rank per node;
-* the driver loop only composes plans; with many iterations you
-  checkpoint/persist every few rounds exactly as
-  dedup.connected_components does (its pointer-jumping loop is the
-  convergence-driven twin of this fixed-round loop).
+* the driver loop only composes plans and checkpoints each round's
+  state through operators/_loop.py, as every graph loop here and
+  dedup.connected_components (the convergence-driven twin of this
+  fixed-round loop) do.
 """
 
 from __future__ import annotations
@@ -27,29 +27,18 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
+from decision_tree_analytics_spark.operators._loop import checkpoint, iterate
 from decision_tree_analytics_spark.sources.tables import load_table
 
 PR_ITERS = 3
 PR_DAMPING = 0.85
 
-
-def _ckpt1(df: DataFrame) -> DataFrame:
-    """Eager SINGLE-PARTITION checkpoint whose SinglePartition stays
-    visible to consumers.  The contracted graph state is ≤n² ≤625
-    rows at ANY corpus scale, and SinglePartition satisfies every
-    downstream join/groupBy clustering, so the first loop rounds over
-    these tables plan with no exchange.  From round 2 on, the
-    checkpoint's compounding size estimate can pass
-    spark.sql.maxSinglePartitionBytes and the round re-shuffles its
-    KB-scale state (OPTIMIZATION_r15.md).  The trailing coalesce(1)
-    is load-bearing: when the checkpointed plan contains an exchange
-    it is AQE-wrapped, and Dataset.localCheckpoint then returns an
-    ExistingRDD with UNKNOWN partitioning — consumers would
-    re-shuffle the KB-scale table to
-    spark.sql.shuffle.partitions micro-tasks.  Coalescing the
-    1-partition RDD is a free narrow op that re-establishes the
-    partitioning property."""
-    return df.coalesce(1).localCheckpoint().coalesce(1)
+# Checkpoint width of the graph loops' state.  Every loop runs on the
+# contracted nation graph, whose state is at most n² ≤ 625 rows at any
+# corpus scale, so a few partitions hold it; materializing the
+# session's shuffle width instead (200 micro-tasks on a vanilla
+# session) measured 6.9 s → 5.9 s for graph_closeness at sf0.1.
+STATE_PARTS = 8
 
 
 def _trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -92,36 +81,33 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     out_w = edges.groupBy(F.col("src").alias("ow_src")).agg(
         F.sum("weight").alias("out_weight")
     )
-    # The per-iteration checkpoints below turn each iteration into its
-    # own action, and Catalyst reuses NO exchange across actions — so
-    # the shared loop inputs (normalized edges, node list; both bounded
-    # by the contracted graph) are checkpointed once up front, or every
-    # iteration job would re-run their distinct/groupBy exchanges.
-    e = (
-        edges.join(out_w, edges.src == out_w.ow_src)
-        .select(
+    # Each checkpointed round is its own action, and Catalyst reuses
+    # no exchange across actions — so the shared loop inputs are
+    # checkpointed once up front, or every round would re-run their
+    # distinct/groupBy exchanges (the same holds in every loop below).
+    e = checkpoint(
+        edges.join(out_w, edges.src == out_w.ow_src).select(
             "src", "dst", (F.col("weight") / F.col("out_weight")).alias("norm_w")
-        )
-        .coalesce(8)
-        .localCheckpoint()
+        ),
+        STATE_PARTS,
     )
-    nodes = (
+    nodes = checkpoint(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .coalesce(8)
-        .localCheckpoint()
+        .distinct(),
+        STATE_PARTS,
     )
     n_nodes = nodes.agg(F.count(F.lit(1)).alias("n"))
     ranks = nodes.crossJoin(F.broadcast(n_nodes)).select(
         "node", (F.lit(1.0) / F.col("n")).alias("rank")
     )
-    for it in range(PR_ITERS):
+
+    def rank_round(ranks: DataFrame, _: int) -> DataFrame:
         contrib = e.join(ranks, e.src == ranks.node).select(
             F.col("dst").alias("cn"), (F.col("rank") * F.col("norm_w")).alias("c")
         )
         incoming = contrib.groupBy("cn").agg(F.sum("c").alias("inc"))
-        ranks = (
+        return (
             nodes.crossJoin(F.broadcast(n_nodes))
             .join(incoming, F.col("node") == F.col("cn"), "left")
             .select(
@@ -132,12 +118,8 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("rank"),
             )
         )
-        # Per-iteration lineage truncation of the one-rank-per-node
-        # state (all but the last iteration) — the graph_shortest_path
-        # rule: Catalyst otherwise re-plans the whole unrolled chain
-        # (a 4.9k-line formatted plan at PR_ITERS=3) on every run.
-        if it < PR_ITERS - 1:
-            ranks = ranks.coalesce(8).localCheckpoint()
+
+    ranks = iterate(ranks, rank_round, PR_ITERS, STATE_PARTS)
     result = ranks.select(
         F.col("node").alias("nation"),
         (F.floor(F.col("rank") * 1e6 + 0.5) / 1e6).alias("pagerank"),
@@ -194,8 +176,8 @@ def graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     union(frontier, advanced) formulation doubles the unrolled lineage
     per round (2^rounds recomputations of the early frontiers; see
     graph_shortest_path, whose min-plus relaxation this is with unit
-    costs).  At real scale you persist the frontier per round exactly
-    as dedup.connected_components does."""
+    costs).  Each round's frontier is checkpointed through
+    operators/_loop.py, so the unrolled plan stays one round deep."""
     edges = _trade_edges(spark, sf_dir).persist()  # seed + per-round reuse
     mean_w = edges.agg(F.avg("weight").alias("mw"))
     sparse = (
@@ -212,26 +194,21 @@ def graph_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).alias("c"),
         )
     )
-    # Checkpoint the bounded edge table once: the per-round
-    # checkpoints below make each round its own action, and the
-    # self-loop distinct's exchange would otherwise re-run per round
-    # (no cross-action exchange reuse in Catalyst).
-    bd = sparse.unionByName(self_loops).coalesce(8).localCheckpoint()
+    bd = checkpoint(sparse.unionByName(self_loops), STATE_PARTS)
     seed = bd.agg(F.min("src").alias("node"))
-    reach = seed.select("node", F.lit(0).alias("hop"))
-    for i in range(KHOP_ROUNDS):
-        reach = (
+
+    def hop_round(reach: DataFrame, _: int) -> DataFrame:
+        return (
             bd.join(reach, bd.src == reach.node)
             .groupBy("dst")
             .agg(F.min(F.col("hop") + F.col("c")).alias("hop"))
             .select(F.col("dst").alias("node"), "hop")
         )
-        # Per-round lineage truncation of the ≤|nations|-row frontier
-        # (all but the last round) — the graph_shortest_path rule:
-        # the unrolled chain is linear but Catalyst re-plans all of it
-        # on every run, and driver-side plan work dominated the wall.
-        if i < KHOP_ROUNDS - 1:
-            reach = reach.coalesce(8).localCheckpoint()
+
+    reach = iterate(
+        seed.select("node", F.lit(0).alias("hop")), hop_round, KHOP_ROUNDS,
+        STATE_PARTS,
+    )
     result = reach.select("node", F.col("hop").cast("long").alias("hop"))
     return tether_cache(result, edges)
 
@@ -344,16 +321,11 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("a", "b")
         .agg(F.sum("weight").cast("long").alias("w"))
     )
-    # Checkpointed once: the per-round checkpoints below make each
-    # round its own action, and und's groupBy exchange would otherwise
-    # re-run per round (no cross-action exchange reuse in Catalyst).
-    bd = (
-        und.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w")
-        .unionByName(
+    bd = checkpoint(
+        und.select(F.col("a").alias("src"), F.col("b").alias("dst"), "w").unionByName(
             und.select(F.col("b").alias("src"), F.col("a").alias("dst"), "w")
-        )
-        .coalesce(8)
-        .localCheckpoint()
+        ),
+        STATE_PARTS,
     )
     labels = bd.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
@@ -361,23 +333,20 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     argmax = Window.partitionBy("dst").orderBy(
         F.col("wsum").desc(), F.col("label").asc()
     )
-    for rnd in range(LPA_ROUNDS):
+
+    def label_round(labels: DataFrame, _: int) -> DataFrame:
         cand = (
             bd.join(labels, bd.src == labels.node)
             .groupBy("dst", "label")
             .agg(F.sum("w").cast("long").alias("wsum"))
         )
-        labels = (
+        return (
             cand.withColumn("rn", F.row_number().over(argmax))
             .filter(F.col("rn") == 1)
             .select(F.col("dst").alias("node"), "label")
         )
-        # Per-round lineage truncation of the one-label-per-node state
-        # (all but the last round) — the graph_shortest_path rule: the
-        # unrolled chain is a 3.9k-line formatted plan that Catalyst
-        # otherwise re-plans on every run.
-        if rnd < LPA_ROUNDS - 1:
-            labels = labels.coalesce(8).localCheckpoint()
+
+    labels = iterate(labels, label_round, LPA_ROUNDS, STATE_PARTS)
     wlab = Window.partitionBy("label")
     result = labels.select(
         F.col("node").alias("nation"),
@@ -573,33 +542,26 @@ def graph_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("long").alias("c"),
         )
     )
-    # Checkpointed (not persisted): the per-round checkpoints below
-    # make each round its own action, and a persisted bd re-enters
-    # every round's plan as a full InMemoryRelation subtree that
-    # Catalyst re-analyzes per round — the checkpoint serves the same
-    # bounded edge table as a plain ExistingRDD scan (the graph_khop
-    # form: 3.3k-line final plan → 67 lines).
-    bd = both.unionByName(self_loops).coalesce(8).localCheckpoint()
+    # Checkpointed, not persisted: a persisted bd re-enters every
+    # round's plan as an InMemoryRelation subtree that Catalyst
+    # re-analyzes per round; the checkpoint is a plain scan.  Per-round
+    # checkpoints of the frontier cut this query 5.4-6.1 s → 2.6-4.0 s
+    # warm at sf0.1 (OPTIMIZATION_r14.md).
+    bd = checkpoint(both.unionByName(self_loops), STATE_PARTS)
     seed = bd.agg(F.min("src").alias("node"))
-    reach = seed.select("node", F.lit(0).cast("long").alias("dist"))
-    for i in range(SP_ROUNDS):
-        reach = (
+
+    def relax(reach: DataFrame, _: int) -> DataFrame:
+        return (
             bd.join(reach, bd.src == reach.node)
             .groupBy("dst")
             .agg(F.min(F.col("dist") + F.col("c")).alias("dist"))
             .select(F.col("dst").alias("node"), "dist")
         )
-        # Truncate the unrolled lineage per round (all but the last,
-        # which the caller's action materializes): the linear plan is
-        # correct but Catalyst re-analyzes/re-optimizes the WHOLE
-        # round chain on every run — measured ~60-70% of this query's
-        # wall was driver-side plan work, and per-round checkpoints of
-        # the ≤|nations|-row frontier cut the query 5.4-6.1 s →
-        # 2.6-4.0 s warm at sf0.1 (OPTIMIZATION_r14.md).  coalesce(8)
-        # keeps the materialized partition count at the frontier's
-        # size, not shuffle.partitions (the graph_closeness rule).
-        if i < SP_ROUNDS - 1:
-            reach = reach.coalesce(8).localCheckpoint()
+
+    reach = iterate(
+        seed.select("node", F.lit(0).cast("long").alias("dist")), relax,
+        SP_ROUNDS, STATE_PARTS,
+    )
     result = reach.select(
         F.col("node").alias("nation"), F.col("dist").cast("long").alias("dist_cost")
     )
@@ -700,29 +662,22 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("long").alias("cd"),
         )
     )
-    # Each squaring references m TWICE (both join sides) — left
-    # unrolled, the lineage doubles per round (2^5 copies of the
-    # edge build; the graph_shortest_path lesson, but here the
-    # double reference is inherent to squaring).  localCheckpoint
-    # eagerly materializes the ≤n² bottleneck matrix per round
-    # (CLAUDE.md iterative-loop rule), keeping every squaring a
-    # join of two tiny cached tables.
-    # Single partition (_ckpt1): the bottleneck matrix is ≤n² ≤625
-    # rows at ANY corpus scale (contract-then-solve), and a visible
-    # SinglePartition on both self-join sides satisfies the join and
-    # the groupBy clustering, so the first squarings plan with no
-    # exchange.  Later ones may re-shuffle the small matrix once the
-    # size estimate passes maxSinglePartitionBytes (see _ckpt1).
-    m = _ckpt1(bd.unionByName(self_loops))
-    for _ in range(MST_SQUARINGS):
+    # Each squaring references m TWICE (both join sides), so every
+    # round is checkpointed, the last one included — on one partition,
+    # whose visible SinglePartition satisfies the self-join and the
+    # groupBy clustering of the first squarings.
+    def square(m: DataFrame, _: int) -> DataFrame:
         l = m.select(F.col("src").alias("ls"), F.col("dst").alias("mid"), F.col("cd").alias("lc"))
         r = m.select(F.col("dst").alias("rd"), F.col("src").alias("mid"), F.col("cd").alias("rc"))
-        m = _ckpt1(
+        return (
             l.join(r, "mid")
             .groupBy("ls", "rd")
             .agg(F.min(F.greatest("lc", "rc")).alias("cd"))
             .select(F.col("ls").alias("src"), F.col("rd").alias("dst"), "cd")
         )
+
+    m = checkpoint(bd.unionByName(self_loops), 1)
+    m = checkpoint(iterate(m, square, MST_SQUARINGS, 1), 1)
     result = (
         ce.join(
             m,
@@ -791,7 +746,7 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     compute the full reachability relation by SCC_SQUARINGS boolean
     matrix squarings (R ← ∃mid R(a,mid) ∧ R(mid,b), with self-loops so
     shorter paths persist — the graph_mst machinery in the (or, and)
-    semiring, localCheckpoint per round since each squaring references
+    semiring, checkpointed every round since each squaring references
     R twice), then scc(n) = min over {m : R(n,m) ∧ R(m,n)} — the
     smallest mutually-reachable node, a canonical deterministic label
     (reflexive via self-loops, so singletons label themselves).
@@ -813,24 +768,23 @@ def graph_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(sparse.select(F.col("dst").alias("node")))
         .distinct()
     )
-    r = (
+    r = checkpoint(
         sparse.unionByName(
             nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-        )
-        .distinct()
-        .coalesce(8)
-        .localCheckpoint()
+        ).distinct(),
+        STATE_PARTS,
     )
-    for _ in range(SCC_SQUARINGS):
+
+    def square(r: DataFrame, _: int) -> DataFrame:
         l = r.select(F.col("src").alias("a"), F.col("dst").alias("mid"))
         rr = r.select(F.col("src").alias("mid"), F.col("dst").alias("b"))
-        r = (
+        return (
             l.join(rr, "mid")
             .select(F.col("a").alias("src"), F.col("b").alias("dst"))
             .distinct()
-            .coalesce(8)
-            .localCheckpoint()
         )
+
+    r = checkpoint(iterate(r, square, SCC_SQUARINGS, STATE_PARTS), STATE_PARTS)
     rev = r.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     mutual = r.join(rev, ["src", "dst"], "left_semi")
     labels = mutual.groupBy("src").agg(F.min("dst").alias("scc"))
@@ -907,7 +861,7 @@ def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph (≤25 nodes → ≤625 rows); at 100 TB the expensive stage is
     the fact aggregation INTO the graph, and each BFS round is one
     join + one aggregate referencing the checkpointed state once
-    (plus the anti-join — hence per-round localCheckpoint, the
+    (plus the anti-join — hence a checkpoint every round, the
     graph_mst rule).  tests/test_graph.py proves equality with a
     pure-Python Brandes-style replay."""
     edges = _trade_edges(spark, sf_dir).persist()
@@ -920,31 +874,28 @@ def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # The sparsified edge list is checkpointed ONCE: every BFS round's
-    # eager checkpoint job otherwise re-derives it from the persisted
-    # fact edges (mean-weight scalar broadcast + distinct exchange,
-    # re-paid BC_ROUNDS times).  With sym and the BFS state both on a
-    # visible single partition (_ckpt1), the first rounds — frontier
-    # join, count aggregate, first-reached anti-join, union — plan
-    # with no exchange; from round 2 on a round may re-shuffle its
-    # small state once the size estimate passes
-    # maxSinglePartitionBytes (see _ckpt1).
-    sym = _ckpt1(
+    # With sym and the BFS state both on one partition, the first
+    # rounds — frontier join, count aggregate, first-reached anti-join,
+    # union — plan with no exchange.
+    sym = checkpoint(
         und.select(F.col("a").alias("u"), F.col("b").alias("v")).unionByName(
             und.select(F.col("b").alias("u"), F.col("a").alias("v"))
-        )
+        ),
+        1,
     )
     nodes = sym.select(F.col("u").alias("node")).distinct()
-    r = _ckpt1(
+    r = checkpoint(
         nodes.select(
             F.col("node").alias("s"),
             F.col("node").alias("t"),
             F.lit(0).alias("dist"),
             F.lit(1).cast("long").alias("cnt"),
-        )
+        ),
+        1,
     )
-    for k in range(1, BC_ROUNDS + 1):
-        frontier = r.filter(F.col("dist") == k - 1)
+
+    def bfs_layer(r: DataFrame, i: int) -> DataFrame:
+        frontier = r.filter(F.col("dist") == i)
         ext = (
             frontier.join(sym, frontier.t == sym.u)
             .groupBy("s", "v")
@@ -952,8 +903,10 @@ def graph_betweenness(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         new = ext.join(
             r.select("s", F.col("t").alias("v")), ["s", "v"], "left_anti"
-        ).select("s", F.col("v").alias("t"), F.lit(k).alias("dist"), "cnt")
-        r = _ckpt1(r.unionByName(new))
+        ).select("s", F.col("v").alias("t"), F.lit(i + 1).alias("dist"), "cnt")
+        return r.unionByName(new)
+
+    r = checkpoint(iterate(r, bfs_layer, BC_ROUNDS, 1), 1)
     p = r.filter((F.col("dist") > 0) & (F.col("s") < F.col("t"))).select(
         F.col("s").alias("ps"),
         F.col("t").alias("pt"),
@@ -1064,7 +1017,7 @@ def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     each one self-join + groupBy-min over the CONTRACTED ≤25-node
     graph (graph_mst's cut-property machinery in the (min, +)
     semiring instead of (min, max)).  Each squaring references the
-    previous matrix TWICE, so per-round localCheckpoint is mandatory
+    previous matrix TWICE, so a checkpoint every round is mandatory
     (the doubling-lineage gotcha) and the oracle's chained CTEs are
     AS MATERIALIZED for the same reason.
 
@@ -1107,28 +1060,23 @@ def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0).cast("long").alias("d"),
         )
     )
-    # coalesce(8) before each checkpoint: the matrix is ≤n² rows but a
-    # vanilla session shuffles it into spark.sql.shuffle.partitions
-    # (200) micro-tasks per round and localCheckpoint materializes
-    # them all (AQE's coalescing does not apply on the checkpoint
-    # path) — measured 6.9 s → 5.9 s at sf0.1 on a quiet box.  On a
-    # genuinely large contracted graph, raise the target with n².
-    m = bd.unionByName(self_loops).coalesce(8).localCheckpoint()
-    for _ in range(CLOSENESS_SQUARINGS):
+
+    def square(m: DataFrame, _: int) -> DataFrame:
         l = m.select(
             F.col("src").alias("ls"), F.col("dst").alias("mid"), F.col("d").alias("ld")
         )
         r = m.select(
             F.col("dst").alias("rd"), F.col("src").alias("mid"), F.col("d").alias("rdist")
         )
-        m = (
+        return (
             l.join(r, "mid")
             .groupBy("ls", "rd")
             .agg(F.min(F.col("ld") + F.col("rdist")).alias("d"))
             .select(F.col("ls").alias("src"), F.col("rd").alias("dst"), "d")
-            .coalesce(8)
-            .localCheckpoint()
         )
+
+    m = checkpoint(bd.unionByName(self_loops), STATE_PARTS)
+    m = checkpoint(iterate(m, square, CLOSENESS_SQUARINGS, STATE_PARTS), STATE_PARTS)
     reach = m.filter(F.col("src") != F.col("dst"))
     agg = reach.groupBy("src").agg(
         F.count(F.lit(1)).cast("long").alias("n_reach"),
@@ -1221,20 +1169,21 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
     )
-    # coalesce(8) per checkpoint — the graph_closeness micro-task
-    # rationale; the edge list is ≤2|E| rows on the contracted graph.
-    e = und.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
-        und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-    ).coalesce(8).localCheckpoint()
-    for _ in range(KCORE_ROUNDS):
+    e = checkpoint(
+        und.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionByName(
+            und.select(F.col("b").alias("src"), F.col("a").alias("dst"))
+        ),
+        STATE_PARTS,
+    )
+
+    def peel(e: DataFrame, _: int) -> DataFrame:
         deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         keep = deg.filter(F.col("deg") >= KCORE_K).select("src")
-        e = (
-            e.join(keep, "src", "left_semi")
-            .join(keep.select(F.col("src").alias("dst")), "dst", "left_semi")
-            .coalesce(8)
-            .localCheckpoint()
+        return e.join(keep, "src", "left_semi").join(
+            keep.select(F.col("src").alias("dst")), "dst", "left_semi"
         )
+
+    e = checkpoint(iterate(e, peel, KCORE_ROUNDS, STATE_PARTS), STATE_PARTS)
     result = (
         e.groupBy("src")
         .agg(F.count(F.lit(1)).cast("long").alias("core_degree"))
@@ -1312,16 +1261,15 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         "src", "dst", F.col("weight").cast("long").alias("wl")
     )
     w_tot = e_raw.agg(F.sum("wl").cast("long").alias("wt"))
-    e = (
+    e = checkpoint(
         e_raw.crossJoin(F.broadcast(w_tot))
         .select(
             "src",
             "dst",
             F.expr(f"wl * {HITS_SCALE} div wt").cast("long").alias("w"),
         )
-        .filter(F.col("w") > 0)
-        .coalesce(8)
-        .localCheckpoint()
+        .filter(F.col("w") > 0),
+        STATE_PARTS,
     )
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -1332,26 +1280,24 @@ def graph_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each normalization references its raw sums TWICE (the total's
     # scalar aggregate AND the per-node division) — the MST/closeness
     # lineage-doubling trap, so every raw-sum table is checkpointed
-    # before fan-out (coalesce(8): ≤n rows).
+    # before fan-out.
     for _ in range(HITS_ITERS):
-        a_raw = (
+        a_raw = checkpoint(
             F.broadcast(e).join(h, e.src == h.node)
             .groupBy("dst")
-            .agg(F.sum(F.col("h") * F.col("w")).cast("long").alias("a_raw"))
-            .coalesce(8)
-            .localCheckpoint()
+            .agg(F.sum(F.col("h") * F.col("w")).cast("long").alias("a_raw")),
+            STATE_PARTS,
         )
         a_tot = a_raw.agg(F.sum("a_raw").cast("long").alias("t"))
         a = a_raw.crossJoin(F.broadcast(a_tot)).select(
             F.col("dst").alias("node"),
             F.expr(f"a_raw * {HITS_SCALE} div t").cast("long").alias("a"),
         )
-        h_raw = (
+        h_raw = checkpoint(
             F.broadcast(e).join(a, e.dst == a.node)
             .groupBy("src")
-            .agg(F.sum(F.col("a") * F.col("w")).cast("long").alias("h_raw"))
-            .coalesce(8)
-            .localCheckpoint()
+            .agg(F.sum(F.col("a") * F.col("w")).cast("long").alias("h_raw")),
+            STATE_PARTS,
         )
         h_tot = h_raw.agg(F.sum("h_raw").cast("long").alias("t"))
         h = h_raw.crossJoin(F.broadcast(h_tot)).select(
@@ -1462,16 +1408,15 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(e.select(F.col("dst").alias("node")))
         .distinct()
     )
-    walks = nodes.select(
-        F.col("node").alias("start_node"),
-        F.explode(F.sequence(F.lit(0), F.lit(WALKS_PER_NODE - 1))).alias(
-            "walk_id"
-        ),
-        F.col("node").alias("node"),
-        # Checkpointed once (|nodes × WALKS_PER_NODE| rows): the
-        # per-step checkpoints make each step its own action, and the
-        # node-distinct exchange would otherwise re-run per step.
-    ).localCheckpoint()
+    walks = checkpoint(
+        nodes.select(
+            F.col("node").alias("start_node"),
+            F.explode(F.sequence(F.lit(0), F.lit(WALKS_PER_NODE - 1))).alias(
+                "walk_id"
+            ),
+            F.col("node").alias("node"),
+        )
+    )
     out = walks.select(
         "start_node", "walk_id", F.lit(0).cast("long").alias("step"), "node"
     )
@@ -1498,16 +1443,9 @@ def graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("start_node", "walk_id", F.col("nxt").alias("node"))
         )
         # ``cur`` is referenced TWICE per step (next hop's candidates
-        # AND the output union), so the unrolled lineage doubles per
-        # step — truncate it each step.  NO coalesce here: Dataset
-        # checkpoints preserve the child's output partitioning, so the
-        # (start_node, walk_id) window exchange stays established once
-        # and every later step window reuses it (plan-locked); a
-        # coalesce would erase that partitioning and re-shuffle per
-        # step.  The walk state is |nodes × WALKS_PER_NODE| rows on
-        # the contracted graph — bounded at any corpus size.
+        # AND the output union), so it is checkpointed each step.
         if step < WALK_STEPS:
-            cur = cur.localCheckpoint()
+            cur = checkpoint(cur)
         out = out.unionByName(
             cur.select(
                 "start_node",

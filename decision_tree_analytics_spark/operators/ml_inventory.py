@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 
 from decision_tree_analytics_spark.ml.features import FEATURES_COL, assemble_features
 from decision_tree_analytics_spark.operators._cache import tether_cache
+from decision_tree_analytics_spark.operators._loop import checkpoint, iterate
 from decision_tree_analytics_spark.sources.tables import load_table
 
 _FEATURES = {"l_quantity": 0, "l_discount": 1, "l_tax": 2}
@@ -1055,7 +1056,9 @@ def ml_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(0.0).alias("s_d1"),
         )
     )
-    for k in range(2, KCENTER_PICKS + 1):
+
+    def pick(S: DataFrame, i: int) -> DataFrame:
+        k = i + 2
         scored = emb.crossJoin(F.broadcast(S))
         dists = [r6(sqdist(F.col("v"), F.col(f"s_v{j}"))) for j in range(1, k)]
         mind = dists[0] if k == 2 else F.least(*dists)
@@ -1064,7 +1067,7 @@ def ml_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.col("d").desc(), F.col("vec_id").asc())
             .limit(1)
         )
-        S = S.crossJoin(
+        return S.crossJoin(
             F.broadcast(
                 nxt.select(
                     F.col("vec_id").alias(f"s_id{k}"),
@@ -1073,13 +1076,10 @@ def ml_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
         )
-        # Truncate the greedy trajectory's lineage per step (all but
-        # the last): the 1-row selected-set table otherwise nests
-        # every prior corpus pass, and Catalyst re-plans the whole
-        # unrolled chain (933 formatted lines) on every run.  Each
-        # step's corpus pass reads the persisted emb either way.
-        if k < KCENTER_PICKS:
-            S = S.coalesce(1).localCheckpoint()
+
+    # The 1-row selected set is checkpointed per step: it otherwise
+    # nests every prior corpus pass (933 formatted lines unrolled).
+    S = iterate(S, pick, KCENTER_PICKS - 1, 1)
     stack_args = ", ".join(
         f"{k}, s_id{k}, s_d{k}" for k in range(1, KCENTER_PICKS + 1)
     )
@@ -1364,7 +1364,8 @@ def ml_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
             f" + sr_{t} * sr_{t} / CAST(nullif(cr_{t}, 0) AS DOUBLE)"
         )
 
-    for m in range(1, GBT_ROUNDS + 1):
+    def boost_round(state: DataFrame, i: int) -> DataFrame:
+        m = i + 1
         carry_cols = list(state.columns)
         j = li.crossJoin(F.broadcast(state)).withColumn(
             "res", F.expr(f"y - ({fhat_sql(m - 1)})")
@@ -1387,7 +1388,7 @@ def ml_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
         pick = lambda val: "COALESCE(" + ", ".join(  # noqa: E731
             f"CASE WHEN sc_{t} = best THEN {val(t)} END" for t in GBT_CANDS
         ) + ")"
-        state = g.select(
+        return g.select(
             *carry_cols,
             F.expr(pick(lambda t: f"{t}.0D")).alias(f"t{m}"),
             F.expr(
@@ -1405,12 +1406,12 @@ def ml_gbt_stumps(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias(f"r{m}"),
         )
-        # Eagerly truncate the 1-row state per round: every DataFrame
-        # op re-analyzes its whole nested tree driver-side, so round
-        # m's ops otherwise pay for rounds 1..m-1 again (analysis was
-        # 3-4x the execution time).  The checkpoint job runs the same
-        # corpus pass the one-shot plan ran inside the final job.
-        state = state.coalesce(1).localCheckpoint()
+
+    # The 1-row state is checkpointed every round, the last one
+    # included: every DataFrame op re-analyzes its whole nested tree
+    # driver-side, so round m's ops otherwise pay for rounds 1..m-1
+    # again (analysis was 3-4x the execution time).
+    state = checkpoint(iterate(state, boost_round, GBT_ROUNDS, 1), 1)
     final = li.crossJoin(F.broadcast(state))
     out_cols = [c for c in state.columns if c != "f0"]
     fh = fhat_sql(GBT_ROUNDS)

@@ -6,13 +6,9 @@ driver's 50-sample window, zero slack).  ``QUERIES`` / ``ORACLES``
 below are REGISTERED into the contract via
 operators.__init__.ALL_MODULES: the five r12 names plus
 mm_video_frame_plan, which filled one of r14's 2 fresh slots
-(together with pending_r14's udf_token_spans).  rel_hodges_lehmann
-stays in ``PENDING_QUERIES`` / ``PENDING_ORACLES`` until a driver
-window ever frees a slot — post-r14 every window is exactly a
-50-name re-verification tail with zero fresh slots (CLAUDE.md window
-math).
+(together with pending_r14's udf_token_spans).
 
-All seven follow the repo's cross-engine determinism rules: integer
+All six follow the repo's cross-engine determinism rules: integer
 ppm/cents/micro arithmetic, rule-3 floor rounding, rule-5 unique
 tie-breaks, rule-8 nullif guards, md5-only hashing.
 """
@@ -716,107 +712,6 @@ SELECT doc_id, fps, gop, n_frames, CAST(k AS BIGINT) AS k,
 FROM k
 """
 
-# ---------------------------------------------------------------------------
-# rel_hodges_lehmann — pseudomedian treatment-effect estimator
-# ---------------------------------------------------------------------------
-
-
-def rel_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hodges-Lehmann shift estimator per event type — the robust
-    companion to rel_did's difference-in-means: the MEDIAN of all
-    pairwise differences between the treatment arm's daily revenue
-    and the control arm's (arms from the content-derived
-    md5(user_id) % 2 split), immune to any single anomalous day.
-
-    Pair generation is the bounded-grid rule (rel_theil_sen): the
-    corpus collapses to the (event_type, arm, day) rollup FIRST —
-    one corpus exchange — and pairs are grid x grid (~31x31 per
-    type at ANY corpus size).  Diffs are exact BIGINT cents and are
-    NEVER divided (they can be negative; the engines disagree on
-    negative integer division) — the median is explicit rank
-    selection ordered by (diff, day_t, day_c) (rules 5/10), and the
-    even-count average of the two middle INTEGER diffs is one IEEE
-    double division by 2 on an exact sum, identical in both
-    engines."""
-    ev = load_table(spark, sf_dir, "events").filter(
-        F.col("value").isNotNull()
-    )
-    daily = (
-        ev.select(
-            "event_type",
-            F.expr(
-                "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8),"
-                " 16, 10) AS BIGINT) % 2"
-            ).alias("arm"),
-            F.expr("(ts div 1000) div 86400000000").alias("day"),
-            F.floor(F.col("value") * 100 + F.lit(0.5)).alias("cents"),
-        )
-        .groupBy("event_type", "arm", "day")
-        .agg(F.sum("cents").cast("long").alias("x"))
-    )
-    t = daily.filter(F.col("arm") == 1).select(
-        F.col("event_type").alias("et"),
-        F.col("day").alias("day_t"),
-        F.col("x").alias("xt"),
-    )
-    c = daily.filter(F.col("arm") == 0).select(
-        F.col("event_type").alias("et"),
-        F.col("day").alias("day_c"),
-        F.col("x").alias("xc"),
-    )
-    pairs = t.join(c, "et").select(
-        "et", "day_t", "day_c", (F.col("xt") - F.col("xc")).alias("diff")
-    )
-    w = Window.partitionBy("et").orderBy("diff", "day_t", "day_c")
-    ranked = pairs.select(
-        "et",
-        "diff",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(Window.partitionBy("et")).alias("np"),
-    )
-    return (
-        ranked.filter(
-            (F.col("rn") == F.expr("(np + 1) div 2"))
-            | (F.col("rn") == F.expr("np div 2 + 1"))
-        )
-        .groupBy(F.col("et").alias("event_type"))
-        .agg(
-            F.min("np").cast("long").alias("n_pairs"),
-            (
-                F.floor(
-                    (F.sum("diff").cast("double") / F.count(F.lit(1))) * 100
-                    + 0.5
-                )
-                / 100
-            ).alias("hl_shift_cents"),
-        )
-    )
-
-
-_HL_ORACLE = """
-WITH daily AS (SELECT event_type,
-    ('0x' || substr(md5(CAST(user_id AS VARCHAR)), 1, 8))::BIGINT % 2
-      AS arm,
-    epoch_us(ts) // 86400000000 AS day,
-    CAST(sum(CAST(floor(value * 100 + 0.5) AS BIGINT)) AS BIGINT) AS x
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2, 3),
-pairs AS (SELECT t.event_type, t.day AS day_t, c.day AS day_c,
-    t.x - c.x AS diff
-  FROM daily t JOIN daily c
-    ON t.event_type = c.event_type AND t.arm = 1 AND c.arm = 0),
-ranked AS (SELECT event_type, diff,
-    row_number() OVER (PARTITION BY event_type
-                       ORDER BY diff, day_t, day_c) AS rn,
-    count(*) OVER (PARTITION BY event_type) AS np
-  FROM pairs)
-SELECT event_type, CAST(min(np) AS BIGINT) AS n_pairs,
-  floor((CAST(sum(diff) AS DOUBLE) / count(*)) * 100 + 0.5) / 100
-    AS hl_shift_cents
-FROM ranked
-WHERE rn = (np + 1) // 2 OR rn = np // 2 + 1
-GROUP BY 1
-"""
-
 # Registered into the contract (operators.__init__.ALL_MODULES):
 # five names in r12, mm_video_frame_plan in r14.
 QUERIES = {
@@ -835,14 +730,4 @@ ORACLES = {
     "rel_did": _DID_ORACLE,
     "rel_mann_kendall": _MANN_KENDALL_ORACLE,
     "mm_video_frame_plan": _VIDEO_ORACLE,
-}
-
-# Held until a driver window ever frees a slot (post-r14 every window
-# is exactly a 50-name re-verification tail with zero fresh slots):
-PENDING_QUERIES = {
-    "rel_hodges_lehmann": rel_hodges_lehmann,
-}
-
-PENDING_ORACLES = {
-    "rel_hodges_lehmann": _HL_ORACLE,
 }

@@ -44,6 +44,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
+from decision_tree_analytics_spark.operators._loop import iterate
 from decision_tree_analytics_spark.operators.similarity import (
     _dot,
     _norm,
@@ -329,7 +330,9 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             _round6(lam * F.col("rel")).alias("mmr"),
         )
     )
-    for step in range(2, MMR_PICKS + 1):
+
+    def greedy_step(sel: DataFrame, i: int) -> DataFrame:
+        step = i + 2
         chosen = sel.select("vec_id")
         remaining = cand_vec.select("vec_id", "rel").join(
             chosen, "vec_id", "left_anti"
@@ -351,14 +354,12 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .limit(1)
             .select(F.lit(step).cast("long").alias("step"), "vec_id", "mmr")
         )
-        sel = sel.unionByName(nxt)
-        # ``sel`` is referenced TWICE per greedy step (the anti-join's
-        # chosen set AND the output union), so the unrolled lineage
-        # doubles per step — a 10k-line formatted plan for 5 rows of
-        # state.  Truncate it per step (all but the last); the
-        # persisted cand_vec/pairs stay the only non-trivial inputs.
-        if step < MMR_PICKS:
-            sel = sel.coalesce(1).localCheckpoint()
+        return sel.unionByName(nxt)
+
+    # ``sel`` is referenced TWICE per greedy step (the anti-join's
+    # chosen set AND the output union), so it is checkpointed per step
+    # — unrolled, it is a 10k-line formatted plan for 5 rows of state.
+    sel = iterate(sel, greedy_step, MMR_PICKS - 1, 1)
     result = sel.orderBy("step")
     return tether_cache(result, cand_vec, pairs)
 

@@ -311,11 +311,6 @@ def sf10_probe() -> None:
         _generate_facts(duckdb.connect(), OUT10, SF10_REPLICAS)
     spark = get_spark(app_name="dta-spark-scale-probe-sf10")
     queries = operators.all_queries()
-    from decision_tree_analytics_spark.operators.pending_r12 import (
-        PENDING_QUERIES as PENDING_R12,
-    )
-
-    queries = {**queries, **PENDING_R12}
     names = SF10_NAMES
     if "--only" in sys.argv:  # probe a subset: --sf10 --only n1,n2
         # (without --full the sf10 corpus is documents/embeddings
@@ -568,15 +563,6 @@ def main() -> None:
 
     spark = get_spark(app_name="dta-spark-scale-probe")
     queries = operators.all_queries()
-    # Pending candidates (operators/pending_r12.py PENDING_QUERIES —
-    # the held rel_hodges_lehmann) are probe-able before they enter
-    # the contract — their sf1 rows land in BASELINE.md at build time
-    # so registration day has nothing left to measure.
-    from decision_tree_analytics_spark.operators.pending_r12 import (
-        PENDING_QUERIES,
-    )
-
-    queries = {**queries, **PENDING_QUERIES}
     names = NAMES
     if "--only" in sys.argv:  # probe a subset: --only name1,name2
         names = sys.argv[sys.argv.index("--only") + 1].split(",")
