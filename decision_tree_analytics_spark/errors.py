@@ -6,6 +6,8 @@ and SparkMLPredictor.java:113-116) so a user of the reference sees
 identical diagnostics.
 """
 
+from __future__ import annotations
+
 
 class ConfigValidationError(ValueError):
     """Configure-time validation failure (reference: IllegalArgumentException)."""
@@ -13,3 +15,11 @@ class ConfigValidationError(ValueError):
 
 class ModelNotFoundError(FileNotFoundError):
     """Predictor model location missing (SparkMLPredictor.java:113-116)."""
+
+    @classmethod
+    def at(cls, path: str) -> ModelNotFoundError:
+        # byte-identical to SparkMLPredictor.java:113-116
+        return cls(
+            "Failed to find model to use for classification."
+            f" Location does not exist: {path}."
+        )

@@ -36,11 +36,7 @@ class DecisionTreePredictorStage:
         self.base_dir = base_dir
         model_path = config.resolve_model_path(base_dir)
         if not os.path.exists(model_path):
-            # byte-identical to SparkMLPredictor.java:113-116
-            raise ModelNotFoundError(
-                "Failed to find model to use for classification."
-                f" Location does not exist: {model_path}."
-            )
+            raise ModelNotFoundError.at(model_path)
         self.model = DecisionTreeRegressionModel.load(model_path)
 
     def transform(self, df: DataFrame) -> DataFrame:

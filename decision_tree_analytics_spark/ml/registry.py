@@ -28,14 +28,6 @@ _VERSION_RE = re.compile(r"^v(\d{4,})$")
 LATEST = "latest"
 
 
-def _missing(path: str) -> ModelNotFoundError:
-    # byte-identical to SparkMLPredictor.java:113-116
-    return ModelNotFoundError(
-        "Failed to find model to use for classification."
-        f" Location does not exist: {path}."
-    )
-
-
 def list_versions(model_dir: str) -> list[str]:
     """Sorted version directory names (``v0001``…) under a model dir."""
     if not os.path.isdir(model_dir):
@@ -54,7 +46,7 @@ def resolve_version(model_dir: str, version: str) -> str:
     if version == LATEST:
         versions = list_versions(model_dir)
         if not versions:
-            raise _missing(os.path.join(model_dir, LATEST))
+            raise ModelNotFoundError.at(os.path.join(model_dir, LATEST))
         return os.path.join(model_dir, versions[-1])
     return os.path.join(model_dir, version)
 
@@ -86,7 +78,7 @@ class ModelRegistry:
     def resolve(self, name: str, version: str = LATEST) -> str:
         path = resolve_version(self.model_dir(name), version)
         if not os.path.exists(path):
-            raise _missing(path)
+            raise ModelNotFoundError.at(path)
         return path
 
     def load(self, name: str, version: str = LATEST) -> DecisionTreeRegressionModel:

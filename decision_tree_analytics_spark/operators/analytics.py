@@ -27,6 +27,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.sources.tables import load_table
 
 US_PER_DAY = 86_400_000_000
@@ -116,7 +117,6 @@ def rel_data_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("o_orderstatus").isin("O", "F", "P"), 0).otherwise(1)
         ).alias("n_bad_status"),
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     checks = a.select(
         F.expr(
             "stack(4,"
@@ -133,7 +133,7 @@ def rel_data_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return checks.select(
-        "check_name", r6(F.col("observed")).alias("observed"), "passed"
+        "check_name", round6(F.col("observed")).alias("observed"), "passed"
     )
 
 
@@ -405,15 +405,14 @@ def rel_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     base_v = conv.filter(F.col("removed") == "base").select(
         F.col("V").alias("baseV")
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     return (
         conv.filter(F.col("removed") != "base")
         .crossJoin(F.broadcast(base_v))
         .select(
             F.col("removed").alias("channel"),
-            r6(F.col("baseV")).alias("base_cv"),
-            r6(F.col("V")).alias("removed_cv"),
-            r6((F.col("baseV") - F.col("V")) / F.col("baseV")).alias(
+            round6(F.col("baseV")).alias("base_cv"),
+            round6(F.col("V")).alias("removed_cv"),
+            round6((F.col("baseV") - F.col("V")) / F.col("baseV")).alias(
                 "removal_effect"
             ),
         )
@@ -468,7 +467,6 @@ def rel_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(~F.col("is_a"), 1).otherwise(0)).cast("double").alias("nb"),
         F.sum(F.when(~F.col("is_a"), F.col("conv")).otherwise(0.0)).alias("kb"),
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     # ANSI-safe denominators: an empty arm (na/nb = 0) or a saturated
     # pooled rate (pool ∈ {0, 1} ⇒ sqrt = 0) yields NULL on both
     # engines instead of a divide-by-zero error.
@@ -486,9 +484,9 @@ def rel_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("ka").cast("long").alias("conv_a"),
         F.col("nb").cast("long").alias("n_b"),
         F.col("kb").cast("long").alias("conv_b"),
-        r6(pa).alias("rate_a"),
-        r6(pb).alias("rate_b"),
-        r6(z).alias("z_score"),
+        round6(pa).alias("rate_a"),
+        round6(pb).alias("rate_b"),
+        round6(z).alias("z_score"),
     )
 
 
@@ -514,16 +512,15 @@ def rel_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
         t.alias("t"),
         F.lead(t).over(w).alias("t_next"),
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     dur = F.max("t") - F.min("t")
     return seg.groupBy("user_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         dur.cast("long").alias("duration_us"),
-        r6(
+        round6(
             F.sum(F.col("value") * (F.col("t_next") - F.col("t")))
             / F.nullif(dur.cast("double"), F.lit(0.0))
         ).alias("twap"),
-        r6(F.avg("value")).alias("plain_avg"),
+        round6(F.avg("value")).alias("plain_avg"),
     )
 
 
@@ -808,14 +805,13 @@ def rel_pit_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("ts_us")
         .rangeBetween(-PIT_WINDOW_US, -1)
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     feat = ev.select(
         "event_id",
         "user_id",
         "event_type",
         "ts_us",
         F.count(F.lit(1)).over(w_life).cast("long").alias("n_prior"),
-        r6(F.coalesce(F.sum("value").over(w_life), F.lit(0.0))).alias(
+        round6(F.coalesce(F.sum("value").over(w_life), F.lit(0.0))).alias(
             "sum_prior"
         ),
         F.count(F.lit(1)).over(w_7d).cast("long").alias("n_7d"),

@@ -26,7 +26,7 @@ delete), so the query exercises all four merge outcomes at every SF.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.sources.tables import load_table
@@ -424,8 +424,6 @@ def cdc_changelog_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-contained per key.  Reference parity: the reference's
     row-level keep-first contract (SURVEY Q16/Q24) generalized to
     keep-LAST with op semantics."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events").select(
         "user_id",
         "ts",
@@ -514,8 +512,6 @@ def snap_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         (F.sum(F.length("props") + F.lit(32))).cast("long").alias("bytes"),
     )
-    from pyspark.sql import Window
-
     w = Window.partitionBy("event_type").orderBy("day").rowsBetween(
         Window.unboundedPreceding, 0
     )
@@ -745,8 +741,6 @@ def snap_overlap_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("n_closes"),
         F.sum("delta").cast("long").alias("net"),
     )
-    from pyspark.sql import Window
-
     w = (
         Window.partitionBy("layout")
         .orderBy("day")
@@ -776,3 +770,151 @@ SELECT layout, day, n_opens, n_closes,
     ROWS UNBOUNDED PRECEDING) AS BIGINT) AS depth
 FROM g
 """
+
+
+# ---------------------------------------------------------------------------
+# snap_vacuum_plan — snapshot retention / vacuum planner
+# ---------------------------------------------------------------------------
+
+VACUUM_GENS = 6  # modeled snapshot generations 0..5
+VACUUM_KEEP = 2  # retention policy: keep the last 2 snapshots live
+VACUUM_ROW_BYTES = 120  # modeled bytes per data row
+
+
+def snap_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Snapshot retention / VACUUM planner — the expiry half of the
+    table-maintenance story next to snap_compaction_plan: given a
+    multi-generation reference manifest (which data files each
+    snapshot references), apply a keep-last-K policy and report, per
+    generation, the snapshot's referenced-file footprint and what
+    expiring it frees — files whose LAST reference is that
+    generation, their bytes, and the cumulative bytes a vacuum up to
+    that generation reclaims.  Files still referenced by a live
+    snapshot are never reclaimable (the invariant the test plants).
+
+    The manifest models Iceberg/Delta semantics over the clustered
+    orders layout (one corpus pass, shared with snap_skipping_audit's
+    `_order_layout_manifest`): each file is born in generation
+    md5(file_id) % 4 and stays referenced for 1 + (md5' % 3)
+    generations (capped at {VACUUM_GENS - 1}), so reference sets
+    genuinely grow and shrink across snapshots.  Scale: everything
+    past the one corpus-sized manifest rollup runs on the exploded
+    (generation, file) reference table — file-count x GENS rows of
+    METADATA, like a real table format's manifest list; the running
+    sum orders the <= {VACUUM_GENS}-row generation grid (rule 5:
+    gen is unique).  The reference table feeds TWO aggregation
+    branches (per-gen footprint, per-file last reference), so it is
+    persisted and tethered — Catalyst does not reuse an exchange
+    across branches of one uncached lineage (the BM25 lesson), and
+    without the persist the corpus scan would run twice
+    (plan-locked in tests/test_pending_r12.py)."""
+    man = _order_layout_manifest(spark, sf_dir).filter(
+        F.col("layout") == "clustered"
+    )
+    files = man.select(
+        "file_id",
+        (F.col("n_rows") * VACUUM_ROW_BYTES).cast("long").alias("bytes"),
+        F.expr(
+            "CAST(conv(substring(md5(CAST(file_id AS STRING)), 1, 8),"
+            " 16, 10) AS BIGINT) % 4"
+        ).alias("born"),
+        F.expr(
+            "CAST(conv(substring(md5(CAST(file_id AS STRING)), 9, 8),"
+            " 16, 10) AS BIGINT) % 3"
+        ).alias("extra"),
+    ).select(
+        "file_id",
+        "bytes",
+        "born",
+        F.least(
+            F.col("born") + F.col("extra") + 1, F.lit(VACUUM_GENS - 1)
+        ).alias("last_gen"),
+    )
+    refs = files.select(
+        "file_id",
+        "bytes",
+        F.explode(F.sequence(F.col("born"), F.col("last_gen"))).alias("gen"),
+    ).persist()
+    footprint = refs.groupBy("gen").agg(
+        F.count(F.lit(1)).cast("long").alias("n_files_referenced"),
+        F.sum("bytes").cast("long").alias("bytes_referenced"),
+    )
+    last = refs.groupBy("file_id", "bytes").agg(
+        F.max("gen").cast("long").alias("last_ref")
+    )
+    freed = last.groupBy(F.col("last_ref").alias("gen")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_files_last_ref"),
+        F.sum("bytes").cast("long").alias("bytes_last_ref"),
+    )
+    live_floor = VACUUM_GENS - VACUUM_KEEP  # gens >= this stay live
+    joined = footprint.join(freed, "gen", "left").select(
+        "gen",
+        "n_files_referenced",
+        "bytes_referenced",
+        F.coalesce("n_files_last_ref", F.lit(0))
+        .cast("long")
+        .alias("n_files_last_ref"),
+        F.coalesce("bytes_last_ref", F.lit(0))
+        .cast("long")
+        .alias("bytes_last_ref"),
+        F.when(F.col("gen") < live_floor, 1)
+        .otherwise(0)
+        .cast("long")
+        .alias("vacuumable"),
+    )
+    w = Window.orderBy("gen").rowsBetween(Window.unboundedPreceding, 0)
+    out = joined.select(
+        "*",
+        F.sum(
+            F.when(F.col("vacuumable") == 1, F.col("bytes_last_ref")).otherwise(
+                0
+            )
+        )
+        .over(w)
+        .cast("long")
+        .alias("cum_bytes_reclaimed"),
+    )
+    return tether_cache(out, refs)
+
+
+# Composes _MANIFEST_CTE verbatim (the Spark side goes through
+# _order_layout_manifest), so a CLUSTER_DAYS tune can never drift
+# the two engines apart.
+_VACUUM_ORACLE = f"""
+WITH {_MANIFEST_CTE},
+files AS (SELECT file_id, n_rows * {VACUUM_ROW_BYTES} AS bytes,
+    ('0x' || substr(md5(CAST(file_id AS VARCHAR)), 1, 8))::BIGINT % 4
+      AS born,
+    ('0x' || substr(md5(CAST(file_id AS VARCHAR)), 9, 8))::BIGINT % 3
+      AS extra
+  FROM man WHERE layout = 'clustered'),
+spans AS (SELECT file_id, bytes, born,
+    least(born + extra + 1, {VACUUM_GENS - 1}) AS last_gen FROM files),
+refs AS MATERIALIZED (SELECT file_id, bytes,
+    unnest(range(born, last_gen + 1)) AS gen FROM spans),
+footprint AS (SELECT gen, CAST(count(*) AS BIGINT) AS n_files_referenced,
+    CAST(sum(bytes) AS BIGINT) AS bytes_referenced
+  FROM refs GROUP BY 1),
+last AS (SELECT file_id, bytes, CAST(max(gen) AS BIGINT) AS last_ref
+  FROM refs GROUP BY 1, 2),
+freed AS (SELECT last_ref AS gen, CAST(count(*) AS BIGINT)
+      AS n_files_last_ref,
+    CAST(sum(bytes) AS BIGINT) AS bytes_last_ref
+  FROM last GROUP BY 1),
+joined AS (SELECT CAST(f.gen AS BIGINT) AS gen, f.n_files_referenced,
+    f.bytes_referenced,
+    CAST(coalesce(fr.n_files_last_ref, 0) AS BIGINT) AS n_files_last_ref,
+    CAST(coalesce(fr.bytes_last_ref, 0) AS BIGINT) AS bytes_last_ref,
+    CAST(CASE WHEN f.gen < {VACUUM_GENS - VACUUM_KEEP} THEN 1 ELSE 0 END
+      AS BIGINT) AS vacuumable
+  FROM footprint f LEFT JOIN freed fr ON f.gen = fr.gen)
+SELECT *,
+  CAST(sum(CASE WHEN vacuumable = 1 THEN bytes_last_ref ELSE 0 END)
+    OVER (ORDER BY gen ROWS UNBOUNDED PRECEDING) AS BIGINT)
+    AS cum_bytes_reclaimed
+FROM joined
+"""
+
+
+QUERIES["snap_vacuum_plan"] = snap_vacuum_plan
+ORACLES["snap_vacuum_plan"] = _VACUUM_ORACLE

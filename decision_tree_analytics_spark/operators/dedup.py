@@ -30,6 +30,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._loop import checkpoint
+from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.sources.tables import (
     load_table,
     parquet_footer_tag,
@@ -402,7 +403,6 @@ def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from decision_tree_analytics_spark.operators.similarity import (
         _dot,
         _norm,
-        _round6,
         _vecd,
         sim_ann_buckets,
     )
@@ -418,7 +418,7 @@ def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         pairs.select(
             F.col("id_a").cast("long").alias("vec_a"),
             F.col("id_b").cast("long").alias("vec_b"),
-            _round6(
+            round6(
                 _dot(F.col("va"), F.col("vb"))
                 / (_norm(F.col("va")) * _norm(F.col("vb")))
             ).alias("cos_sim"),
@@ -1345,7 +1345,6 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_a", "doc_b", F.lit(1).alias("c")
     )
     j = truth.join(cand, ["doc_a", "doc_b"], "full_outer")
-    r6 = lambda col: F.floor(col * 1e6 + 0.5) / 1e6  # noqa: E731
     agg = j.agg(
         F.count("t").cast("long").alias("n_truth"),
         F.count("c").cast("long").alias("n_candidates"),
@@ -1363,10 +1362,10 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_hit",
         "n_missed",
         "n_extra",
-        r6(F.col("n_hit") / F.nullif(F.col("n_truth"), F.lit(0))).alias(
+        round6(F.col("n_hit") / F.nullif(F.col("n_truth"), F.lit(0))).alias(
             "recall"
         ),
-        r6(
+        round6(
             F.col("n_hit") / F.nullif(F.col("n_candidates"), F.lit(0))
         ).alias("cand_precision"),
     )
@@ -1454,7 +1453,6 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_store = store.agg(F.count(F.lit(1)).cast("long").alias("n_store"))
     bits_set = bits.agg(F.count(F.lit(1)).cast("long").alias("bits_set"))
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     agg = flags.agg(
         F.count(F.lit(1)).cast("long").alias("n_batch"),
         F.sum("bloom_pos").cast("long").alias("n_bloom_pos"),
@@ -1470,11 +1468,11 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_store",
             "n_batch",
             "bits_set",
-            r6(F.col("bits_set") / float(BLOOM_BITS)).alias("fill_rate"),
+            round6(F.col("bits_set") / float(BLOOM_BITS)).alias("fill_rate"),
             "n_bloom_pos",
             "n_true_dup",
             "n_false_pos",
-            r6(
+            round6(
                 F.col("n_false_pos")
                 / F.nullif(F.col("n_batch") - F.col("n_true_dup"), F.lit(0))
             ).alias("fp_rate"),

@@ -14,11 +14,12 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.ml.functions import vector_to_array
 from pyspark.ml.regression import DecisionTreeRegressor
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.ml.features import FEATURES_COL, assemble_features
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._loop import checkpoint, iterate
+from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.sources.tables import load_table
 
 _FEATURES = {"l_quantity": 0, "l_discount": 1, "l_tax": 2}
@@ -114,7 +115,6 @@ def ml_feature_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.col(f).cast("double").alias(f) for f in FI_GRIDS],
         F.col("l_extendedprice").alias("y"),
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     aggs = [
         F.count(F.lit(1)).alias("n"),
         F.sum("y").alias("s"),
@@ -136,7 +136,7 @@ def ml_feature_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # from BIGINT overflow (raw SS ~1e13 would push the 1e-6 round
     # past 2^63); the 1/n factor cancels in the importance ratio.
     def score(f: str, i: int) -> Column:
-        return r6(
+        return round6(
             (
                 F.col(f"sl_{f}_{i}") * F.col(f"sl_{f}_{i}")
                 / F.nullif(F.col(f"cl_{f}_{i}"), F.lit(0)).cast("double")
@@ -146,7 +146,7 @@ def ml_feature_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n").cast("double")
         )
 
-    root = r6(
+    root = round6(
         F.col("s") * F.col("s")
         / F.col("n").cast("double")
         / F.col("n").cast("double")
@@ -160,7 +160,7 @@ def ml_feature_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for i, t in enumerate(grid)
             ]
         )
-        per_feature[f] = (thr, r6(best - root))
+        per_feature[f] = (thr, round6(best - root))
     wide = g.select(
         *[v[0].alias(f"bt_{f}") for f, v in per_feature.items()],
         *[v[1].alias(f"gain_{f}") for f, v in per_feature.items()],
@@ -174,7 +174,7 @@ def ml_feature_importance(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide = wide.select(
         "*",
         *[
-            r6(F.col(f"gain_{f}") / total).alias(f"imp_{f}")
+            round6(F.col(f"gain_{f}") / total).alias(f"imp_{f}")
             for f in FI_GRIDS
         ],
     )
@@ -329,14 +329,14 @@ def ml_baseline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.avg("y").alias("yhat"))
     )
     test = b.filter(F.col("bucket") == 9).join(F.broadcast(means), "l_returnflag")
-    r6 = lambda c: F.floor(c * 1e2 + 0.5) / 1e2  # noqa: E731  (1e-2: ~1e4 magnitudes)
+    r2 = lambda c: F.floor(c * 1e2 + 0.5) / 1e2  # noqa: E731  (1e-2: ~1e4 magnitudes)
     ybar = F.avg("y")
     sse = F.sum((F.col("y") - F.col("yhat")) ** 2)
     sst = F.sum(F.col("y") ** 2) - F.count(F.lit(1)) * ybar * ybar
     return test.agg(
         F.count(F.lit(1)).cast("long").alias("n_test"),
-        r6(F.sqrt(sse / F.count(F.lit(1)))).alias("rmse"),
-        r6(F.avg(F.abs(F.col("y") - F.col("yhat")))).alias("mae"),
+        r2(F.sqrt(sse / F.count(F.lit(1)))).alias("rmse"),
+        r2(F.avg(F.abs(F.col("y") - F.col("yhat")))).alias("mae"),
         (F.floor((F.lit(1.0) - sse / sst) * 1e6 + 0.5) / 1e6).alias("r2"),
     )
 
@@ -356,8 +356,6 @@ def ml_cv_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     val 7-8, test 9) — no engine-seeded randomness.  Scale: each fit
     is a bounded-group aggregate broadcast back onto one scan of its
     split; the selection window runs over 3 rows."""
-    from pyspark.sql import Window
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", "l_linestatus",
         F.col("l_extendedprice").alias("y"),
@@ -516,11 +514,10 @@ def ml_logreg_gd(spark: SparkSession, sf_dir: str) -> DataFrame:
     final = feats.crossJoin(F.broadcast(w)).withColumn(
         "p", 1.0 / (1.0 + F.exp(-margin))
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     result = final.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        *[r6(F.max(f"w{j}")).alias(f"w{j}") for j in range(5)],
-        r6(
+        *[round6(F.max(f"w{j}")).alias(f"w{j}") for j in range(5)],
+        round6(
             F.avg(
                 -(
                     F.col("y") * F.log("p")
@@ -598,7 +595,6 @@ def ml_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cv")
         )
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     dist = F.aggregate(
         F.zip_with("v", "cv", lambda a, b: (a - b) * (a - b)),
         F.lit(0.0),
@@ -606,7 +602,7 @@ def ml_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = emb.crossJoin(
         F.broadcast(cent.select(F.col("label").alias("c_label"), "cv"))
-    ).select("vec_id", "c_label", r6(dist).alias("dist"))
+    ).select("vec_id", "c_label", round6(dist).alias("dist"))
     best = scored.groupBy("vec_id").agg(
         F.min(F.struct("dist", "c_label")).alias("m")
     )
@@ -615,7 +611,7 @@ def ml_centroid_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("centroid")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_assigned"),
-            r6(F.avg("d")).alias("avg_dist"),
+            round6(F.avg("d")).alias("avg_dist"),
         )
     )
 
@@ -668,8 +664,6 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     here is the hash-verified TRAINING/SCORING pipeline, not fixture
     separability (tests/test_ml_pipeline.py pins the structural
     invariants)."""
-    from pyspark.sql import Window
-
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "lang",
@@ -711,7 +705,6 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("lp"),
         )
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     # Score occurrences directly against the broadcast model — no
     # per-(doc, tok) pre-count exchange (VERDICT r3 item 4): the
     # broadcast join fans out map-side and the partial sum collapses
@@ -734,7 +727,7 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang_true",
         "lang_pred",
-        r6(F.col("lprior") + F.coalesce(F.col("ll"), F.lit(0.0))).alias("score"),
+        round6(F.col("lprior") + F.coalesce(F.col("ll"), F.lit(0.0))).alias("score"),
     )
     w = Window.partitionBy("doc_id").orderBy(
         F.col("score").desc(), F.col("lang_pred").asc()
@@ -801,12 +794,9 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors), because 16 probe groups would otherwise serialize the
     corpus through 16 tasks.  Similarities rounded 1e-6 before
     ranking; votes are a ≤ probes×k-row aggregate."""
-    from pyspark.sql import Window
-
     from decision_tree_analytics_spark.operators.similarity import (
         _dot,
         _norm,
-        _round6,
         _vecd,
     )
 
@@ -827,7 +817,7 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label_true",
         "vec_id",
         F.col("label").alias("nb_label"),
-        _round6(
+        round6(
             _dot(F.col("pv"), F.col("v")) / (_norm(F.col("pv")) * _norm(F.col("v")))
         ).alias("sim"),
         F.pmod("vec_id", F.lit(_KNN_SALTS)).alias("salt"),
@@ -952,17 +942,16 @@ def ml_ridge_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
         (det3(a00, b0, a02, a01, b1, a12, a02, b2, a22) / det).alias("b1"),
         (det3(a00, a01, b0, a01, a11, b1, a02, a12, b2) / det).alias("b2"),
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     resid = F.col("y") - (
         F.col("b0") + F.col("b1") * F.col("x1") + F.col("b2") * F.col("x2")
     )
     scored = feats.crossJoin(F.broadcast(beta))
     out = scored.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
-        r6(F.max("b0")).alias("b0"),
-        r6(F.max("b1")).alias("b1"),
-        r6(F.max("b2")).alias("b2"),
-        r6(F.sqrt(F.avg(resid * resid))).alias("train_rmse"),
+        round6(F.max("b0")).alias("b0"),
+        round6(F.max("b1")).alias("b1"),
+        round6(F.max("b2")).alias("b2"),
+        round6(F.sqrt(F.avg(resid * resid))).alias("train_rmse"),
     )
     return tether_cache(out, feats)
 
@@ -1032,7 +1021,6 @@ def ml_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()  # greedy steps re-scan the corpus k times — read cache,
         # not parquet, for steps 2..k (tether-released below)
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
 
     def sqdist(a, b):
         # HOF form kept deliberately: an unrolled 64-term codegen
@@ -1060,7 +1048,7 @@ def ml_kcenter_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     def pick(S: DataFrame, i: int) -> DataFrame:
         k = i + 2
         scored = emb.crossJoin(F.broadcast(S))
-        dists = [r6(sqdist(F.col("v"), F.col(f"s_v{j}"))) for j in range(1, k)]
+        dists = [round6(sqdist(F.col("v"), F.col(f"s_v{j}"))) for j in range(1, k)]
         mind = dists[0] if k == 2 else F.least(*dists)
         nxt = (
             scored.select("vec_id", "v", mind.alias("d"))
@@ -1211,7 +1199,6 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     ]
     m = e.agg(*aggs)
     r9 = lambda c: F.floor(c * 1e9 + 0.5) / 1e9  # noqa: E731
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     ccols = [f"c{j}_{k}" for j in range(n) for k in range(n)]
     cov = m.select(
         "cnt",
@@ -1250,8 +1237,8 @@ def ml_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     lam = sum(lam_terms[1:], lam_terms[0])
     return cur.select(
         F.col("cnt").cast("long").alias("n"),
-        r6(lam).alias("eigenvalue"),
-        *[r6(F.col(f"v{j}")).alias(f"l{j}") for j in range(n)],
+        round6(lam).alias("eigenvalue"),
+        *[round6(F.col(f"v{j}")).alias(f"l{j}") for j in range(n)],
     )
 
 
@@ -1510,8 +1497,6 @@ def ml_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the numerator stays INTEGER (doubled to absorb the ½-tie
     term) until the single final division — no float rank sums to
     drift between engines.  Output: n_pos, n_neg, auc, gini."""
-    from pyspark.sql import Window
-
     li = load_table(spark, sf_dir, "lineitem").select(
         # rule-3 idiom: floor on BOTH sides — cast("long") truncates in
         # Spark while DuckDB CAST(.. AS BIGINT) rounds-to-nearest, and a
@@ -1530,7 +1515,6 @@ def ml_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nn",
         F.coalesce(F.sum("nn").over(w), F.lit(0)).alias("nn_below"),
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     agg = x.agg(
         F.sum("np").cast("long").alias("n_pos"),
         F.sum("nn").cast("long").alias("n_neg"),
@@ -1542,8 +1526,8 @@ def ml_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "n_pos",
         "n_neg",
-        r6(auc).alias("auc"),
-        r6(2 * auc - 1).alias("gini"),
+        round6(auc).alias("auc"),
+        round6(2 * auc - 1).alias("gini"),
     )
 
 
@@ -1583,8 +1567,6 @@ def ml_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     contribute NULL terms via nullif (skipped by sum) identically in
     both engines.  Per-bin rows plus the running total so the
     readout carries both the diagnosis and the drill-down."""
-    from pyspark.sql import Window
-
     li = load_table(spark, sf_dir, "lineitem").select(
         # discount spans [0, 0.1] — ×100 spreads it over the 10 bands
         F.least(F.floor(F.col("l_discount") * 100), F.lit(PSI_BINS - 1))
@@ -1610,19 +1592,18 @@ def ml_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     # where Spark's F.log(0) returns NULL but DuckDB's ln(0) RAISES
     # Out of Range — an engine-divergent failure mode (ADVICE r4).
     term = (p - q) * F.log(F.nullif(p, F.lit(0.0)) / F.nullif(q, F.lit(0.0)))
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     x = g.select(
         "bin",
         F.col("n_ref").cast("long").alias("n_ref"),
         F.col("n_live").cast("long").alias("n_live"),
-        r6(p).alias("p_ref"),
-        r6(q).alias("q_live"),
-        r6(term).alias("psi_term"),
+        round6(p).alias("p_ref"),
+        round6(q).alias("q_live"),
+        round6(term).alias("psi_term"),
     )
     # total = sum of the ROUNDED per-bin terms: summing the raw terms
     # in engine-dependent order rounds differently at the boundary.
     return x.withColumn(
-        "psi_total", r6(F.sum(F.col("psi_term")).over(Window.partitionBy()))
+        "psi_total", round6(F.sum(F.col("psi_term")).over(Window.partitionBy()))
     )
 
 
@@ -1664,8 +1645,6 @@ def ml_lift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     ntile would global-sort the corpus; at 100 TB you'd cut on
     sketch quantiles instead — same 10-row result shape).  The
     cumulative window runs over the 10-row band grid."""
-    from pyspark.sql import Window
-
     li = load_table(spark, sf_dir, "lineitem").select(
         F.least(F.floor(F.col("l_discount") * 100), F.lit(9))
         .cast("long")
@@ -1679,7 +1658,6 @@ def ml_lift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         Window.unboundedPreceding, 0
     )
     wt = Window.partitionBy()
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     cum_n = F.sum("n").over(w)
     cum_pos = F.sum("n_pos").over(w)
     gain = cum_pos / F.sum("n_pos").over(wt)
@@ -1690,8 +1668,8 @@ def ml_lift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_pos").cast("long").alias("n_pos"),
         cum_n.cast("long").alias("cum_n"),
         cum_pos.cast("long").alias("cum_pos"),
-        r6(gain).alias("gain"),
-        r6(gain / pop).alias("lift"),  # pop > 0: every emitted band has rows
+        round6(gain).alias("gain"),
+        round6(gain / pop).alias("lift"),  # pop > 0: every emitted band has rows
     )
 
 
@@ -1736,8 +1714,6 @@ def ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the two final divisions, rounded 1e-6.  enc_raw is NULL (via
     nullif) when a category lives entirely inside one fold; the
     smoothed encoding is always defined."""
-    from pyspark.sql import Window
-
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("category"),
         (
@@ -1756,7 +1732,6 @@ def ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wcat = Window.partitionBy("category")
     wall = Window.partitionBy()
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     s_cat = F.sum("s").over(wcat)
     n_cat = F.sum("n").over(wcat)
     mu = F.sum("s").over(wall) / F.sum("n").over(wall).cast("double")
@@ -1767,10 +1742,10 @@ def ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fold",
         F.col("n").alias("n_fold"),
         n_oof.cast("long").alias("n_oof"),
-        r6(s_oof / F.nullif(n_oof, F.lit(0)).cast("double") / 100).alias(
+        round6(s_oof / F.nullif(n_oof, F.lit(0)).cast("double") / 100).alias(
             "enc_raw"
         ),
-        r6(
+        round6(
             (s_oof + TE_SMOOTH * mu) / (n_oof + TE_SMOOTH).cast("double") / 100
         ).alias("enc_smooth"),
     )
@@ -1842,7 +1817,6 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     tr = F.col("bucket") < 7
     m = li.agg(
         F.sum(F.when(tr, 1).otherwise(0)).cast("long").alias("n"),
@@ -1857,8 +1831,8 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # intercept from the SAME rounded slope (one expression tree)
     params = m.select(
         F.col("n").alias("n_train"),
-        r6(slope).alias("b"),
-        r6((F.col("sy") - r6(slope) * F.col("sx")) / F.col("n").cast("double"))
+        round6(slope).alias("b"),
+        round6((F.col("sy") - round6(slope) * F.col("sx")) / F.col("n").cast("double"))
         .alias("a"),
     )
     scored = li.crossJoin(F.broadcast(params)).withColumn(
@@ -1871,7 +1845,7 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("bucket").isin(7, 8), 1).otherwise(0))
         .cast("long")
         .alias("n_cal"),
-        r6(
+        round6(
             F.percentile(
                 F.when(F.col("bucket").isin(7, 8), F.col("absres")),
                 CONF_ALPHA_P,
@@ -1885,7 +1859,7 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_test"),
         F.max("n_cal").cast("long").alias("n_cal"),
         F.max("q90").alias("q"),
-        r6(
+        round6(
             F.avg((F.col("absres") <= F.col("q90")).cast("double"))
         ).alias("coverage"),
     )
@@ -1897,7 +1871,7 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("b").alias("slope"),
         F.col("q").alias("q90"),
         "coverage",
-        r6(2 * F.col("q")).alias("mean_width"),
+        round6(2 * F.col("q")).alias("mean_width"),
     )
     return tether_cache(result, li)
 
@@ -1997,18 +1971,17 @@ def ml_shap_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("s1") / F.col("n")).alias("xm1"),
         (F.col("s2") / F.col("n")).alias("xm2"),
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     probes = feats.filter(F.col("vec_id") % SHAP_PROBE_MOD == 0)
     out = probes.crossJoin(F.broadcast(beta)).select(
         "vec_id",
-        r6(
+        round6(
             F.col("b0") + F.col("b1") * F.col("x1") + F.col("b2") * F.col("x2")
         ).alias("pred"),
-        r6(
+        round6(
             F.col("b0") + F.col("b1") * F.col("xm1") + F.col("b2") * F.col("xm2")
         ).alias("base"),
-        r6(F.col("b1") * (F.col("x1") - F.col("xm1"))).alias("phi_x1"),
-        r6(F.col("b2") * (F.col("x2") - F.col("xm2"))).alias("phi_x2"),
+        round6(F.col("b1") * (F.col("x1") - F.col("xm1"))).alias("phi_x1"),
+        round6(F.col("b2") * (F.col("x2") - F.col("xm2"))).alias("phi_x2"),
     )
     return tether_cache(out, feats)
 
@@ -2049,3 +2022,111 @@ FROM f CROSS JOIN beta WHERE vec_id % {SHAP_PROBE_MOD} = 0
 
 QUERIES["ml_shap_linear"] = ml_shap_linear
 ORACLES["ml_shap_linear"] = _shap_oracle()
+
+
+# ---------------------------------------------------------------------------
+# ml_quantile_reg — pinball-loss quantile regression over a fixed grid
+# ---------------------------------------------------------------------------
+
+QREG_INTERCEPTS = [0, 2500, 5000, 7500, 10000]  # cents
+QREG_SLOPES = [-200, -100, 0, 100, 200]  # cents per hour-of-day
+QREG_COMBOS = [(a, b) for a in QREG_INTERCEPTS for b in QREG_SLOPES]
+# q = 0.9, losses scaled x10 so both branches stay integer:
+# loss10 = 9*(y - yhat) if y > yhat else (yhat - y).
+
+
+def ml_quantile_reg(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quantile regression (q = 0.9) of event value on hour-of-day
+    via exact pinball-loss grid search — the tail-latency/tail-spend
+    modeling pass mean-OLS (rel_rolling_ols, ml_ridge_normal_eq)
+    cannot do.  Every (intercept, slope) candidate's total pinball
+    loss is ONE conditional aggregate, so the whole 25-point grid is
+    a single corpus pass producing 25 columns on the |event_type|
+    grid, then a stack + rank picks the argmin — the
+    ml_threshold_tuning shape: grid-size WINDOW rows, never
+    grid-size corpus scans (and never a 25x explode of the fact
+    table).
+
+    Determinism: y is rule-3 integer cents, yhat = a + b*h is a
+    BIGINT literal expression, both CASE branches are non-negative
+    BIGINTs, and there is NO division anywhere; the argmin rank
+    breaks ties (loss10, a, b) — unique by construction (rule 5).
+    Sums stay under 2^63 until ~2e13 rows per event_type (9 *
+    max-cent-residual ~= 4.5e5 per row).  Scale: map-side-combinable
+    single pass; the window runs on |event_type| x 25 rows."""
+    ev = load_table(spark, sf_dir, "events").filter(
+        F.col("value").isNotNull()
+    )
+    base = ev.select(
+        "event_type",
+        F.floor(F.col("value") * 100 + F.lit(0.5)).alias("y"),
+        F.expr("((ts div 1000) div 3600000000) % 24").alias("h"),
+    )
+    sums = []
+    for i, (a, b) in enumerate(QREG_COMBOS):
+        yhat = F.lit(a) + F.lit(b) * F.col("h")
+        sums.append(
+            F.sum(
+                F.when(F.col("y") > yhat, 9 * (F.col("y") - yhat)).otherwise(
+                    yhat - F.col("y")
+                )
+            )
+            .cast("long")
+            .alias(f"l_{i}")
+        )
+    agg = base.groupBy("event_type").agg(*sums)
+    stack_args = ", ".join(
+        f"{a}L, {b}L, l_{i}" for i, (a, b) in enumerate(QREG_COMBOS)
+    )
+    grid = agg.selectExpr(
+        "event_type",
+        f"stack({len(QREG_COMBOS)}, {stack_args})"
+        " AS (intercept_cents, slope_cents, loss10)",
+    )
+    w = Window.partitionBy("event_type").orderBy(
+        "loss10", "intercept_cents", "slope_cents"
+    )
+    return (
+        grid.select("*", F.row_number().over(w).alias("rn"))
+        .filter(F.col("rn") == 1)
+        .select(
+            "event_type",
+            F.col("intercept_cents").cast("long").alias("intercept_cents"),
+            F.col("slope_cents").cast("long").alias("slope_cents"),
+            F.col("loss10").cast("long").alias("loss10"),
+        )
+    )
+
+
+def _qreg_oracle() -> str:
+    sums = ",\n    ".join(
+        f"CAST(sum(CASE WHEN y > {a} + {b} * h"
+        f" THEN 9 * (y - ({a} + {b} * h))"
+        f" ELSE ({a} + {b} * h) - y END) AS BIGINT) AS l_{i}"
+        for i, (a, b) in enumerate(QREG_COMBOS)
+    )
+    arms = "\n  UNION ALL ".join(
+        f"SELECT event_type, CAST({a} AS BIGINT) AS intercept_cents,"
+        f" CAST({b} AS BIGINT) AS slope_cents, l_{i} AS loss10 FROM agg"
+        for i, (a, b) in enumerate(QREG_COMBOS)
+    )
+    return f"""
+WITH base AS (SELECT event_type,
+    CAST(floor(value * 100 + 0.5) AS BIGINT) AS y,
+    (epoch_us(ts) // 3600000000) % 24 AS h
+  FROM events WHERE value IS NOT NULL),
+agg AS MATERIALIZED (SELECT event_type,
+    {sums}
+  FROM base GROUP BY 1),
+grid AS ({arms}),
+ranked AS (SELECT *,
+    row_number() OVER (PARTITION BY event_type
+      ORDER BY loss10, intercept_cents, slope_cents) AS rn
+  FROM grid)
+SELECT event_type, intercept_cents, slope_cents, loss10
+FROM ranked WHERE rn = 1
+"""
+
+
+QUERIES["ml_quantile_reg"] = ml_quantile_reg
+ORACLES["ml_quantile_reg"] = _qreg_oracle()

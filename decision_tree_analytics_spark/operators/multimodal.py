@@ -681,3 +681,101 @@ SELECT doc_id, sr, CAST(chunk_id AS BIGINT) AS chunk_id,
     THEN 1 ELSE 0 END AS BIGINT) AS is_last
 FROM c
 """
+
+
+# ---------------------------------------------------------------------------
+# mm_video_frame_plan — keyframe/GOP extraction manifest
+# ---------------------------------------------------------------------------
+
+VIDEO_HEADER_BYTES = 512  # modeled container header
+
+
+def mm_video_frame_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Video keyframe-extraction work-plan — mm_audio_chunk_plan's
+    shape on the GOP axis: per clip (synthetic metadata derived from
+    doc_id: fps 24/25/30, duration 2-20 s, two resolution tiers, GOP
+    12 or 15 frames), one row per GOP with the keyframe index, its
+    integer-µs timestamp, the exact byte offset into the modeled
+    stream (I-frames and P-frames have different modeled sizes, so
+    the offset is header + #I-before*i_bytes + #P-before*p_bytes —
+    all closed-form BIGINT), and the tail-clamped GOP length.
+
+    This is the fan-out a video loader ships to decode workers (the
+    actual frame decode is the documented stub boundary,
+    multimodal.py:64): pure integer codegen + one explode — no
+    shuffle, no Python, no codec.  Every quantity is exact integer
+    arithmetic, identical in both engines (the ts division truncates
+    identically on non-negative µs)."""
+    d = load_table(spark, sf_dir, "documents").select("doc_id")
+    g = d.select(
+        "doc_id",
+        (24 + F.pmod("doc_id", F.lit(3)) * 3).cast("long").alias("fps"),
+        (F.pmod("doc_id", F.lit(19)) + 2).cast("long").alias("dur_s"),
+        (12 + F.pmod("doc_id", F.lit(2)) * 3).cast("long").alias("gop"),
+        F.when(F.pmod("doc_id", F.lit(2)) == 0, 1280 * 720)
+        .otherwise(640 * 360)
+        .cast("long")
+        .alias("pixels"),
+    ).select(
+        "*",
+        (F.col("fps") * F.col("dur_s")).alias("n_frames"),
+        F.expr("pixels div 2").alias("i_bytes"),
+        F.expr("pixels div 10").alias("p_bytes"),
+    )
+    g = g.select("*", F.expr("(n_frames - 1) div gop + 1").alias("n_gops"))
+    k = g.select(
+        "*",
+        F.explode(F.sequence(F.lit(0), F.col("n_gops") - 1)).alias("k"),
+    )
+    return k.select(
+        "doc_id",
+        "fps",
+        "gop",
+        "n_frames",
+        "k",
+        (F.col("k") * F.col("gop")).alias("frame_idx"),
+        F.expr("k * gop * 1000000 div fps").alias("ts_us"),
+        F.least(F.col("gop"), F.col("n_frames") - F.col("k") * F.col("gop"))
+        .cast("long")
+        .alias("gop_len"),
+        F.when(F.col("k") == F.col("n_gops") - 1, 1)
+        .otherwise(0)
+        .cast("long")
+        .alias("is_last"),
+        (
+            F.lit(VIDEO_HEADER_BYTES)
+            + F.col("k") * F.col("i_bytes")
+            + (F.col("k") * F.col("gop") - F.col("k")) * F.col("p_bytes")
+        )
+        .cast("long")
+        .alias("byte_offset"),
+        "i_bytes",
+    )
+
+
+_VIDEO_ORACLE = f"""
+WITH g AS (SELECT doc_id,
+    CAST(24 + (doc_id % 3) * 3 AS BIGINT) AS fps,
+    CAST(doc_id % 19 + 2 AS BIGINT) AS dur_s,
+    CAST(12 + (doc_id % 2) * 3 AS BIGINT) AS gop,
+    CAST(CASE WHEN doc_id % 2 = 0 THEN 1280 * 720
+         ELSE 640 * 360 END AS BIGINT) AS pixels
+  FROM documents),
+m AS (SELECT *, fps * dur_s AS n_frames, pixels // 2 AS i_bytes,
+    pixels // 10 AS p_bytes, (fps * dur_s - 1) // gop + 1 AS n_gops
+  FROM g),
+k AS (SELECT *, unnest(range(n_gops)) AS k FROM m)
+SELECT doc_id, fps, gop, n_frames, CAST(k AS BIGINT) AS k,
+  CAST(k * gop AS BIGINT) AS frame_idx,
+  CAST(k * gop * 1000000 // fps AS BIGINT) AS ts_us,
+  CAST(least(gop, n_frames - k * gop) AS BIGINT) AS gop_len,
+  CAST(CASE WHEN k = n_gops - 1 THEN 1 ELSE 0 END AS BIGINT) AS is_last,
+  CAST({VIDEO_HEADER_BYTES} + k * i_bytes + (k * gop - k) * p_bytes
+    AS BIGINT) AS byte_offset,
+  i_bytes
+FROM k
+"""
+
+
+QUERIES["mm_video_frame_plan"] = mm_video_frame_plan
+ORACLES["mm_video_frame_plan"] = _VIDEO_ORACLE

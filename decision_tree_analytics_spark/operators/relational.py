@@ -32,6 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
+from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.sources.tables import load_table
 
 
@@ -711,12 +712,11 @@ def rel_stats_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.expr(f"(ts div 1000) div {DAY_US}").cast("double").alias("day_idx"),
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     return ev.groupBy("event_type").agg(
-        r6(F.corr("value", "day_idx")).alias("corr_value_day"),
-        r6(F.stddev_samp("value")).alias("stddev_value"),
-        r6(F.var_samp("value")).alias("var_value"),
-        r6(F.avg("value")).alias("avg_value"),
+        round6(F.corr("value", "day_idx")).alias("corr_value_day"),
+        round6(F.stddev_samp("value")).alias("stddev_value"),
+        round6(F.var_samp("value")).alias("var_value"),
+        round6(F.avg("value")).alias("avg_value"),
     )
 
 
@@ -808,10 +808,9 @@ def rel_histogram_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
         "total", F.sum("cnt").over(wt)
     )
     edge = F.col("mn") + (F.col("bin") + 1) / HIST_BINS * (F.col("mx") - F.col("mn"))
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
 
     def est(q: float) -> Column:
-        return r6(F.min(F.when(F.col("cum") >= q * F.col("total"), edge)))
+        return round6(F.min(F.when(F.col("cum") >= q * F.col("total"), edge)))
 
     return cum.groupBy("event_type").agg(
         est(0.5).alias("p50_est"),

@@ -45,10 +45,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._loop import iterate
+from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.operators.similarity import (
     _dot,
     _norm,
-    _round6,
     _vecd,
 )
 from decision_tree_analytics_spark.sources.tables import load_table
@@ -125,7 +125,7 @@ def _bm25_scores(spark: SparkSession, sf_dir: str):
             ).alias("part"),
         )
         .groupBy("doc_id")
-        .agg(_round6(F.sum("part")).alias("score"))
+        .agg(round6(F.sum("part")).alias("score"))
     )
     return scored, tf
 
@@ -196,7 +196,7 @@ def _cosine_scores(spark: SparkSession, sf_dir: str, probe_id: int) -> DataFrame
         .filter(F.col("vec_id") != probe_id)
         .select(
             "vec_id",
-            _round6(
+            round6(
                 _dot(F.col("pv"), F.col("v"))
                 / (_norm(F.col("pv")) * _norm(F.col("v")))
             ).alias("cos"),
@@ -247,7 +247,7 @@ def sim_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "id",
             F.col("kw_rank").cast("long").alias("kw_rank"),
             F.col("vec_rank").cast("long").alias("vec_rank"),
-            _round6(
+            round6(
                 F.coalesce(1.0 / (RRF_K + F.col("kw_rank")), F.lit(0.0))
                 + F.coalesce(1.0 / (RRF_K + F.col("vec_rank")), F.lit(0.0))
             ).alias("rrf"),
@@ -312,7 +312,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "a",
             "b",
-            _round6(
+            round6(
                 _dot(F.col("va"), F.col("vb"))
                 / (_norm(F.col("va")) * _norm(F.col("vb")))
             ).alias("sim"),
@@ -327,7 +327,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.lit(1).cast("long").alias("step"),
             "vec_id",
-            _round6(lam * F.col("rel")).alias("mmr"),
+            round6(lam * F.col("rel")).alias("mmr"),
         )
     )
 
@@ -346,7 +346,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             remaining.join(penal, remaining.vec_id == penal.a)
             .select(
                 remaining.vec_id,
-                _round6(
+                round6(
                     lam * F.col("rel") - (1 - lam) * F.col("max_sim")
                 ).alias("mmr"),
             )

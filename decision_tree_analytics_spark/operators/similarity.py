@@ -32,6 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
+from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.sources.tables import load_table
 
 N_PLANES = 16
@@ -66,11 +67,6 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
-def _round6(c: Column) -> Column:
-    # floor(x*1e6 + 0.5)/1e6 — engine-portable round-half-up.
-    return F.floor(c * 1e6 + 0.5) / 1e6
-
-
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 cosine neighbors for probes vec_id < 10 (SURVEY Q29)."""
     from pyspark.sql import Window
@@ -85,7 +81,7 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = pairs.select(
         "probe_id",
         F.col("vec_id").alias("neighbor_id"),
-        _round6(
+        round6(
             _dot(F.col("pv"), F.col("v")) / (_norm(F.col("pv")) * _norm(F.col("v")))
         ).alias("cos_sim"),
     )
@@ -130,7 +126,7 @@ def sim_embed_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = pairs.select(
         "id_a",
         "id_b",
-        _round6(
+        round6(
             _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
         ).alias("cos_sim"),
     )
@@ -197,7 +193,7 @@ def sim_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = pairs.select(
         "id_a",
         "id_b",
-        _round6(
+        round6(
             _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
         ).alias("cos_sim"),
     )
@@ -275,7 +271,7 @@ def sim_sq_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     scored = pairs.select(
         "probe_id",
         F.col("vec_id").alias("neighbor_id"),
-        _round6(
+        round6(
             _dot(F.col("pv"), F.col("dv")) / (_norm(F.col("pv")) * _norm(F.col("dv")))
         ).alias("approx_cos"),
     )
@@ -314,7 +310,7 @@ def sim_sq_refined_topk(
         .select(
             "probe_id",
             "neighbor_id",
-            _round6(
+            round6(
                 _dot(F.col("pv"), F.col("cv"))
                 / (_norm(F.col("pv")) * _norm(F.col("cv")))
             ).alias("cos_sim"),
@@ -391,7 +387,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
         (F.col("sub")[j] - F.col("asub")[j]) * (F.col("sub")[j] - F.col("asub")[j])
         for j in range(PQ_SUB)
     ]
-    d = _round6(sum(terms[1:], terms[0]))
+    d = round6(sum(terms[1:], terms[0]))
     pairs = subs.join(F.broadcast(anch), "s").select(
         "vec_id",
         "s",
@@ -412,7 +408,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     ).select(
         "probe_id",
         F.col("vec_id").alias("neighbor_id"),
-        _round6(
+        round6(
             _dot(F.col("pv"), F.col("rv")) / (_norm(F.col("pv")) * _norm(F.col("rv")))
         ).alias("approx_cos"),
     )
@@ -483,7 +479,7 @@ def sim_ivf_topk(
     scored = cands.select(
         "probe_id",
         F.col("vec_id").alias("neighbor_id"),
-        _round6(
+        round6(
             _dot(F.col("pv"), F.col("v")) / (_norm(F.col("pv")) * _norm(F.col("v")))
         ).alias("cos_sim"),
     )
@@ -510,7 +506,7 @@ def _ivf_l2(vec: str, cen: str) -> Column:
         (F.col(vec)[j] - F.col(cen)[j]) * (F.col(vec)[j] - F.col(cen)[j])
         for j in range(DIM)
     ]
-    return _round6(sum(terms[1:], terms[0]))
+    return round6(sum(terms[1:], terms[0]))
 
 
 def _enc_argmin(d: Column, aid: Column, enc_k: int) -> Column:
@@ -645,7 +641,7 @@ def sim_ivf_oracled(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     scored = cands.select(
         "probe_id",
         F.col("vec_id").alias("neighbor_id"),
-        _round6(
+        round6(
             _dot(F.col("pv"), F.col("v")) / (_norm(F.col("pv")) * _norm(F.col("v")))
         ).alias("cos_sim"),
     )
@@ -756,7 +752,7 @@ def sim_ivf_snapshot(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     scored = cands.select(
         "probe_id",
         F.col("vec_id").alias("neighbor_id"),
-        _round6(
+        round6(
             _dot(F.col("pv"), F.col("v")) / (_norm(F.col("pv")) * _norm(F.col("v")))
         ).alias("cos_sim"),
     )
@@ -886,7 +882,7 @@ def sim_label_centroid_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.join(F.broadcast(stats), d.label == stats.s_label).select(
         "vec_id",
         F.col("label").cast("long").alias("label"),
-        _round6(F.col("dist")).alias("dist"),
+        round6(F.col("dist")).alias("dist"),
         (F.col("dist") > 1.25 * F.col("mean_dist")).cast("long").alias("is_outlier"),
     )
 
@@ -1273,7 +1269,7 @@ def sim_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = both.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"), "bucket")
     b = both.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), "bucket")
     pairs = a.join(b, ["bucket"]).filter(F.col("id_a") < F.col("id_b"))
-    cos = _round6(
+    cos = round6(
         _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
     )
     scored = pairs.select(cos.alias("c"))
@@ -1360,7 +1356,7 @@ def sim_srp_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = emb.filter(F.col("vec_id") < ANN_EVAL_PROBE_MAX).select(
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
     )
-    cos = lambda a, b: _round6(  # noqa: E731
+    cos = lambda a, b: round6(  # noqa: E731
         _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b)))
     )
     scored_t = emb.join(
@@ -1413,10 +1409,10 @@ def sim_srp_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_truth",
         "n_ann",
         "n_hit",
-        _round6(F.col("n_hit") / F.nullif(F.col("n_truth"), F.lit(0))).alias(
+        round6(F.col("n_hit") / F.nullif(F.col("n_truth"), F.lit(0))).alias(
             "recall"
         ),
-        _round6(F.col("n_hit") / F.nullif(F.col("n_ann"), F.lit(0))).alias(
+        round6(F.col("n_hit") / F.nullif(F.col("n_ann"), F.lit(0))).alias(
             "ann_precision"
         ),
     )
@@ -1521,7 +1517,6 @@ def sim_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max(F.when(F.col("split") == 1, F.col("n"))).alias("n1"),
         )
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     agg = w.groupBy("label").agg(
         F.max("n0").cast("long").alias("n_ref"),
         F.max("n1").cast("long").alias("n_live"),
@@ -1535,8 +1530,8 @@ def sim_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label").cast("long").alias("label"),
         "n_ref",
         "n_live",
-        r6(F.sqrt(F.col("sq"))).alias("l2_shift"),
-        r6(
+        round6(F.sqrt(F.col("sq"))).alias("l2_shift"),
+        round6(
             F.col("dot")
             / F.nullif(F.sqrt(F.col("s0")) * F.sqrt(F.col("s1")), F.lit(0.0))
         ).alias("centroid_cos"),

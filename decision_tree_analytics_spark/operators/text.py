@@ -18,6 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
+from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.sources.tables import load_table
 
 # Tiny per-language stopword profiles (public common-word lists).
@@ -499,14 +500,13 @@ def ns_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(straddles).cast("long").alias("n_straddlers"),
     )
     n_seqs = F.expr(f"(n_tokens + {cap} - 1) div {cap}")
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     return per_src.select(
         "source",
         "n_docs",
         "n_tokens",
         n_seqs.cast("long").alias("n_seqs"),
         (n_seqs * cap - F.col("n_tokens")).cast("long").alias("tail_waste"),
-        r6(F.col("n_tokens") / (n_seqs * cap)).alias("fill_rate"),
+        round6(F.col("n_tokens") / (n_seqs * cap)).alias("fill_rate"),
         "n_straddlers",
     )
 
@@ -836,13 +836,12 @@ def ns_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("nt").cast("long").alias("n_tokens"),
     )
     w = Window.partitionBy()
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     return g.select(
         "source",
         "n_docs",
         "n_tokens",
-        r6(F.col("n_tokens") / F.sum("n_tokens").over(w)).alias("token_share"),
-        r6(
+        round6(F.col("n_tokens") / F.sum("n_tokens").over(w)).alias("token_share"),
+        round6(
             F.sqrt(F.col("n_tokens").cast("double"))
             / F.sum(F.sqrt(F.col("n_tokens").cast("double"))).over(w)
         ).alias("mix_weight"),
@@ -850,10 +849,6 @@ def ns_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 GOPHER_STOPS = ("the", "a", "of", "and", "to", "in")
-
-
-def _round6_col(c: Column) -> Column:
-    return F.floor(c * 1e6 + 0.5) / 1e6
 
 
 def ns_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -875,14 +870,14 @@ def ns_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     lens = F.transform(toks, lambda w: F.length(w))
     wc = F.size(toks).cast("long")
     wc_nz = F.nullif(wc, F.lit(0))
-    mean_len = _round6_col(
+    mean_len = round6(
         F.aggregate(lens, F.lit(0), lambda acc, x: acc + x).cast("double")
         / wc_nz
     )
     max_len = F.array_max(lens).cast("long")
     stops = F.array(*[F.lit(w) for w in GOPHER_STOPS])
     stop_distinct = F.size(F.array_intersect(toks, stops)).cast("long")
-    alpha_frac = _round6_col(
+    alpha_frac = round6(
         F.size(F.filter(toks, lambda w: w.rlike("^[a-z]+$"))).cast("double")
         / wc_nz
     )
@@ -942,7 +937,7 @@ def ns_shard_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     return seq.groupBy("shard").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
         F.countDistinct("source").cast("long").alias("n_sources"),
-        _round6_col(
+        round6(
             F.sum("changed")
             / F.nullif(F.count(F.lit(1)) - 1, F.lit(0)).cast("double")
         ).alias("adjacent_mix"),
@@ -998,10 +993,10 @@ def ns_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_chars").cast("long").alias("n_chars"),
         F.countDistinct("source").cast("long").alias("n_sources"),
         F.countDistinct("lang").cast("long").alias("n_langs"),
-        _round6_col(
+        round6(
             1.0 - F.countDistinct("fp") / n_docs.cast("double")
         ).alias("dup_rate"),
-        _round6_col(F.avg("q")).alias("mean_quality"),
+        round6(F.avg("q")).alias("mean_quality"),
     )
 
 
@@ -2000,14 +1995,13 @@ def ns_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for k in range(1, 5)
             ],
         )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     tr = train.crossJoin(F.broadcast(w)).withColumn(
         "p", 1.0 / (1.0 + F.exp(-margin))
     )
     t1 = tr.agg(
         F.count(F.lit(1)).cast("long").alias("n_train"),
-        *[r6(F.max(f"w{j}")).alias(f"w{j}") for j in range(5)],
-        r6(
+        *[round6(F.max(f"w{j}")).alias(f"w{j}") for j in range(5)],
+        round6(
             F.avg(
                 -(
                     F.col("y") * F.log("p")
@@ -2725,7 +2719,7 @@ def ns_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     >~85% of such a corpus — and past either bound BOTH engines raise
     the same ANSI overflow error (an identical hard failure, never a
     silent mismatch).  Both bounds are locked by the near-bound
-    strategy in tests/test_round10_properties.py.  Scale: one
+    strategy in tests/test_text.py.  Scale: one
     map-side-combinable rollup to |sources| rows; all window math
     runs on that bounded grid."""
     d = load_table(spark, sf_dir, "documents").select(
@@ -2834,7 +2828,7 @@ PREF_MARGIN_PPM = 50_000  # min reward gap (5%) for a usable pair
 
 def _pref_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared candidate-pool stage for the RLHF data-prep audits
-    (ns_preference_pairs here; ns_rejection_sample in pending_r12):
+    (ns_preference_pairs and ns_rejection_sample):
     one row per candidate completion with its synthetic prompt key,
     integer-ppm reward proxy, and regex token count.  Extracted so
     the reward definition lives in exactly one place per engine —
@@ -3013,3 +3007,121 @@ SELECT chosen_source AS source,
        AS BIGINT) AS sum_len_delta
 FROM usable GROUP BY 1
 """
+
+
+# ---------------------------------------------------------------------------
+# ns_rejection_sample — best-of-N rollout selection audit (RLHF)
+# ---------------------------------------------------------------------------
+
+REJ_THRESHOLD_PPM = 100_000  # min best-of-pool reward to accept a prompt
+
+
+def ns_rejection_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Best-of-N rejection-sampling audit — the other half of the
+    RLHF data-prep story next to ns_preference_pairs: instead of
+    pairing argmax/argmin, each prompt's pool keeps ONLY its best
+    completion, and the whole prompt is rejected when even the best
+    clears no quality bar (``REJ_THRESHOLD_PPM``).  Per source of the
+    winning completion: prompts seen, prompts accepted, acceptance
+    rate (ppm), tokens actually kept for training, mean accepted
+    reward, and the mean best-vs-pool-mean advantage (how much
+    selection is lifting quality over sampling).
+
+    Determinism: reward is the BIGINT stopword-density ppm shared
+    with ns_preference_pairs; the best row_number carries the unique
+    doc_id tie-break (rule 5); pool means floor-divide positive
+    BIGINTs (portable); the only nullable division guards on
+    sum(accepted) via nullif (rule 8).
+
+    Scale: one corpus scan; the window and the prompt groupBy share
+    hashpartitioning(prompt_id) (pools are <= PREF_POOL rows, no
+    skew); the per-source rollup is a |sources|-sized second
+    exchange.  Same plan at 100 TB.  The reward stage is shared
+    VERBATIM with ns_preference_pairs (text._pref_candidates /
+    _PREF_PER_CTE) — one definition per engine, no drift."""
+    per = _pref_candidates(spark, sf_dir)
+    w_best = Window.partitionBy("prompt_id").orderBy(
+        F.col("reward_ppm").desc(), F.col("doc_id").asc()
+    )
+    ranked = per.select("*", F.row_number().over(w_best).alias("rn_best"))
+    pools = (
+        ranked.groupBy("prompt_id")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_cand"),
+            F.sum("reward_ppm").cast("long").alias("pool_reward"),
+            F.max(F.when(F.col("rn_best") == 1, F.col("source"))).alias(
+                "best_source"
+            ),
+            F.max(F.when(F.col("rn_best") == 1, F.col("reward_ppm"))).alias(
+                "best_reward"
+            ),
+            F.max(F.when(F.col("rn_best") == 1, F.col("re_tokens"))).alias(
+                "best_toks"
+            ),
+        )
+        .select(
+            "*",
+            F.when(F.col("best_reward") >= REJ_THRESHOLD_PPM, 1)
+            .otherwise(0)
+            .cast("long")
+            .alias("accepted"),
+            # best >= floor(pool mean), so the advantage is >= 0 and
+            # the floor-div is the portable positive case.
+            (
+                F.col("best_reward") - F.expr("pool_reward div n_cand")
+            ).alias("advantage_ppm"),
+        )
+    )
+    return pools.groupBy(F.col("best_source").alias("source")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_prompts"),
+        F.sum("accepted").cast("long").alias("n_accepted"),
+        F.expr(
+            "CAST(sum(accepted) * 1000000 div count(*) AS BIGINT)"
+        ).alias("acceptance_ppm"),
+        F.sum(
+            F.when(F.col("accepted") == 1, F.col("best_toks")).otherwise(0)
+        )
+        .cast("long")
+        .alias("kept_tokens"),
+        F.expr(
+            "CAST(sum(CASE WHEN accepted = 1 THEN best_reward ELSE 0 END)"
+            " div nullif(sum(accepted), 0) AS BIGINT)"
+        ).alias("mean_accepted_reward_ppm"),
+        F.expr(
+            "CAST(sum(advantage_ppm) div count(*) AS BIGINT)"
+        ).alias("mean_advantage_ppm"),
+    )
+
+
+_REJECTION_ORACLE = rf"""
+WITH {_PREF_PER_CTE},
+ranked AS (SELECT *,
+    row_number() OVER (PARTITION BY prompt_id
+                       ORDER BY reward_ppm DESC, doc_id ASC) AS rn_best
+  FROM per),
+pools AS (SELECT prompt_id, CAST(count(*) AS BIGINT) AS n_cand,
+    CAST(sum(reward_ppm) AS BIGINT) AS pool_reward,
+    max(CASE WHEN rn_best = 1 THEN source END) AS best_source,
+    max(CASE WHEN rn_best = 1 THEN reward_ppm END) AS best_reward,
+    max(CASE WHEN rn_best = 1 THEN re_tokens END) AS best_toks
+  FROM ranked GROUP BY 1),
+flagged AS (SELECT *,
+    CASE WHEN best_reward >= {REJ_THRESHOLD_PPM} THEN 1 ELSE 0 END
+      AS accepted,
+    best_reward - pool_reward // n_cand AS advantage_ppm
+  FROM pools)
+SELECT best_source AS source,
+  CAST(count(*) AS BIGINT) AS n_prompts,
+  CAST(sum(accepted) AS BIGINT) AS n_accepted,
+  CAST(sum(accepted) * 1000000 // count(*) AS BIGINT) AS acceptance_ppm,
+  CAST(sum(CASE WHEN accepted = 1 THEN best_toks ELSE 0 END) AS BIGINT)
+    AS kept_tokens,
+  CAST(sum(CASE WHEN accepted = 1 THEN best_reward ELSE 0 END)
+       // nullif(sum(accepted), 0) AS BIGINT) AS mean_accepted_reward_ppm,
+  CAST(sum(advantage_ppm) // count(*) AS BIGINT) AS mean_advantage_ppm
+FROM flagged GROUP BY 1
+"""
+
+
+QUERIES["ns_rejection_sample"] = ns_rejection_sample
+ORACLES["ns_rejection_sample"] = _REJECTION_ORACLE

@@ -16,7 +16,9 @@ pipelines and are exercised here with oracle-checked queries:
 
 Both compute arithmetic DuckDB can replicate exactly (sample stddev,
 integer offsets), so the Python path itself sits under the
-correctness gate.
+correctness gate.  ``udf_token_spans`` covers the Spark 4
+arrow-optimized Python UDTF lane (one input row, N output rows),
+the documented per-row-eval exception to the scale rules.
 """
 
 from __future__ import annotations
@@ -36,6 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.operators.multimodal import with_binary_payload
 from decision_tree_analytics_spark.sources.tables import (
     load_table,
@@ -700,7 +703,6 @@ def udf_dtw_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value",
         )
     )
-    r6 = lambda c: F.floor(c * 1e6 + 0.5) / 1e6  # noqa: E731
     mx = ev.agg(F.max("day").alias("mx"))
     grid = (
         spark.range(DTW_DAYS)
@@ -715,7 +717,7 @@ def udf_dtw_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         users.crossJoin(F.broadcast(grid))
         .join(daily_u, ["user_id", "day"], "left")
         .select(
-            "user_id", "i", r6(F.coalesce("sv", F.lit(0.0))).alias("s")
+            "user_id", "i", round6(F.coalesce("sv", F.lit(0.0))).alias("s")
         )
     )
     daily_g = ev.groupBy("day").agg(F.sum("value").alias("gv"))
@@ -724,7 +726,7 @@ def udf_dtw_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(nu))
         .select(
             F.col("i").alias("j"),
-            r6(
+            round6(
                 F.coalesce("gv", F.lit(0.0))
                 / F.nullif(F.col("nu"), F.lit(0)).cast("double")
             ).alias("r"),
@@ -799,3 +801,92 @@ def _dtw_oracle() -> str:
 
 QUERIES["udf_dtw_profile"] = udf_dtw_profile
 ORACLES["udf_dtw_profile"] = _dtw_oracle()
+
+
+# ---------------------------------------------------------------------------
+# udf_token_spans — arrow-optimized Python UDTF (one row in, N span rows out)
+# ---------------------------------------------------------------------------
+
+# Bounded slice: the compare stays ~10% of the corpus at any SF (the
+# dedup_lsh_recall_eval idiom — the restriction commutes with the
+# per-document span generation).
+UDTF_DOC_MOD = 10
+UDTF_DOC_REM = 3
+
+
+def udf_token_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-span manifest via a Spark 4 **arrow-optimized Python
+    UDTF** (``@udtf(useArrow=True)`` + SQL ``LATERAL`` join) — the
+    per-row one-to-many Python extension point: one input document,
+    N output span rows, without an intermediate array column or an
+    explode.  The span semantics themselves are deliberately
+    SQL-expressible (split into single-space-separated token spans,
+    emit per-token index / start offset / length — the byte-offset
+    manifest a span-annotation or highlight pipeline ships) so the
+    DuckDB oracle can hash-check the lane: ~60 output rows per input
+    row exercises real one-to-many fan-out across Arrow batch
+    boundaries, and
+    a UDTF that dropped a row, reordered eval calls, or mangled Arrow
+    batch boundaries breaks the hash.
+
+    Scale: the UDTF is a NARROW per-row stage — no shuffle; input
+    sized by ``size_aware_parallelism`` (Arrow worker round-trips are
+    the fixed cost, ns_text_subword lesson).  The plan must show
+    ``ArrowEvalPythonUDTF`` (the Arrow lane), never
+    ``BatchEvalPythonUDTF`` (row-pickling) — plan-locked in
+    tests/test_plans.py.  Registration (``spark.udtf.register``
+    + temp view) is idempotent per session, driver's vanilla session
+    included."""
+    from pyspark.sql.functions import udtf
+
+    @udtf(
+        returnType="seg_idx: bigint, seg_start: bigint, seg_len: bigint",
+        useArrow=True,
+    )
+    class _SegSpans:
+        def eval(self, text):  # noqa: ANN001 — UDTF protocol signature
+            if text is None:
+                return
+            off = 0
+            for i, part in enumerate(text.split(' ')):
+                yield (i, off, len(part))
+                off += len(part) + 1
+
+    spark.udtf.register("dta_seg_spans", _SegSpans)
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .filter(
+            (F.col("doc_id") % UDTF_DOC_MOD == UDTF_DOC_REM)
+            & F.col("text").isNotNull()
+        )
+        .select("doc_id", "text")
+        .repartition(size_aware_parallelism(spark, sf_dir, "documents"))
+    )
+    docs.createOrReplaceTempView("dta_seg_docs")
+    return spark.sql(
+        "SELECT d.doc_id, s.seg_idx, s.seg_start, s.seg_len"
+        " FROM dta_seg_docs d, LATERAL dta_seg_spans(d.text) s"
+    )
+
+
+_TOKEN_SPANS_ORACLE = f"""
+WITH d AS (SELECT doc_id, string_split(text, ' ') AS parts
+  FROM documents
+  WHERE doc_id % {UDTF_DOC_MOD} = {UDTF_DOC_REM} AND text IS NOT NULL),
+z AS (SELECT doc_id,
+    unnest(range(len(parts))) AS seg_idx,
+    unnest(parts) AS seg
+  FROM d),
+m AS (SELECT doc_id, CAST(seg_idx AS BIGINT) AS seg_idx,
+    CAST(length(seg) AS BIGINT) AS seg_len FROM z)
+SELECT doc_id, seg_idx,
+  CAST(coalesce(sum(seg_len + 1) OVER (PARTITION BY doc_id
+    ORDER BY seg_idx ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING),
+    0) AS BIGINT) AS seg_start,
+  seg_len
+FROM m
+"""
+
+
+QUERIES["udf_token_spans"] = udf_token_spans
+ORACLES["udf_token_spans"] = _TOKEN_SPANS_ORACLE

@@ -39,37 +39,13 @@ def test_rows_only_queries_are_the_documented_exceptions():
     }
 
 
-def test_driver_sampled_names_exist_and_rotate_first():
-    """Rotation-contract hygiene: every name in _DRIVER_SAMPLED must
-    be a real query (a typo in a rotation commit would silently waste
-    a driver sample slot), and all_queries() must enumerate every
-    never-verified query BEFORE any verified one.  Flags are computed
-    against the EFFECTIVE verified set (_DRIVER_SAMPLED union the
-    zero-churn loader) so a new CORRECTNESS_r*.json landing never
-    reds this test (VERDICT r7 item 1)."""
-    from decision_tree_analytics_spark import operators as O
-
-    qs = list(O.all_queries())
-    missing = O._DRIVER_SAMPLED - set(qs)
-    assert not missing, f"_DRIVER_SAMPLED names not in the contract: {missing}"
-    sampled = O._DRIVER_SAMPLED | O._driver_verified_keys()
-    flags = [name in sampled for name in qs]
-    # once we hit the first verified name, everything after is verified
-    if True in flags:
-        first = flags.index(True)
-        assert all(flags[first:]), "verified query enumerated before a fresh one"
-
-
 def test_driver_verified_keys_loader():
     """The auto-rotation loader counts hash-green and clean rows-only
-    (err == 'no_oracle') rows, and rejects real error rows.  The live
-    repo root holds r01..rN files, so the loaded set is a SUPERSET of
-    the curated r1-r5 history — never asserted equal (equality is what
-    kept this test red for two rounds; VERDICT r7 item 1)."""
+    (err == 'no_oracle') rows, and rejects real error rows, reading
+    the committed CORRECTNESS_r*.json files at the repo root."""
     from decision_tree_analytics_spark import operators as O
 
-    ks = O._driver_verified_keys()
-    assert ks >= O._DRIVER_SAMPLED
+    ks = O._driver_verified_rounds()
     assert "q14_approx_distinct" in ks  # rows-only, err == 'no_oracle'
     assert "rel_approx_quantile" in ks  # r02 errored, r03 clean row wins
 
@@ -95,10 +71,8 @@ def test_driver_verified_rounds_semantics(tmp_path):
     (tmp_path / "CORRECTNESS_rbad.json").write_text("not json")
     rounds = O._driver_verified_rounds(root=str(tmp_path))
     assert rounds == {"alpha": 8, "beta": 8, "gamma": 1}
-    assert O._driver_verified_keys(root=str(tmp_path)) == {
-        "alpha", "beta", "gamma",
-    }
-    # an empty root (bare checkout) yields the fallback-ready empty map
+    assert set(rounds) == {"alpha", "beta", "gamma"}
+    # an empty root (bare checkout) yields an empty map
     assert O._driver_verified_rounds(root=str(tmp_path / "nowhere")) == {}
 
 
@@ -111,7 +85,7 @@ def test_all_queries_enumeration_is_fresh_then_recheck_then_stalest():
 
     names = list(O.all_queries())
     rounds = O._driver_verified_rounds()
-    sampled = O._DRIVER_SAMPLED | set(rounds)
+    sampled = set(rounds)
     n_fresh = sum(1 for k in names if k not in sampled)
     assert all(k not in sampled for k in names[:n_fresh])
     promoted = names[n_fresh : n_fresh + len(O._RECHECK_PRIORITY)]
@@ -119,3 +93,22 @@ def test_all_queries_enumeration_is_fresh_then_recheck_then_stalest():
     rest = names[n_fresh + len(promoted):]
     rest_rounds = [rounds.get(k, 0) for k in rest]
     assert rest_rounds == sorted(rest_rounds), "verified tail not stalest-first"
+
+
+def test_modules_and_files_are_named_by_family_not_round():
+    """Layout guard: operator modules and source/test files are named
+    for what they hold, never for the round that added them or for a
+    pending state (no ``pending``, ``_rN`` or ``roundN`` names)."""
+    import os
+    import re
+
+    from decision_tree_analytics_spark import operators as O
+
+    bad = re.compile(r"pending|_r\d+|round\d+")
+    names = [m.__name__.rsplit(".", 1)[-1] for m in O.ALL_MODULES]
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    for top in ("decision_tree_analytics_spark", "tests"):
+        for dirpath, _dirs, files in os.walk(os.path.join(repo, top)):
+            names += [f for f in files if f.endswith(".py")]
+    offenders = sorted(n for n in names if bad.search(n))
+    assert not offenders, f"round-numbered or pending names: {offenders}"

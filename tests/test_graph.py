@@ -1,7 +1,20 @@
-"""Structural checks for the link-prediction and ranking-eval
-operators (plan locks + oracles cover the rest of their families)."""
+"""Graph operators: planted-structure checks for link prediction and
+ranking eval, and pure-Python replays (Dijkstra, Kruskal, Brandes,
+k-core peel, HITS, random walks) of the iterative ones.  Plan locks and
+oracles cover the rest of the family."""
 
 from __future__ import annotations
+
+import hashlib
+import math
+
+import pyspark.sql.functions as F
+
+from decision_tree_analytics_spark.operators.graph import (
+    SP_COST_SCALE,
+    _trade_edges,
+    graph_closeness,
+)
 
 
 def test_adamic_adar_planted_links_and_hub_cap(spark, tmp_path):
@@ -260,3 +273,142 @@ def test_betweenness_equals_python_brandes(spark, sf_dir):
                     )
                     want[v][1] += 1
     assert got == {n: tuple(w) for n, w in want.items()}
+
+
+def _dijkstra(adj, src):
+    import heapq
+
+    dist = {src: 0}
+    pq = [(0, src)]
+    while pq:
+        d, u = heapq.heappop(pq)
+        if d > dist.get(u, float("inf")):
+            continue
+        for v, w in adj.get(u, ()):  # undirected: adj carries both ways
+            nd = d + w
+            if nd < dist.get(v, float("inf")):
+                dist[v] = nd
+                heapq.heappush(pq, (nd, v))
+    return dist
+
+
+def test_closeness_matches_python_dijkstra(spark, sf_dir):
+    out = {r["nation"]: r for r in graph_closeness(spark, sf_dir).collect()}
+    edges = (
+        _trade_edges(spark, sf_dir)
+        .filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
+            "weight",
+        )
+        .groupBy("a", "b")
+        .agg(F.sum("weight").alias("w"))
+        .collect()
+    )
+    adj: dict[str, list[tuple[str, int]]] = {}
+    for r in edges:
+        c = max(int(math.floor(SP_COST_SCALE / r["w"] + 0.5)), 1)
+        adj.setdefault(r["a"], []).append((r["b"], c))
+        adj.setdefault(r["b"], []).append((r["a"], c))
+    for src in adj:
+        dist = _dijkstra(adj, src)
+        reach = {t: d for t, d in dist.items() if t != src}
+        assert out[src]["n_reach"] == len(reach)
+        assert out[src]["sum_dist_micro"] == sum(reach.values())
+        assert out[src]["harmonic_micro"] == sum(
+            10**12 // d for d in reach.values()
+        )
+
+
+def test_kcore_converged_and_matches_python_peel(spark, sf_dir):
+    from decision_tree_analytics_spark.operators.graph import (
+        KCORE_K,
+        graph_kcore,
+    )
+
+    out = {r["nation"]: r["core_degree"] for r in graph_kcore(spark, sf_dir).collect()}
+    edges = (
+        _trade_edges(spark, sf_dir)
+        .filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("a"), F.greatest("src", "dst").alias("b")
+        )
+        .distinct()
+        .collect()
+    )
+    adj: dict[str, set[str]] = {}
+    for r in edges:
+        adj.setdefault(r["a"], set()).add(r["b"])
+        adj.setdefault(r["b"], set()).add(r["a"])
+    # python peel to the FIXED POINT (not a round cap)
+    alive = set(adj)
+    while True:
+        drop = {v for v in alive if len(adj[v] & alive) < KCORE_K}
+        if not drop:
+            break
+        alive -= drop
+    expect = {v: len(adj[v] & alive) for v in alive}
+    assert out == expect  # fixed rounds reached the true k-core
+
+
+def test_hits_scores_are_l1_normalized_and_weight_ranked(spark, sf_dir):
+    from decision_tree_analytics_spark.operators.graph import (
+        HITS_SCALE,
+        graph_hits,
+    )
+
+    rows = graph_hits(spark, sf_dir).collect()
+    tot_h = sum(r["hub_micro"] for r in rows)
+    tot_a = sum(r["auth_micro"] for r in rows)
+    # integer-div normalization truncates: sum in (SCALE - n, SCALE]
+    assert HITS_SCALE - len(rows) <= tot_h <= HITS_SCALE
+    assert HITS_SCALE - len(rows) <= tot_a <= HITS_SCALE
+    assert all(r["hub_micro"] >= 0 and r["auth_micro"] >= 0 for r in rows)
+    assert max(r["auth_micro"] for r in rows) > HITS_SCALE // len(rows)
+
+
+# ------------------------------------------------------------------
+# graph_random_walks
+# ------------------------------------------------------------------
+
+
+def test_random_walks_replay_and_shape(spark, sf_dir):
+    from decision_tree_analytics_spark.operators.graph import (
+        WALK_STEPS,
+        WALKS_PER_NODE,
+        _trade_edges,
+        graph_random_walks,
+    )
+
+    out = graph_random_walks(spark, sf_dir).toPandas()
+    edges = _trade_edges(spark, sf_dir).toPandas()
+    adj = {}
+    for r in edges[edges.src != edges.dst].itertuples():
+        adj.setdefault(r.src, []).append(r.dst)
+    nodes = sorted(set(edges.src) | set(edges.dst))
+    rows = set()
+    for n in nodes:
+        for w in range(WALKS_PER_NODE):
+            cur = n
+            rows.add((n, w, 0, cur))
+            for step in range(1, WALK_STEPS + 1):
+                nbrs = adj.get(cur)
+                if not nbrs:
+                    break
+                cur = min(
+                    nbrs,
+                    key=lambda d: hashlib.md5(
+                        f"{cur}-{w}-{step}-{d}".encode()
+                    ).hexdigest(),
+                )
+                rows.add((n, w, step, cur))
+    got = set(
+        out[["start_node", "walk_id", "step", "node"]].itertuples(
+            index=False, name=None
+        )
+    )
+    assert got == rows
+    # every (start, walk) has a full-length trajectory on this graph
+    per_walk = out.groupby(["start_node", "walk_id"]).step.max()
+    assert (per_walk == WALK_STEPS).all()

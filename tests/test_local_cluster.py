@@ -135,3 +135,63 @@ def test_queries_match_oracle_on_real_multi_jvm_cluster(sf_dir):
     )
     for name in CLUSTER_QUERIES:
         assert f"CLUSTER-MATCH {name}" in proc.stdout
+
+
+_CLUSTER_DRIVER = r"""
+import os, sys
+sys.path.insert(0, {repo!r})
+sys.path.insert(0, {repo_tests!r})
+os.environ["PYSPARK_PYTHON"] = sys.executable
+os.environ["PYSPARK_DRIVER_PYTHON"] = sys.executable
+os.environ["PYTHONPATH"] = {repo!r} + os.pathsep + os.environ.get("PYTHONPATH", "")
+from pyspark.sql import SparkSession
+from tests.oracle_harness import compare, duckdb_connection
+from decision_tree_analytics_spark.operators.multimodal import (
+    QUERIES as QM, ORACLES as OM,
+)
+from decision_tree_analytics_spark.operators.udf_inventory import (
+    QUERIES as QU, ORACLES as OU,
+)
+
+NAMES = ["udf_token_spans", "mm_video_frame_plan"]
+QS = {{**QM, **QU}}
+OS = {{**OM, **OU}}
+
+spark = (
+    SparkSession.builder.master("local-cluster[2,4,2048]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.sql.shuffle.partitions", "8")
+    .config("spark.executorEnv.PYTHONPATH", {repo!r})
+    .getOrCreate()
+)
+con = duckdb_connection({sf!r})
+for name in NAMES:
+    compare(QS[name](spark, {sf!r}), con, OS[name], name)
+    print("CLUSTER-MATCH", name, flush=True)
+spark.stop()
+print("ALL-OK")
+"""
+
+
+def test_r14_registrants_match_on_real_cluster(sf_dir):
+    """Both r14 registrants oracle-checked on a REAL 2-JVM
+    local-cluster: the UDTF class must cloudpickle to REMOTE executor
+    Arrow workers with each executor's eval stream covering exactly
+    its partitions, and the video plan's integer explode splits
+    across executors."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = _CLUSTER_DRIVER.format(repo=repo, repo_tests=repo, sf=sf_dir)
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        timeout=900,
+    )
+    assert proc.returncode == 0 and "ALL-OK" in proc.stdout, (
+        f"stdout tail: {proc.stdout[-3000:]}\nstderr tail: {proc.stderr[-3000:]}"
+    )
+    for name in ("udf_token_spans", "mm_video_frame_plan"):
+        assert f"CLUSTER-MATCH {name}" in proc.stdout

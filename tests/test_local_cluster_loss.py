@@ -636,7 +636,7 @@ print("EXECUTORS-AFTER-LOSS", len(alive), flush=True)
 # RECOVERED cluster (its eval stream re-planned across the healed
 # fleet).
 from tests.oracle_harness import compare, duckdb_connection
-from decision_tree_analytics_spark.operators.pending_r14 import (
+from decision_tree_analytics_spark.operators.udf_inventory import (
     ORACLES, QUERIES,
 )
 con = duckdb_connection({sf!r})

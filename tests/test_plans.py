@@ -1180,9 +1180,12 @@ def test_compaction_plan_manifest_rollup_first(spark, sf_dir):
 
 def test_random_walks_broadcast_edges_one_walk_exchange(spark, sf_dir):
     """graph_random_walks: every unrolled hop joins the persisted
-    edge list via BROADCAST (narrow — preserves the walk
-    partitioning), so the (start_node, walk_id) exchange the step
-    windows need happens ONCE and is reused by all later steps."""
+    edge list via BROADCAST, so the plan holds at least four broadcast
+    joins.  The steps before the last are checkpointed and appear as
+    scans, so the final plan holds at most one (start_node, walk_id)
+    exchange: the last step's window.  Each earlier step re-shuffles
+    for its own window in its checkpoint job, because under AQE a
+    checkpointed plan loses its partitioning."""
     from decision_tree_analytics_spark.operators.graph import graph_random_walks
     from decision_tree_analytics_spark.plans.inspect import simple_plan
 
@@ -1324,7 +1327,7 @@ def test_quantile_reg_grid_is_one_corpus_pass(spark, sf_dir):
     of ONE corpus exchange; the stack (Generate) and the argmin window
     run on the |event_type|x25 aggregate — never a 25x corpus explode
     and never 25 scans (the ml_threshold_tuning shape)."""
-    from decision_tree_analytics_spark.operators.pending_r12 import (
+    from decision_tree_analytics_spark.operators.ml_inventory import (
         ml_quantile_reg,
     )
     from decision_tree_analytics_spark.plans.inspect import (
@@ -1348,7 +1351,7 @@ def test_did_one_corpus_rollup_plus_broadcast_midpoint(spark, sf_dir):
     map-side-combinable), the temporal-midpoint scalar reaches the
     fact rows as a BROADCAST, and the 20-cell pivot is the only other
     exchange."""
-    from decision_tree_analytics_spark.operators.pending_r12 import rel_did
+    from decision_tree_analytics_spark.operators.stats_ext import rel_did
     from decision_tree_analytics_spark.plans.inspect import (
         has_python_eval,
         simple_plan,
@@ -1365,7 +1368,7 @@ def test_rejection_sample_shares_prompt_partitioning(spark, sf_dir):
     groupBy ride ONE hashpartitioning(prompt_id) (the
     ns_preference_pairs shape); the per-source rollup is the only
     second exchange.  No joins, no Python, one corpus scan."""
-    from decision_tree_analytics_spark.operators.pending_r12 import (
+    from decision_tree_analytics_spark.operators.text import (
         ns_rejection_sample,
     )
     from decision_tree_analytics_spark.plans.inspect import (
@@ -1386,7 +1389,7 @@ def test_vacuum_plan_reference_table_cached_once(spark, sf_dir):
     from ONE persisted sub-plan — count InMemoryTableScan, never
     'Scan parquet' substrings (a persisted sub-plan's text repeats its
     child FileScan under every InMemoryRelation print)."""
-    from decision_tree_analytics_spark.operators.pending_r12 import (
+    from decision_tree_analytics_spark.operators.cdc import (
         snap_vacuum_plan,
     )
     from decision_tree_analytics_spark.plans.inspect import simple_plan
@@ -1400,7 +1403,7 @@ def test_mann_kendall_pairs_come_from_collapsed_grid(spark, sf_dir):
     rollup BEFORE the pairwise self-join (the rel_theil_sen bounded-
     grid rule) — the join sits above the daily HashAggregate in the
     OUTPUT-FIRST print, and no Python anywhere."""
-    from decision_tree_analytics_spark.operators.pending_r12 import (
+    from decision_tree_analytics_spark.operators.stats_ext import (
         rel_mann_kendall,
     )
     from decision_tree_analytics_spark.plans.inspect import (
@@ -1422,7 +1425,7 @@ def test_token_spans_uses_arrow_udtf_lane(spark, sf_dir):
     through ArrowEvalPythonUDTF (Arrow batch transfer), never
     BatchEvalPythonUDTF (per-row pickling), with the doc slice pushed
     to the parquet scan and no shuffle before the Python stage."""
-    from decision_tree_analytics_spark.operators.pending_r14 import (
+    from decision_tree_analytics_spark.operators.udf_inventory import (
         udf_token_spans,
     )
 
@@ -1442,7 +1445,7 @@ def test_video_frame_plan_is_map_only_codegen(spark, sf_dir):
     integer codegen + one explode over the doc_id projection — zero
     shuffles, zero joins, zero Python, and the scan reads ONLY
     doc_id (the decode-worker fan-out must stay metadata-sized)."""
-    from decision_tree_analytics_spark.operators.pending_r12 import (
+    from decision_tree_analytics_spark.operators.multimodal import (
         mm_video_frame_plan,
     )
 

@@ -7,10 +7,13 @@ methods against the exact broadcast brute force."""
 
 from __future__ import annotations
 
+import numpy as np
+
 from decision_tree_analytics_spark.operators.similarity import (
     sim_cosine_topk,
     sim_ivf_topk,
 )
+from decision_tree_analytics_spark.sources.tables import load_table
 
 
 def _neighbor_sets(df):
@@ -211,3 +214,23 @@ def test_kmeans_lloyd_inertia_monotone_and_partition(spark, sf_dir):
     total = counts.pop()
     for t in range(1, KM_ROUNDS):
         assert by_round[t + 1][1] <= by_round[t][1] + total
+
+
+def test_embedding_audit_matches_numpy_norms(spark, sf_dir):
+    from decision_tree_analytics_spark.operators.similarity import (
+        sim_embedding_audit,
+    )
+
+    rows = {r["label"]: r for r in sim_embedding_audit(spark, sf_dir).collect()}
+    emb = load_table(spark, sf_dir, "embeddings").toPandas()
+    for label, g in emb.groupby("label"):
+        mat = np.stack(g["embedding"].to_numpy())
+        norms = np.sqrt((mat.astype(np.float64) ** 2).sum(axis=1))
+        r = rows[label]
+        assert r["n_vecs"] == len(g)
+        assert r["min_dim"] == r["max_dim"] == mat.shape[1]
+        assert r["n_zero"] == int((norms == 0).sum())
+        # micro-unit norms within 1 micro of numpy (per-element pico
+        # rounding can shift the last digit)
+        assert abs(r["min_norm_micro"] - round(norms.min() * 1e6)) <= 2
+        assert abs(r["max_norm_micro"] - round(norms.max() * 1e6)) <= 2

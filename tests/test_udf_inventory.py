@@ -1,22 +1,14 @@
-"""Round-14 registrations (udf_token_spans, mm_video_frame_plan) —
-pure-Python replays, real-cluster evidence, the UDTF TABLE-argument
-capability probe, and the hypothesis span-walk lock.
-
-Oracle equality for both names now runs through the standard contract
-suite (tests/test_oracle_queries.py); plan locks live in
-tests/test_plans.py (the r12 registration pattern)."""
+"""The arrow-optimized Python UDTF lane (udf_token_spans): a pure-Python
+replay, the UDTF TABLE-argument capability probe, and the hypothesis
+span-walk lock.  Oracle equality runs through
+tests/test_oracle_queries.py; the plan lock lives in
+tests/test_plans.py."""
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 
-from decision_tree_analytics_spark.operators.pending_r12 import (
-    VIDEO_HEADER_BYTES,
-    mm_video_frame_plan,
-)
-from decision_tree_analytics_spark.operators.pending_r14 import (
+from decision_tree_analytics_spark.operators.udf_inventory import (
     UDTF_DOC_MOD,
     UDTF_DOC_REM,
     udf_token_spans,
@@ -60,98 +52,6 @@ def test_token_spans_matches_python_replay(spark, sf_dir):
     assert (
         list(map(tuple, got.itertuples(index=False, name=None))) == want
     )
-
-
-def test_video_frame_plan_matches_replay(spark, sf_dir):
-    """Pure-Python GOP/byte-offset replay over every clip: the plan's
-    closed-form offsets must equal a frame-by-frame walk of the
-    modeled stream (I-frame at each GOP head, P-frames between)."""
-    pdf = (
-        mm_video_frame_plan(spark, sf_dir)
-        .toPandas()
-        .sort_values(["doc_id", "k"])
-    )
-    assert len(pdf) > 0
-    for doc_id, g in pdf.groupby("doc_id"):
-        fps = 24 + (doc_id % 3) * 3
-        dur = doc_id % 19 + 2
-        gop = 12 + (doc_id % 2) * 3
-        pixels = 1280 * 720 if doc_id % 2 == 0 else 640 * 360
-        n_frames = fps * dur
-        i_b, p_b = pixels // 2, pixels // 10
-        # Walk the stream frame by frame, recording each GOP head.
-        offsets, off = [], VIDEO_HEADER_BYTES
-        for idx in range(n_frames):
-            if idx % gop == 0:
-                offsets.append(off)
-            off += i_b if idx % gop == 0 else p_b
-        assert list(g.byte_offset) == offsets
-        assert list(g.frame_idx) == [k * gop for k in range(len(offsets))]
-        assert list(g.ts_us) == [
-            k * gop * 1_000_000 // fps for k in range(len(offsets))
-        ]
-        assert g.gop_len.sum() == n_frames  # GOPs tile the clip exactly
-        assert list(g.is_last)[-1] == 1 and sum(g.is_last) == 1
-
-
-_CLUSTER_DRIVER = r"""
-import os, sys
-sys.path.insert(0, {repo!r})
-sys.path.insert(0, {repo_tests!r})
-os.environ["PYSPARK_PYTHON"] = sys.executable
-os.environ["PYSPARK_DRIVER_PYTHON"] = sys.executable
-os.environ["PYTHONPATH"] = {repo!r} + os.pathsep + os.environ.get("PYTHONPATH", "")
-from pyspark.sql import SparkSession
-from tests.oracle_harness import compare, duckdb_connection
-from decision_tree_analytics_spark.operators.pending_r12 import (
-    QUERIES as Q12, ORACLES as O12,
-)
-from decision_tree_analytics_spark.operators.pending_r14 import (
-    QUERIES as Q14, ORACLES as O14,
-)
-
-NAMES = ["udf_token_spans", "mm_video_frame_plan"]
-QS = {{**Q12, **Q14}}
-OS = {{**O12, **O14}}
-
-spark = (
-    SparkSession.builder.master("local-cluster[2,4,2048]")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.executorEnv.PYTHONPATH", {repo!r})
-    .getOrCreate()
-)
-con = duckdb_connection({sf!r})
-for name in NAMES:
-    compare(QS[name](spark, {sf!r}), con, OS[name], name)
-    print("CLUSTER-MATCH", name, flush=True)
-spark.stop()
-print("ALL-OK")
-"""
-
-
-def test_r14_registrants_match_on_real_cluster(sf_dir):
-    """Both r14 registrants oracle-checked on a REAL 2-JVM
-    local-cluster: the UDTF class must cloudpickle to REMOTE executor
-    Arrow workers with each executor's eval stream covering exactly
-    its partitions, and the video plan's integer explode splits
-    across executors."""
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    code = _CLUSTER_DRIVER.format(repo=repo, repo_tests=repo, sf=sf_dir)
-    proc = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        timeout=900,
-    )
-    assert proc.returncode == 0 and "ALL-OK" in proc.stdout, (
-        f"stdout tail: {proc.stdout[-3000:]}\nstderr tail: {proc.stderr[-3000:]}"
-    )
-    for name in ("udf_token_spans", "mm_video_frame_plan"):
-        assert f"CLUSTER-MATCH {name}" in proc.stdout
 
 
 def test_udtf_table_argument_partition_by_works(spark, sf_dir):
