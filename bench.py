@@ -6,7 +6,8 @@ prints ``{"metric": ..., "unit": "sec", "queries": {name: sec},
 "sf": ..., "total_s": ..., "n_queries": ...}`` (the full per-entry
 inventory also lands in BENCH_FULL.json; the printed line
 self-truncates from the front to fit the driver's 2000-byte tail
-capture, so the tail keys always survive).
+capture, so the tail keys always survive).  ``$SPARK_GRAFT_CPUS``
+defaults to the cores the process may run on.
 
 Each query is fully materialized via a count-style reduction
 (``df.write`` would measure the sink; ``collect`` would measure
@@ -124,9 +125,9 @@ def main() -> None:
 
 
 # The driver's artifact capture keeps only the LAST ~2000 bytes of
-# output and then tries json.loads on the captured line (BENCH_r08 and
-# BENCH_r09 both recorded parsed:null because the full-inventory line
-# outgrew that window).  Two-part emission:
+# output and then tries json.loads on the captured line (the round-8
+# and round-9 bench records both read parsed:null because the
+# full-inventory line outgrew that window).  Two-part emission:
 #   * the COMPLETE per-entry timings go to BENCH_FULL.json next to
 #     this script (committed — rounds are diffed there);
 #   * the printed line carries the queries dict in REVERSE run order

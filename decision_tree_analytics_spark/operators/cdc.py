@@ -806,8 +806,8 @@ def snap_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     branches (per-gen footprint, per-file last reference), so it is
     persisted and tethered — Catalyst does not reuse an exchange
     across branches of one uncached lineage (the BM25 lesson), and
-    without the persist the corpus scan would run twice
-    (plan-locked in tests/test_pending_r12.py)."""
+    without the persist the corpus scan would run twice (plan-locked
+    in tests/test_plans.py::test_vacuum_plan_reference_table_cached_once)."""
     man = _order_layout_manifest(spark, sf_dir).filter(
         F.col("layout") == "clustered"
     )

@@ -30,11 +30,11 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._loop import checkpoint
+from decision_tree_analytics_spark.operators._parts import label_parts, spread
 from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.sources.tables import (
     load_table,
     parquet_footer_tag,
-    size_aware_parallelism,
 )
 
 MINHASH_K = 16  # signature length
@@ -44,7 +44,9 @@ MINHASH_K = 16  # signature length
 MINHASH_BAND_ROWS = 2
 
 
-def _tokens() -> Column:
+def tokens() -> Column:
+    """The engine's one tokenizer: lower(trim(text)) split on single
+    spaces."""
     return F.split(F.lower(F.trim(F.col("text"))), " ")
 
 
@@ -60,7 +62,7 @@ def _word_shingles(toks: Column, n: int = 3) -> Column:
     """n-word shingles from a *materialized* token array column.
 
     Callers must bind the tokenization to a real column first
-    (``select(_tokens().alias("toks"))``) — referencing the split()
+    (``select(tokens().alias("toks"))``) — referencing the split()
     expression inside the lambda would re-tokenize the document for
     every element_at lookup.  slice() yields an empty array for short
     docs (sequence() would produce a descending [1,0] — avoid)."""
@@ -103,11 +105,9 @@ def _minhash_wide(d: DataFrame) -> DataFrame:
     oracle parses the same hex).
 
     Shape at scale: one explode of shingles, k expressions, k-column
-    min-aggregate with map-side partial combine.  The input is spread
-    across all cores first: a small-file table arrives as one
-    partition, and hashing is CPU-bound."""
-    d = d.repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
-    toked = d.select("doc_id", _tokens().alias("toks"))
+    min-aggregate with map-side partial combine."""
+    d = spread(d, "doc_id")
+    toked = d.select("doc_id", tokens().alias("toks"))
     shingled = toked.select(
         "doc_id",
         F.explode(F.array_distinct(_word_shingles(F.col("toks")))).alias("shingle"),
@@ -187,13 +187,11 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Each token's 32 hash bits come from its first 8 md5 hex digits;
     per bit position the ±1 votes are summed and the sign forms the
-    fingerprint bit.  Pure explode→groupBy — no shuffle of text.
-    Repartitioned first: the bit-explode is CPU-bound and must not run
-    on a single input partition."""
+    fingerprint bit.  Pure explode→groupBy — no shuffle of text."""
     d = load_table(spark, sf_dir, "documents")
-    d = d.repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
+    d = spread(d, "doc_id")
     toks = d.select(
-        "doc_id", F.explode(F.array_distinct(_tokens())).alias("tok")
+        "doc_id", F.explode(F.array_distinct(tokens())).alias("tok")
     ).withColumn("th", F.md5("tok"))
     bits = toks.select(
         "doc_id",
@@ -228,7 +226,7 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (dedup_minhash_lsh_pairs), never from a full self-join."""
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 100)
     toks = d.select(
-        "doc_id", F.explode(F.array_distinct(_tokens())).alias("tok")
+        "doc_id", F.explode(F.array_distinct(tokens())).alias("tok")
     )
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     a, b = toks.alias("a"), toks.alias("b")
@@ -275,10 +273,7 @@ def dedup_components(spark: SparkSession, sf_dir: str, max_iter: int = 10) -> Da
         F.col("doc_id").cast("long").alias("doc_id")
     )
     pairs = dedup_minhash_lsh_pairs(spark, sf_dir)
-    # Checkpoint width scales with the corpus' on-disk size (one label
-    # partition per ~32 MB of source text, floored at 8 for local
-    # parallelism) — never a core-count constant.
-    parts = max(8, size_aware_parallelism(spark, sf_dir, "documents", 32 << 20))
+    parts = label_parts(sf_dir, "documents")
     return connected_components(docs, pairs, max_iter=max_iter, parts=parts)
 
 
@@ -298,9 +293,8 @@ def connected_components(
     (a wrong answer must never look like a converged one).
 
     ``parts``: materialized partition count of every round's
-    checkpoint (operators/_loop.py).  Callers derive it from the
-    input's ON-DISK size (size_aware_parallelism), so it scales with
-    the corpus instead of encoding a local core count."""
+    checkpoint (operators/_loop.py); the dedup callers pass
+    ``_parts.label_parts``."""
     edges = checkpoint(
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))),
@@ -483,7 +477,7 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
         for i in range(MINHASH_K)
     ).cast("long")
-    toked = d.select("doc_id", _tokens().alias("toks"))
+    toked = d.select("doc_id", tokens().alias("toks"))
     sizes = toked.select(
         "doc_id",
         F.size(F.array_distinct(_word_shingles(F.col("toks"))))
@@ -563,8 +557,8 @@ def _prefix_join_from(d: DataFrame) -> DataFrame:
     with both endpoints in the filter."""
     from pyspark.sql import Window
 
-    d = d.repartition(d.sparkSession.sparkContext.defaultParallelism, "doc_id")
-    toked = d.select("doc_id", _tokens().alias("toks"))
+    d = spread(d, "doc_id")
+    toked = d.select("doc_id", tokens().alias("toks"))
     toks = toked.select(
         "doc_id",
         F.explode(F.array_distinct(_word_shingles(F.col("toks")))).alias("tok"),
@@ -705,8 +699,7 @@ def dedup_semantic_components(
     pairs = dedup_embedding_neardup(spark, sf_dir).select(
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
-    # Size-derived checkpoint width — the dedup_components rule.
-    parts = max(8, size_aware_parallelism(spark, sf_dir, "embeddings", 32 << 20))
+    parts = label_parts(sf_dir, "embeddings")
     comp = connected_components(vecs, pairs, max_iter=max_iter, parts=parts)
     return comp.select(
         F.col("doc_id").alias("vec_id"),
@@ -820,8 +813,8 @@ def _substring_spans(spark: SparkSession, sf_dir: str):
     result."""
     k = SUBSTRING_K
     d = load_table(spark, sf_dir, "documents")
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    toked = d.select("doc_id", _tokens().alias("toks"))
+    d = spread(d, "doc_id")
+    toked = d.select("doc_id", tokens().alias("toks"))
     grams = (
         toked.select(
             "doc_id",
@@ -933,7 +926,7 @@ def dedup_substring_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nt = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").cast("long").alias("doc_id"),
-        F.size(_tokens()).cast("long").alias("n_tokens"),
+        F.size(tokens()).cast("long").alias("n_tokens"),
     )
     result = per_doc.join(nt, "doc_id").select(
         "doc_id",
@@ -1557,7 +1550,7 @@ def dedup_paragraph(spark: SparkSession, sf_dir: str) -> DataFrame:
     (reference row-dedup contract); granularity extension is the
     north-star corpus-curation path."""
     d = load_table(spark, sf_dir, "documents")
-    base = d.select("doc_id", _tokens().alias("toks")).withColumn(
+    base = d.select("doc_id", tokens().alias("toks")).withColumn(
         "n", F.size("toks")
     )
     paras = base.withColumn(

@@ -38,6 +38,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from decision_tree_analytics_spark.operators._parts import spread
 from decision_tree_analytics_spark.sources.tables import load_table
 
 META_SCHEMA = StructType(
@@ -165,7 +166,7 @@ def mm_byte_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     that the test payloads are ASCII text bytes, so DuckDB can
     recompute the same statistics from codepoints."""
     d = with_binary_payload(load_table(spark, sf_dir, "documents"))
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    d = spread(d, "doc_id")
     return d.select("doc_id", "payload").mapInPandas(
         _byte_stats_batches, _BYTE_STATS_SCHEMA
     )
@@ -336,7 +337,7 @@ def mm_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_a + n_b - shared >= max(n_a, n_b) >= 1 is provably nonzero
     under ANSI."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    d = spread(d, "doc_id")
     return chunk_pairs(d)
 
 

@@ -32,7 +32,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
+from decision_tree_analytics_spark.operators._parts import spread
 from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators.dedup import tokens
 from decision_tree_analytics_spark.sources.tables import load_table
 
 
@@ -610,7 +612,7 @@ def rel_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
     return d.select(
         "doc_id",
-        F.posexplode(F.split(F.lower(F.trim(F.col("text"))), " ")).alias("pos", "token"),
+        F.posexplode(tokens()).alias("pos", "token"),
     ).select("doc_id", F.col("pos").cast("long").alias("pos"), "token")
 
 
@@ -2010,10 +2012,8 @@ def rel_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from decision_tree_analytics_spark.operators._cache import tether_cache
 
     d = load_table(spark, sf_dir, "documents")
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    toks = d.select(
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), " ")).alias("tok")
-    ).persist()
+    d = spread(d, "doc_id")
+    toks = d.select(F.explode(tokens()).alias("tok")).persist()
 
     def pos_cols():
         md = F.md5(F.col("tok"))

@@ -32,6 +32,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
+from decision_tree_analytics_spark.operators._parts import spread
 from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.sources.tables import load_table
 
@@ -866,7 +867,7 @@ def sim_label_centroid_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroids are mergeable partial sums so the same plan refreshes
     incrementally."""
     e = load_table(spark, sf_dir, "embeddings")
-    e = e.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    e = spread(e, "vec_id")
     x = e.select(
         "vec_id", "label", F.posexplode("embedding").alias("i", "xf")
     ).withColumn("x", F.col("xf").cast("double"))

@@ -51,11 +51,6 @@ def salted_agg(
     return phase2
 
 
-def salt_column(n_salts: int) -> Column:
-    """Deterministic-per-run salt column for pre-salting join keys."""
-    return (F.rand(seed=42) * n_salts).cast("int")
-
-
 def hot_salted_join(
     fact: DataFrame,
     dim: DataFrame,

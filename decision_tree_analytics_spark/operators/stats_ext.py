@@ -34,6 +34,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators.dedup import tokens
 from decision_tree_analytics_spark.sources.tables import load_table
 
 US_PER_DAY = 86_400_000_000
@@ -342,9 +343,7 @@ def ns_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.explode(
-            F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), " "))
-        ).alias("tok"),
+        F.explode(F.array_distinct(tokens())).alias("tok"),
     )
     first = toks.groupBy("tok").agg(F.min("doc_id").alias("first_doc"))
     hi = d.agg((F.max("doc_id") + 1).alias("n_docs"))

@@ -18,7 +18,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
+from decision_tree_analytics_spark.operators._parts import spread
 from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators.dedup import tokens
 from decision_tree_analytics_spark.sources.tables import load_table
 
 # Tiny per-language stopword profiles (public common-word lists).
@@ -30,10 +32,6 @@ STOPWORDS = {
 }
 
 _TOKEN_REGEX = r"\w+|[^\w\s]"  # BPE-ish: words + standalone punctuation
-
-
-def _tokens(col: str = "text") -> Column:
-    return F.split(F.lower(F.trim(F.col(col))), " ")
 
 
 def _stop_hits(toks: Column, words: list[str]) -> Column:
@@ -91,7 +89,7 @@ def ns_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length, mean token length, stopword ratio, and
     a composite score — the standard cheap pre-filter for LLM corpora."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens()
     n_tokens = F.size(toks).cast("long")
     tok_len_sum = F.aggregate(
         F.transform(toks, lambda t: F.length(t)), F.lit(0), lambda acc, x: acc + x
@@ -114,7 +112,7 @@ def ns_text_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language ID by stopword-profile overlap with a fixed preference
     order (en > de > fr > es) on ties — deterministic argmax."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens()
     s = {lang: _stop_hits(toks, words) for lang, words in STOPWORDS.items()}
     return d.select(
         "doc_id",
@@ -133,7 +131,7 @@ def ns_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffles."""
     d = load_table(spark, sf_dir, "documents")
     fp = F.md5(
-        F.array_join(F.array_sort(F.array_distinct(_tokens())), " ")
+        F.array_join(F.array_sort(F.array_distinct(tokens())), " ")
     )
     return d.select("doc_id", fp.alias("fingerprint"))
 
@@ -183,11 +181,8 @@ def ns_corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    # Spread the single-file input before the gate expressions (4
-    # stopword filters per doc are CPU-bound); at real scale the scan
-    # arrives already parallel and this is a cheap hash exchange.
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    toks = _tokens()
+    d = spread(d, "doc_id")
+    toks = tokens()
     gated = d.select(
         "doc_id",
         _quality_score_col(toks).alias("quality_score"),
@@ -228,7 +223,7 @@ def ns_text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", F.lower(F.trim(F.col("text"))).alias("t"))
         .filter(F.length("t") >= WINNOW_K)
     )
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    d = spread(d, "doc_id")
     grams = d.select(
         "doc_id",
         "t",
@@ -262,7 +257,7 @@ def ns_text_tfidf_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 50)
-    toks = d.select("doc_id", F.explode(_tokens()).alias("tok"))
+    toks = d.select("doc_id", F.explode(tokens()).alias("tok"))
     n_docs = 50  # fixed slice size keeps idf deterministic and portable
     tf = toks.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("tf"))
     df_ = toks.select("doc_id", "tok").distinct().groupBy("tok").agg(
@@ -303,7 +298,7 @@ def ns_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     no shuffle at all in the whole query; chunk rows stream straight
     to the consumer (tokenizer, embedder, writer)."""
     d = load_table(spark, sf_dir, "documents")
-    base = d.select("doc_id", _tokens().alias("toks")).withColumn(
+    base = d.select("doc_id", tokens().alias("toks")).withColumn(
         "n", F.size("toks")
     )
     n_extra = F.expr(
@@ -337,7 +332,7 @@ def ns_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     # Bind tokens to a real column first — _word_shingles element_at
     # lookups would otherwise re-split the text per element.
-    toked = d.select("doc_id", _tokens().alias("toks"))
+    toked = d.select("doc_id", tokens().alias("toks"))
     sh = toked.select(
         "doc_id", _word_shingles(F.col("toks")).alias("sh")
     )
@@ -362,7 +357,7 @@ def ns_text_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle moves per-partition partial counts keyed by bigram, never
     token streams."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens()
     bigrams = F.zip_with(
         F.slice(toks, 1, F.greatest(F.size(toks) - 1, F.lit(0))),
         F.slice(toks, 2, F.greatest(F.size(toks) - 1, F.lit(0))),
@@ -534,17 +529,14 @@ def ns_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     16-byte md5 join keys (never text), benchmark side ~10% of the
     corpus; output is per-train-doc (distinct shared shingles,
     distinct benchmark docs touched) — bounded by the train count."""
-    from decision_tree_analytics_spark.operators.dedup import (
-        _tokens,
-        _word_shingles,
-    )
+    from decision_tree_analytics_spark.operators.dedup import _word_shingles
 
     d = load_table(spark, sf_dir, "documents")
     bucket = (
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
         .cast("long") % 10
     )
-    toked = d.select("doc_id", bucket.alias("bucket"), _tokens().alias("toks"))
+    toked = d.select("doc_id", bucket.alias("bucket"), tokens().alias("toks"))
     sh = toked.select(
         "doc_id",
         "bucket",
@@ -627,7 +619,7 @@ def ns_perplexity_proxy(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFr
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), " ")).alias("tok"),
+        F.explode(tokens()).alias("tok"),
     )
     vocab = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("n"))
     tot = vocab.agg(F.sum("n").cast("double").alias("nt"))
@@ -827,9 +819,7 @@ def ns_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     against, so the mix plan and the packing manifest stay consistent."""
     d = load_table(spark, sf_dir, "documents").select(
         "source",
-        F.size(F.split(F.lower(F.trim(F.col("text"))), " "))
-        .cast("long")
-        .alias("nt"),
+        F.size(tokens()).cast("long").alias("nt"),
     )
     g = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -866,7 +856,7 @@ def ns_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     with zero shuffles and the filter composes with any downstream
     pipeline for free.  ANSI: divisions guarded by nullif(wc, 0)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.filter(_tokens(), lambda w: w != "")
+    toks = F.filter(tokens(), lambda w: w != "")
     lens = F.transform(toks, lambda w: F.length(w))
     wc = F.size(toks).cast("long")
     wc_nz = F.nullif(wc, F.lit(0))
@@ -975,7 +965,7 @@ def ns_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     (fingerprint / source / lang), each over slim key columns.  All
     counts BIGINT; rates rounded 1e-6."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens()
     per_doc = d.select(
         F.size(toks).cast("long").alias("n_toks"),
         F.length("text").cast("long").alias("n_chars"),
@@ -1056,7 +1046,7 @@ def ns_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     email local part is consumed by <EMAIL>, not double-counted as an
     id (ADVICE r03)."""
     d = load_table(spark, sf_dir, "documents")
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
+    d = spread(d, "doc_id")
     contact = F.concat(
         F.col("text"),
         F.lit(" contact user"),
@@ -1550,7 +1540,6 @@ def ns_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from decision_tree_analytics_spark.operators.dedup import (
         DELTA_SPLIT,
         SUBSTRING_K,
-        _tokens,
         _word_shingles,
         fingerprint_col,
     )
@@ -1571,7 +1560,7 @@ def ns_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(store, "fingerprint", "left_anti")
         .select("doc_id")
     )
-    toked = d.select("doc_id", bucket.alias("bkt"), _tokens().alias("toks"))
+    toked = d.select("doc_id", bucket.alias("bkt"), tokens().alias("toks"))
     grams = toked.select(
         "doc_id",
         "bkt",
@@ -1694,7 +1683,7 @@ def ns_bigram_lm(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
     context total; the per-doc mean of −log₂P rounds 1e-6 at the end
     (the same summation contract every scoring query here uses)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens()
     n1 = F.greatest(F.size(toks) - 1, F.lit(0))
     pairs = F.zip_with(
         F.slice(toks, 1, n1),
@@ -1824,7 +1813,7 @@ def ns_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens()
     okey = F.md5(F.concat(F.lit("curr-"), F.col("doc_id").cast("string")))
     q = _quality_score_col(toks)
     tier = (
@@ -1951,10 +1940,8 @@ def ns_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     persisted projection; the model is a 1-row broadcast at every
     step — the full-batch GD cost model."""
     d = load_table(spark, sf_dir, "documents")
-    # Spread the single-file input before the 4-stopword-filter map
-    # (CPU-bound narrow stage; the ns_corpus_curate rule).
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    toks = _tokens()
+    d = spread(d, "doc_id")
+    toks = tokens()
     n = F.size(toks).cast("double")
     feats = d.select(
         F.when(F.col("lang") == "en", 1.0).otherwise(0.0).alias("y"),
@@ -2097,7 +2084,7 @@ def ns_boilerplate_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc-id extrema give the auditor a reproducible sample.  Ordering
     ties break on the md5 (unique key, rule 5)."""
     d = load_table(spark, sf_dir, "documents")
-    prefix = F.array_join(F.slice(_tokens(), 1, BOILERPLATE_PREFIX_TOKENS), " ")
+    prefix = F.array_join(F.slice(tokens(), 1, BOILERPLATE_PREFIX_TOKENS), " ")
     per = (
         d.select("doc_id", F.md5(prefix).alias("prefix_md5"))
         .groupBy("prefix_md5")
@@ -2248,7 +2235,7 @@ def ns_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     strictly inside its stratum.  Map-only + explode: zero shuffles
     at any corpus size."""
     d = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(_tokens()).cast("long")
+    n_tok = F.size(tokens()).cast("long")
     g = d.select("doc_id", n_tok.alias("n_tok")).filter(
         F.col("n_tok") >= SPAN_MIN_TOKENS
     )
@@ -2352,9 +2339,7 @@ def ns_manifest_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.size(F.split(F.lower(F.trim(F.col("text"))), " "))
-        .cast("long")
-        .alias("n_tok"),
+        F.size(tokens()).cast("long").alias("n_tok"),
         (
             F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
             .cast("long")
@@ -2647,9 +2632,7 @@ def ns_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents")
     per = d.select(
         "lang",
-        F.size(F.split(F.lower(F.trim(F.col("text"))), " "))
-        .cast("long")
-        .alias("ws_words"),
+        F.size(tokens()).cast("long").alias("ws_words"),
         F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit(_TOKEN_REGEX), 0))
         .cast("long")
         .alias("re_tokens"),
@@ -2724,9 +2707,7 @@ def ns_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on that bounded grid."""
     d = load_table(spark, sf_dir, "documents").select(
         "source",
-        F.size(F.split(F.lower(F.trim(F.col("text"))), " "))
-        .cast("long")
-        .alias("nt"),
+        F.size(tokens()).cast("long").alias("nt"),
     )
     g = d.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_docs"),
@@ -2834,7 +2815,7 @@ def _pref_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reward definition lives in exactly one place per engine —
     `_PREF_PER_CTE` is the oracle-side twin."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens("text")
+    toks = tokens()
     return d.select(
         "doc_id",
         "source",

@@ -38,12 +38,11 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from decision_tree_analytics_spark.operators._parts import arrow_parts, spread
 from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators.dedup import tokens
 from decision_tree_analytics_spark.operators.multimodal import with_binary_payload
-from decision_tree_analytics_spark.sources.tables import (
-    load_table,
-    size_aware_parallelism,
-)
+from decision_tree_analytics_spark.sources.tables import load_table
 
 _ZSCORE_SCHEMA = StructType(
     [
@@ -186,15 +185,7 @@ def ns_text_subword(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenizer.  Arrow-batched, stateless, no shuffle — the narrow-map
     shape of corpus tokenization at any scale."""
     d = load_table(spark, sf_dir, "documents")
-    # Single-file input = one partition = one core for a CPU-bound
-    # Python stage; spread it first — but SIZE-AWARE: each Arrow task
-    # pays a fixed worker round-trip, so the partition count follows
-    # the input bytes (unbounded at corpus scale, a handful at test
-    # scale) instead of defaultParallelism (r7 bench drift: 32 tasks
-    # for 1.5 MB was pure per-task overhead).
-    d = d.repartition(
-        size_aware_parallelism(spark, sf_dir, "documents"), "doc_id"
-    )
+    d = d.repartition(arrow_parts(sf_dir, "documents"), "doc_id")
     return d.select("doc_id", "text").mapInPandas(_subword_batch, _SUBWORD_SCHEMA)
 
 
@@ -323,14 +314,8 @@ def udf_secondary_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "user_id", F.expr("ts div 1000").alias("ts_us"), "event_id", "value"
     )
-    # SIZE-AWARE worker count (the ns_text_subword rule): each Arrow
-    # task pays a fixed worker round-trip, so partitioning the ~2 MB
-    # test-scale input to defaultParallelism made that overhead the
-    # whole wall (32-core time 3-4x the 8-core time in PERF_r14's
-    # scaling block).  Bytes-derived counts stay unbounded at corpus
-    # scale, where they exceed the core count.
     part = ev.repartition(
-        size_aware_parallelism(spark, sf_dir, "events"), "user_id"
+        arrow_parts(sf_dir, "events"), "user_id"
     ).sortWithinPartitions("user_id", "ts_us", "event_id")
     return part.mapInPandas(_seq_batches, _SEQ_SCHEMA)
 
@@ -373,8 +358,7 @@ def _infer_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def udf_batch_inference(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear-probe batch inference over the embedding corpus."""
     e = load_table(spark, sf_dir, "embeddings")
-    # Single-file input = one partition; spread the CPU-bound matmul.
-    e = e.repartition(spark.sparkContext.defaultParallelism, "vec_id")
+    e = spread(e, "vec_id")
     return e.select("vec_id", "embedding").mapInPandas(_infer_batches, _INFER_SCHEMA)
 
 
@@ -422,10 +406,8 @@ def udf_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from decision_tree_analytics_spark.operators._cache import tether_cache
 
     d = load_table(spark, sf_dir, "documents")
-    d = d.repartition(spark.sparkContext.defaultParallelism, "doc_id")
-    toks = d.select(
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), " ")).alias("tok")
-    ).persist()
+    d = spread(d, "doc_id")
+    toks = d.select(F.explode(tokens()).alias("tok")).persist()
     cands = toks.mapInPandas(_mg_partition, _HH_CAND_SCHEMA).distinct()
     tot = toks.agg(F.count(F.lit(1)).alias("n"))
     exact = (
@@ -830,8 +812,7 @@ def udf_token_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch boundaries breaks the hash.
 
     Scale: the UDTF is a NARROW per-row stage — no shuffle; input
-    sized by ``size_aware_parallelism`` (Arrow worker round-trips are
-    the fixed cost, ns_text_subword lesson).  The plan must show
+    sized by ``_parts.arrow_parts``.  The plan must show
     ``ArrowEvalPythonUDTF`` (the Arrow lane), never
     ``BatchEvalPythonUDTF`` (row-pickling) — plan-locked in
     tests/test_plans.py.  Registration (``spark.udtf.register``
@@ -860,7 +841,7 @@ def udf_token_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             & F.col("text").isNotNull()
         )
         .select("doc_id", "text")
-        .repartition(size_aware_parallelism(spark, sf_dir, "documents"))
+        .repartition(arrow_parts(sf_dir, "documents"))
     )
     docs.createOrReplaceTempView("dta_seg_docs")
     return spark.sql(

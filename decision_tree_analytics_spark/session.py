@@ -109,24 +109,21 @@ def _default_driver_memory() -> str:
 def get_spark(
     app_name: str = "decision-tree-analytics-spark",
     master: str | None = None,
-    shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
 
-    Local mode uses ``local[$SPARK_GRAFT_CPUS]`` (default 32).  On a
-    real cluster the same builder is used with ``master`` unset so
-    spark-submit's cluster manager wins.
+    Local mode uses ``local[$SPARK_GRAFT_CPUS]`` (default: the cores
+    this process may run on).  On a real cluster the same builder is
+    used with ``master`` unset so spark-submit's cluster manager wins.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     if master is None:
         master = f"local[{cpus}]"
-    if shuffle_partitions is None:
-        shuffle_partitions = max(cpus, 8)
 
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
         .config("spark.ui.enabled", "false")
         .config(
             "spark.driver.memory",

@@ -159,33 +159,6 @@ def corpus_generation_tag(sf_dir: str) -> str:
     return hashlib.md5("|".join(tags).encode()).hexdigest()
 
 
-def size_aware_parallelism(
-    spark: SparkSession, sf_dir: str, name: str,
-    per_partition_bytes: int = 2 << 20,
-) -> int:
-    """Partition count for a CPU-bound Arrow (Python) narrow stage
-    over one table: ``ceil(on_disk_bytes / per_partition_bytes)``,
-    floored at 1.  Every Arrow task pays a fixed worker round-trip
-    (~30-90 ms measured); blindly repartitioning a KB-scale input to
-    ``defaultParallelism`` makes that overhead 100% of the wall time
-    (r7 `ns_text_subword` drift: 32 tasks for 1.5 MB of text ran
-    1.0-3.1 s warm where 1-8 tasks run 0.8-1.0 s).  Size-driven
-    counts keep small inputs cheap and scale unbounded with the data
-    — at 100 TB this yields ~50k partitions of ~2 MB compressed, far
-    above defaultParallelism, which is exactly right for a CPU-heavy
-    Python stage.  On-disk size comes from the local file API here;
-    on an object store, swap for the listing's size field (no data
-    read either way)."""
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        size = sum(
-            os.path.getsize(f) for f in _glob.glob(os.path.join(path, "*.parquet"))
-        )
-    else:
-        size = os.path.getsize(path)
-    return max(1, -(-size // per_partition_bytes))
-
-
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     df = spark.read.schema(EVENTS_SCHEMA).parquet(
         os.path.join(sf_dir, "events.parquet")

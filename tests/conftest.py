@@ -15,7 +15,7 @@ def spark():
     from decision_tree_analytics_spark.session import get_spark
 
     os.environ.setdefault("SPARK_GRAFT_CPUS", "8")
-    spark = get_spark(app_name="dta-spark-tests", shuffle_partitions=8)
+    spark = get_spark(app_name="dta-spark-tests")
     yield spark
     spark.stop()
 

@@ -10,6 +10,7 @@ should be caught here first.
 
 from __future__ import annotations
 
+import hashlib
 import math
 import os
 
@@ -36,6 +37,12 @@ def duckdb_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
         path = os.path.join(sf_dir, f"{t}.parquet")
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")
     return con
+
+
+def md5_bucket(val, mod: int) -> int:
+    """Python replay of the operators' md5 bucket: the first 8 hex
+    digits of md5(str(val)) as an integer, mod ``mod``."""
+    return int(hashlib.md5(str(val).encode()).hexdigest()[:8], 16) % mod
 
 
 def _canon_cell(v) -> str:

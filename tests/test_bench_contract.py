@@ -2,8 +2,9 @@
 ~2000 bytes of output and json.loads the captured line, so the
 printed line must (a) fit that window regardless of how many bench
 entries exist and (b) keep the SURVEY headline names and the totals
-at its tail (VERDICT r8 item 4 / r9 item 7; BENCH_r08/r09 both
-recorded parsed:null before the self-truncating emitter)."""
+at its tail (VERDICT r8 item 4 / r9 item 7; the round-8 and round-9
+bench records both read parsed:null before the self-truncating
+emitter)."""
 
 from __future__ import annotations
 

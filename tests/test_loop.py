@@ -3,7 +3,8 @@
 The checkpoint width decides what partitioning the next round sees, so
 the two width forms are locked by the exchanges a consumer plans, each
 against the form it replaces or excludes.  A source guard keeps every
-``localCheckpoint`` call inside the helper.
+``localCheckpoint`` call inside the helper, and every
+``defaultParallelism`` read inside ``operators/_parts.py``.
 """
 
 from __future__ import annotations
@@ -12,6 +13,7 @@ import pathlib
 import uuid
 
 import pyspark.sql.functions as F
+import pytest
 from pyspark.sql import Window
 
 from decision_tree_analytics_spark.operators._loop import checkpoint, iterate
@@ -88,13 +90,24 @@ def test_iterate_checkpoints_every_round_but_the_last(spark):
     assert sorted(r.x for r in out.collect()) == list(range(4, 14))
 
 
-def test_no_local_checkpoint_outside_the_loop_helper():
-    helper = PACKAGE / "operators" / "_loop.py"
+@pytest.mark.parametrize(
+    "token, home",
+    [
+        ("localCheckpoint(", "_loop.py"),
+        ("defaultParallelism", "_parts.py"),
+        ("size_aware_parallelism", None),
+    ],
+    ids=["localCheckpoint", "defaultParallelism", "size_aware_parallelism"],
+)
+def test_token_only_in_its_home_module(token, home):
+    # Lineage truncation lives in _loop.py and partition counts in
+    # _parts.py; a removed helper's name must not come back.
+    helper = PACKAGE / "operators" / home if home else None
     offenders = [
         f"{path.relative_to(PACKAGE)}:{n}"
         for path in sorted(PACKAGE.rglob("*.py"))
         if path != helper
         for n, line in enumerate(path.read_text().splitlines(), 1)
-        if "localCheckpoint(" in line
+        if token in line
     ]
     assert offenders == []

@@ -7,7 +7,6 @@ the same wrong number twice."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 
 import numpy as np
@@ -35,6 +34,7 @@ from decision_tree_analytics_spark.operators.stats_ext import (
     rel_theil_sen,
 )
 from decision_tree_analytics_spark.sources.tables import load_table
+from tests.oracle_harness import md5_bucket
 
 
 def _daily_cents_by_type(spark, sf_dir):
@@ -320,10 +320,6 @@ def test_bootstrap_ci_brackets_point_estimate(spark, sf_dir):
         assert (r["ci_hi"] - r["ci_lo"]) < 0.4 * r["mean_value"]
 
 
-def _md5_bucket(val, mod):
-    return int(hashlib.md5(str(val).encode()).hexdigest()[:8], 16) % mod
-
-
 # ------------------------------------------------------------------
 # rel_cuped
 # ------------------------------------------------------------------
@@ -344,7 +340,7 @@ def test_cuped_theta_pooled_and_means_exact(spark, sf_dir):
     per["x"] = p[p.day < CUPED_CUT_DAY].groupby("user_id").cents.sum()
     per["y"] = p[p.day >= CUPED_CUT_DAY].groupby("user_id").cents.sum()
     per = per.fillna(0).astype(int).reset_index()
-    per["arm"] = per.user_id.map(lambda u: _md5_bucket(u, 2))
+    per["arm"] = per.user_id.map(lambda u: md5_bucket(u, 2))
     for arm, grp in per.groupby("arm"):
         assert out.loc[arm, "n_users"] == len(grp)
         assert out.loc[arm, "mean_y"] == pytest.approx(
@@ -364,7 +360,7 @@ def test_sprt_replays_in_pandas(spark, sf_dir):
     out = ml_sprt_monitor(spark, sf_dir).toPandas().set_index("arm")
     ev = load_table(spark, sf_dir, "events").toPandas()
     ev["day"] = ev["ts"] // 1000 // 86400000000
-    ev["arm"] = ev.user_id.map(lambda u: _md5_bucket(u, 2))
+    ev["arm"] = ev.user_id.map(lambda u: md5_bucket(u, 2))
     ev["x"] = (ev.event_type == "purchase").astype(int)
     for arm, grp in ev.groupby("arm"):
         daily = grp.groupby("day").x.agg(["sum", "count"]).sort_index()

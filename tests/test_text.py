@@ -7,7 +7,6 @@ registration."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 import re
 
@@ -37,6 +36,7 @@ from decision_tree_analytics_spark.operators.text import (
     ns_rejection_sample,
 )
 from decision_tree_analytics_spark.sources.tables import load_table
+from tests.oracle_harness import md5_bucket
 
 
 def test_boilerplate_prefix_counts_match_pandas(spark, sf_dir):
@@ -120,10 +120,6 @@ def test_span_corruption_spans_stay_in_stratum_and_doc(spark, sf_dir):
 TOKEN_RE = re.compile(r"\w+|[^\w\s]")
 
 
-def _md5_bucket(val, mod):
-    return int(hashlib.md5(str(val).encode()).hexdigest()[:8], 16) % mod
-
-
 # ------------------------------------------------------------------
 # ns_manifest_diff
 # ------------------------------------------------------------------
@@ -132,7 +128,7 @@ def _md5_bucket(val, mod):
 def _manifest_gens(docs: pd.DataFrame):
     d = docs.copy()
     d["n_tok"] = d["text"].map(lambda t: len(str(t).lower().strip().split(" ")))
-    d["bucket"] = d["doc_id"].map(lambda i: _md5_bucket(i, MDIFF_BUCKETS))
+    d["bucket"] = d["doc_id"].map(lambda i: md5_bucket(i, MDIFF_BUCKETS))
     g1 = d[(d.bucket != 0) & (d.n_tok >= MDIFF_G1_GATE)].copy()
     g1["tier"] = g1.n_tok.map(lambda n: "high" if n >= MDIFF_G1_HIGH else "mid")
     g2 = d[(d.bucket != 1) & (d.n_tok >= MDIFF_G2_GATE)].copy()
