@@ -3,18 +3,22 @@
 Reference semantics (SURVEY §1.4, SparkMLTrainer.java:129-146 /
 SparkMLPredictor.java:140-154): a null feature is omitted from the
 sparse vector while still occupying its slot — observationally
-null ≡ 0.0.  ``VectorAssembler(handleInvalid=...)`` cannot express
-this (skip drops the row, error fails, keep yields NaN), so every
-feature is wrapped in ``coalesce(cast(c AS double), 0.0)`` *before*
-assembly — a pure Catalyst projection, fully codegen'd.
+null ≡ 0.0.  MLlib's assembler stage cannot express this
+(``handleInvalid`` skip drops the row, error fails, keep yields NaN),
+so the vector is built directly: one projection that appends
+``array_to_vector(array(coalesce(cast(c AS double), 0.0), …))`` —
+no temporary columns, and the same values as a sparse vector would
+hold.
 
-Categorical features are declared by attaching ML nominal-attribute
-metadata to the assembled vector column — the DataFrame-native
-equivalent of mllib's ``categoricalFeaturesInfo`` map
-(DecisionTreeTrainer.java:53-55).  ``pyspark.ml``'s tree reads arity
-from this metadata and (like the reference, which expects the run to
-FAIL on understated cardinality, DecisionTreeRegressionTest.java:237-275)
-rejects out-of-range category values at fit time.
+The column always carries ML attribute-group metadata (``num_attrs``,
+numeric and nominal attributes), so a tree reads the feature count
+and categorical arity without a Spark job.  Nominal attributes are
+the DataFrame-native equivalent of mllib's ``categoricalFeaturesInfo``
+map (DecisionTreeTrainer.java:53-55).  ``pyspark.ml``'s tree reads
+arity from this metadata and (like the reference, which expects the
+run to FAIL on understated cardinality,
+DecisionTreeRegressionTest.java:237-275) rejects out-of-range category
+values at fit time.
 
 Scale: assembly is a narrow map — no shuffle; at 100 TB it pipelines
 into whatever the downstream estimator/scorer needs.
@@ -23,7 +27,7 @@ into whatever the downstream estimator/scorer needs.
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-from pyspark.ml.feature import VectorAssembler
+from pyspark.ml.functions import array_to_vector
 from pyspark.sql import DataFrame
 
 FEATURES_COL = "__features__"
@@ -59,22 +63,9 @@ def assemble_features(
 ) -> DataFrame:
     """Append a vector column assembled from ``feature_list`` (in
     vector-index order) with null ≡ 0.0 semantics."""
-    categorical_info = categorical_info or {}
     ordered = [n for n, _ in sorted(feature_list.items(), key=lambda kv: kv[1])]
-
-    tmp_cols = [f"__f_{n}" for n in ordered]
-    prepared = df
-    for name, tmp in zip(ordered, tmp_cols):
-        prepared = prepared.withColumn(
-            tmp, F.coalesce(F.col(name).cast("double"), F.lit(0.0))
-        )
-
-    assembler = VectorAssembler(inputCols=tmp_cols, outputCol=output_col)
-    assembled = assembler.transform(prepared).drop(*tmp_cols)
-
-    if categorical_info:
-        meta = _attrs_metadata(feature_list, categorical_info)
-        assembled = assembled.withColumn(
-            output_col, F.col(output_col).alias(output_col, metadata=meta)
-        )
-    return assembled
+    vector = array_to_vector(
+        F.array(*(F.coalesce(F.col(n).cast("double"), F.lit(0.0)) for n in ordered))
+    )
+    meta = _attrs_metadata(feature_list, categorical_info or {})
+    return df.select("*", vector.alias(output_col, metadata=meta))

@@ -3,8 +3,8 @@
 
 Reference dataflow (SparkMLPredictor.java:107-157):
 
-* stage init loads the model, hard-failing with the reference's exact
-  message when the location is absent (:113-116);
+* stage init loads the model once, hard-failing with the reference's
+  exact message when the location is absent (:113-116);
 * every record is scored (no rows dropped), null features ≡ 0.0;
 * output schema = input schema + ``predictionField`` double (O12).
 
@@ -14,18 +14,23 @@ captures the plugin object, SURVEY §3.2).  Here ``model.transform``
 is pure JVM — Spark broadcasts the tree once per executor and the
 scoring projection is codegen'd; no Python or closure shipping in the
 hot path.
+
+The model comes from ``registry.load_model``: when this Spark
+application pinned the same saved files (the trainer pins what it
+saves, a load pins what it reads), stage init is a file digest and a
+model copy with no Spark job; otherwise it is one three-job
+``DecisionTreeRegressionModel.load``.  The copy is this stage's own, so
+setting its feature and prediction columns touches no other holder of
+the tree.
 """
 
 from __future__ import annotations
 
-import os
-
-from pyspark.ml.regression import DecisionTreeRegressionModel
 from pyspark.sql import DataFrame
 
 from decision_tree_analytics_spark.config import PredictorConfig
-from decision_tree_analytics_spark.errors import ModelNotFoundError
 from decision_tree_analytics_spark.ml.features import FEATURES_COL, assemble_features
+from decision_tree_analytics_spark.ml.registry import load_model
 
 
 class DecisionTreePredictorStage:
@@ -34,10 +39,7 @@ class DecisionTreePredictorStage:
     def __init__(self, config: PredictorConfig, base_dir: str) -> None:
         self.config = config
         self.base_dir = base_dir
-        model_path = config.resolve_model_path(base_dir)
-        if not os.path.exists(model_path):
-            raise ModelNotFoundError.at(model_path)
-        self.model = DecisionTreeRegressionModel.load(model_path)
+        self.model = load_model(config.resolve_model_path(base_dir))
 
     def transform(self, df: DataFrame) -> DataFrame:
         cfg = self.config
@@ -51,7 +53,6 @@ class DecisionTreePredictorStage:
             self.model.setFeaturesCol(FEATURES_COL)
             .setPredictionCol(cfg.prediction_field)
             .transform(assembled)
-            .drop(FEATURES_COL)
         )
         # O12: output schema = input + prediction field (double).
         return scored.select(*df.columns, cfg.prediction_field)

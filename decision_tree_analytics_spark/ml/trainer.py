@@ -10,7 +10,10 @@ Pipeline (SparkMLTrainer.java:111-153 → DataFrame-native):
 5. cache before the iterative tree algorithm (O6, :147);
 6. ``DecisionTreeRegressor(impurity='variance', maxDepth, maxBins)``
    (O8, DecisionTreeTrainer.java:42-43,56-57 — impurity is fixed);
-7. save to FileSet-style path base/<fileSetName>[/<path>] (O9, :148-152).
+7. save to FileSet-style path base/<fileSetName>[/<path>] (O9, :148-152)
+   through ``registry.save_model``, which also pins the model in the
+   driver: a predictor built on that path in the same Spark application
+   takes a copy of the pinned tree and runs no Spark job to load it.
 
 Scale: tree training is Spark ML's distributed histogram algorithm —
 per-level candidate-split statistics are computed map-side and
@@ -28,6 +31,7 @@ from pyspark.sql import DataFrame
 from decision_tree_analytics_spark import schema as S
 from decision_tree_analytics_spark.config import TrainerConfig
 from decision_tree_analytics_spark.ml.features import FEATURES_COL, assemble_features
+from decision_tree_analytics_spark.ml.registry import save_model
 
 
 class DecisionTreeTrainerStage:
@@ -67,5 +71,5 @@ class DecisionTreeTrainerStage:
         finally:
             training.unpersist()
 
-        model.write().overwrite().save(cfg.resolve_model_path(self.base_dir))  # O9
+        save_model(model, cfg.resolve_model_path(self.base_dir), overwrite=True)  # O9
         return model

@@ -23,6 +23,9 @@ distributed file scan with an explicit schema (no inference pass over
 from __future__ import annotations
 
 import os
+import shutil
+import uuid
+from collections.abc import Callable
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
@@ -35,13 +38,14 @@ from pyspark.sql.types import (
 )
 
 from decision_tree_analytics_spark.sources.formats import read_csv, read_json, read_orc
+from decision_tree_analytics_spark.sources.snapshots import CHECKOUT_WAREHOUSE
 from decision_tree_analytics_spark.sources.tables import (
     load_table,
     parquet_footer_tag,
 )
 
 _IO_ROOT_ENV = "SPARK_GRAFT_IO_CACHE_DIR"
-_IO_ROOT_DEFAULT = "/root/repo/spark-warehouse/io_cache"
+_IO_ROOT_DEFAULT = os.path.join(CHECKOUT_WAREHOUSE, "io_cache")
 
 
 def _fixture_dir(sf_dir: str, table: str, fmt: str) -> str:
@@ -52,6 +56,28 @@ def _fixture_dir(sf_dir: str, table: str, fmt: str) -> str:
     tag = parquet_footer_tag(os.path.join(sf_dir, f"{table}.parquet"))
     root = os.environ.get(_IO_ROOT_ENV, _IO_ROOT_DEFAULT)
     return os.path.join(root, f"{table}_{fmt}_{tag}")
+
+
+def _build_once(path: str, write: Callable[[str], None]) -> str:
+    """Return ``path``, first building it with ``write`` if absent.
+
+    ``write(tmp)`` fills a unique temporary sibling, which is renamed
+    into place, so a fixture directory only ever appears complete.  Of
+    concurrent builders (other threads, other checkouts' runs) the
+    first rename wins: renaming onto a non-empty directory fails, and
+    the loser deletes its copy and reads the winner's."""
+    if not os.path.isdir(path):
+        tmp = f"{path}.{uuid.uuid4().hex}.tmp"
+        try:
+            write(tmp)
+            try:
+                os.rename(tmp, path)
+            except OSError:
+                if not os.path.isdir(path):
+                    raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+    return path
 
 
 _ORDERS_CSV_SCHEMA = StructType(
@@ -75,11 +101,13 @@ def src_csv_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders through the CSV reader: write the 3-column slice once,
     read it back with an explicit schema (header on, no inference),
     aggregate per priority."""
-    path = _fixture_dir(sf_dir, "orders", "csv")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_orderpriority", "o_totalprice"
-        ).write.mode("overwrite").option("header", "true").csv(path)
+    path = _build_once(
+        _fixture_dir(sf_dir, "orders", "csv"),
+        lambda tmp: load_table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_orderpriority", "o_totalprice")
+        .write.option("header", "true")
+        .csv(tmp),
+    )
     df = read_csv(spark, path, _ORDERS_CSV_SCHEMA, header=True)
     return df.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
@@ -92,11 +120,12 @@ def src_csv_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def src_json_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Events through the JSON-lines reader: same write-once /
     schema-pinned read-back shape as src_csv_orders."""
-    path = _fixture_dir(sf_dir, "events", "json")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        load_table(spark, sf_dir, "events").select(
-            "event_id", "event_type", "value"
-        ).write.mode("overwrite").json(path)
+    path = _build_once(
+        _fixture_dir(sf_dir, "events", "json"),
+        lambda tmp: load_table(spark, sf_dir, "events")
+        .select("event_id", "event_type", "value")
+        .write.json(tmp),
+    )
     df = read_json(spark, path, _EVENTS_JSON_SCHEMA)
     return df.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -111,11 +140,12 @@ def src_orc_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     from this container; see CLAUDE.md).  ORC carries real types in
     the file footer, so the read needs no pinned schema — drift would
     surface as a hash mismatch on the aggregate."""
-    path = _fixture_dir(sf_dir, "lineitem", "orc")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice"
-        ).write.mode("overwrite").orc(path)
+    path = _build_once(
+        _fixture_dir(sf_dir, "lineitem", "orc"),
+        lambda tmp: load_table(spark, sf_dir, "lineitem")
+        .select("l_orderkey", "l_returnflag", "l_quantity", "l_extendedprice")
+        .write.orc(tmp),
+    )
     df = read_orc(spark, path)
     return df.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -145,21 +175,21 @@ def _bucketed_fixture(
     CLUSTERED BY DDL."""
     tag = parquet_footer_tag(os.path.join(sf_dir, f"{table}.parquet"))
     root = os.environ.get(_IO_ROOT_ENV, _IO_ROOT_DEFAULT)
-    path = os.path.join(root, f"{table}_bucketed_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        tmp = f"tmp_bucket_writer_{table}_{tag}"
+
+    def write(tmp: str) -> None:
+        writer = f"tmp_bucket_writer_{uuid.uuid4().hex}"
         (
             load_table(spark, sf_dir, table)
             .select(*cols)
             .repartition(1)
             .write.bucketBy(_BUCKETS, key)
             .sortBy(key)
-            .option("path", path)
-            .mode("overwrite")
-            .saveAsTable(tmp)
+            .option("path", tmp)
+            .saveAsTable(writer)
         )
-        spark.sql(f"DROP TABLE IF EXISTS {tmp}")  # keep the files
-    return path, tag
+        spark.sql(f"DROP TABLE IF EXISTS {writer}")  # keep the files
+
+    return _build_once(os.path.join(root, f"{table}_bucketed_{tag}"), write), tag
 
 
 def bucketed_join_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -229,17 +259,13 @@ def partitioned_orders_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-partitioned orders fixture (partitionBy o_orderpriority,
     written once per corpus generation) read back as a partition-aware
     parquet source."""
-    tag = parquet_footer_tag(os.path.join(sf_dir, "orders.parquet"))
-    root = os.environ.get(_IO_ROOT_ENV, _IO_ROOT_DEFAULT)
-    path = os.path.join(root, f"orders_partitioned_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
-            .write.mode("overwrite")
-            .partitionBy("o_orderpriority")
-            .parquet(path)
-        )
+    path = _build_once(
+        _fixture_dir(sf_dir, "orders", "partitioned"),
+        lambda tmp: load_table(spark, sf_dir, "orders")
+        .select("o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority")
+        .write.partitionBy("o_orderpriority")
+        .parquet(tmp),
+    )
     return spark.read.parquet(path)
 
 
@@ -336,21 +362,20 @@ def src_schema_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     mergeSchema is a FOOTER-ONLY pass (one ranged read per file, the
     same metadata parquet readers already fetch) — no data scan to
     reconcile schemas.  The fixture is written once per testdata
-    generation (footer-tag identity, self-healing on partial writes);
+    generation (footer-tag identity, built aside and renamed into place);
     the read is a plain schema-merged scan + one mergeable aggregate."""
-    base = _fixture_dir(sf_dir, "customer", "evo")
-    v1, v2 = os.path.join(base, "v1"), os.path.join(base, "v2")
-    if not (
-        os.path.exists(os.path.join(v1, "_SUCCESS"))
-        and os.path.exists(os.path.join(v2, "_SUCCESS"))
-    ):
+
+    def write(tmp: str) -> None:
         c = load_table(spark, sf_dir, "customer")
         c.filter(F.col("c_custkey") % 2 == 0).select(
             "c_custkey", "c_acctbal"
-        ).write.mode("overwrite").parquet(v1)
+        ).write.parquet(os.path.join(tmp, "v1"))
         c.filter(F.col("c_custkey") % 2 == 1).select(
             "c_custkey", "c_acctbal", "c_mktsegment"
-        ).write.mode("overwrite").parquet(v2)
+        ).write.parquet(os.path.join(tmp, "v2"))
+
+    base = _build_once(_fixture_dir(sf_dir, "customer", "evo"), write)
+    v1, v2 = os.path.join(base, "v1"), os.path.join(base, "v2")
     df = spark.read.option("mergeSchema", "true").parquet(v1, v2)
     return (
         df.select(
@@ -409,22 +434,18 @@ def src_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: write-once fixture; the read is a schema-pinned parallel
     scan, corruption detection is per-row (no extra pass), and the
     audit is one mergeable aggregate."""
-    base = _fixture_dir(sf_dir, "orders", "badcsv")
-    good_dir = os.path.join(base, "good")
-    bad_file = os.path.join(base, "bad.csv")
-    if not (
-        os.path.exists(os.path.join(good_dir, "_SUCCESS"))
-        and os.path.exists(bad_file)
-    ):
+
+    def write(tmp: str) -> None:
         load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_orderpriority", "o_totalprice"
-        ).write.mode("overwrite").csv(good_dir)
-        os.makedirs(base, exist_ok=True)
-        tmp = bad_file + ".tmp"
-        with open(tmp, "w") as f:
+        ).write.csv(os.path.join(tmp, "good"))
+        with open(os.path.join(tmp, "bad.csv"), "w") as f:
             for i in range(N_MALFORMED):
                 f.write(f"corrupt{i},BROKEN-PRIORITY,not_a_number_{i}\n")
-        os.replace(tmp, bad_file)  # atomic: readers never see a partial file
+
+    base = _build_once(_fixture_dir(sf_dir, "orders", "badcsv"), write)
+    good_dir = os.path.join(base, "good")
+    bad_file = os.path.join(base, "bad.csv")
     df = (
         spark.read.schema(_MALFORMED_SCHEMA)
         .option("mode", "PERMISSIVE")

@@ -41,6 +41,11 @@ from pyspark.sql import DataFrame, SparkSession
 from decision_tree_analytics_spark.session import prepare_session
 
 _LATEST = "_latest"
+# spark-warehouse/ at the root of the checkout this package runs from.
+CHECKOUT_WAREHOUSE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "spark-warehouse",
+)
 
 
 def snapshot_root() -> str:
@@ -49,7 +54,7 @@ def snapshot_root() -> str:
     labels, the cdc events fixtures) must use this so an env override
     or a default change moves them all together."""
     return os.environ.get(
-        "SPARK_GRAFT_SNAPSHOT_DIR", "/root/repo/spark-warehouse/snapshots"
+        "SPARK_GRAFT_SNAPSHOT_DIR", os.path.join(CHECKOUT_WAREHOUSE, "snapshots")
     )
 
 

@@ -3,8 +3,9 @@
 The checkpoint width decides what partitioning the next round sees, so
 the two width forms are locked by the exchanges a consumer plans, each
 against the form it replaces or excludes.  A source guard keeps every
-``localCheckpoint`` call inside the helper, and every
-``defaultParallelism`` read inside ``operators/_parts.py``.
+``localCheckpoint`` call inside the helper, every
+``defaultParallelism`` read inside ``operators/_parts.py``, and every
+tree save and load inside ``ml/registry.py``.
 """
 
 from __future__ import annotations
@@ -93,16 +94,27 @@ def test_iterate_checkpoints_every_round_but_the_last(spark):
 @pytest.mark.parametrize(
     "token, home",
     [
-        ("localCheckpoint(", "_loop.py"),
-        ("defaultParallelism", "_parts.py"),
+        ("localCheckpoint(", "operators/_loop.py"),
+        ("defaultParallelism", "operators/_parts.py"),
         ("size_aware_parallelism", None),
+        ("DecisionTreeRegressionModel.load(", "ml/registry.py"),
+        (".write()", "ml/registry.py"),
+        ("VectorAssembler", None),
     ],
-    ids=["localCheckpoint", "defaultParallelism", "size_aware_parallelism"],
+    ids=[
+        "localCheckpoint",
+        "defaultParallelism",
+        "size_aware_parallelism",
+        "model_load",
+        "model_write",
+        "VectorAssembler",
+    ],
 )
 def test_token_only_in_its_home_module(token, home):
-    # Lineage truncation lives in _loop.py and partition counts in
-    # _parts.py; a removed helper's name must not come back.
-    helper = PACKAGE / "operators" / home if home else None
+    # Lineage truncation lives in _loop.py, partition counts in
+    # _parts.py, and tree save/load in ml/registry.py (which pins what
+    # it saves and loads); a removed helper's name must not come back.
+    helper = PACKAGE / home if home else None
     offenders = [
         f"{path.relative_to(PACKAGE)}:{n}"
         for path in sorted(PACKAGE.rglob("*.py"))

@@ -4,6 +4,8 @@ flight fixture) plus the behavioral contracts from FIXTURES.md §A3."""
 
 from __future__ import annotations
 
+import uuid
+
 import pyspark.sql.functions as F
 import pytest
 from pyspark.sql.types import DoubleType
@@ -141,6 +143,83 @@ def test_understated_cardinality_fails(spark, model_dir):
     )
     with pytest.raises(Exception):
         DecisionTreeTrainerStage(cfg, model_dir).run(flights.flight_train_df(spark))
+
+
+def _jobs_run_by(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it started,
+    counted in a fresh job group."""
+    sc = spark.sparkContext
+    group = f"model-pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _train(spark, model_dir, name, max_depth):
+    cfg = TrainerConfig(
+        file_set_name=name,
+        feature_fields_to_include=flights.TRAINER_FEATURES,
+        cardinality_mapping="dofW:7",
+        label_field="delayed",
+        max_depth=max_depth,
+    )
+    return DecisionTreeTrainerStage(cfg, model_dir).run(flights.flight_train_df(spark))
+
+
+def _predictor(model_dir, name, prediction_field="delayed"):
+    cfg = PredictorConfig(
+        file_set_name=name,
+        feature_fields_to_exclude=flights.PREDICTOR_EXCLUDES,
+        prediction_field=prediction_field,
+    )
+    return DecisionTreePredictorStage(cfg, model_dir)
+
+
+def test_predictor_on_a_just_trained_path_runs_no_job(spark, model_dir):
+    # The trainer pins what it saves; loading it back would cost three
+    # Spark jobs (metadata first(), data parquet read and collect).
+    _train(spark, model_dir, "pin-fresh", max_depth=4)
+    stage, jobs = _jobs_run_by(spark, lambda: _predictor(model_dir, "pin-fresh"))
+    assert jobs == 0
+    assert stage.transform(flights.flight_predict_df(spark)).count() == 6
+
+
+def test_retrained_path_scores_with_the_new_tree(spark, model_dir):
+    deep = _train(spark, model_dir, "pin-retrain", max_depth=9)
+    assert _predictor(model_dir, "pin-retrain").model.depth == deep.depth
+    shallow = _train(spark, model_dir, "pin-retrain", max_depth=2)
+    assert shallow.depth < deep.depth
+    stage = _predictor(model_dir, "pin-retrain")
+    assert stage.model.depth == shallow.depth
+    df = flights.flight_predict_df(spark)
+    got = [r.delayed for r in stage.transform(df).orderBy("flightNum").collect()]
+    want = (
+        shallow.transform(assemble_features(df, stage.config.validate(df.schema)))
+        .orderBy("flightNum")
+        .collect()
+    )
+    assert got == [r.prediction for r in want]
+
+
+def test_predictors_on_one_pinned_model_keep_their_own_columns(spark, model_dir):
+    trained = _train(spark, model_dir, "pin-shared", max_depth=4)
+    a = _predictor(model_dir, "pin-shared", "p_a")
+    b = _predictor(model_dir, "pin-shared", "p_b")
+    df = flights.flight_predict_df(spark)
+    out_a, out_b = a.transform(df), b.transform(df)
+    assert out_a.columns == df.columns + ["p_a"]
+    assert out_b.columns == df.columns + ["p_b"]
+    assert out_a.orderBy("flightNum").select("p_a").collect() == (
+        out_b.orderBy("flightNum").select(F.col("p_b").alias("p_a")).collect()
+    )
+    # Scoring set the copies' columns, not the trainer's model's.
+    assert trained.getPredictionCol() == "prediction"
+    assert trained.getFeaturesCol() == "__features__"
 
 
 def test_feature_importance_properties(spark, sf_dir):

@@ -9,7 +9,8 @@ import pytest
 from decision_tree_analytics_spark.config import PredictorConfig, TrainerConfig
 from decision_tree_analytics_spark.errors import ModelNotFoundError
 from decision_tree_analytics_spark.ml.predictor import DecisionTreePredictorStage
-from decision_tree_analytics_spark.ml.registry import ModelRegistry
+from decision_tree_analytics_spark.ml import registry as registry_module
+from decision_tree_analytics_spark.ml.registry import ModelRegistry, load_model
 from decision_tree_analytics_spark.ml.trainer import DecisionTreeTrainerStage
 from tests.fixtures import flights
 
@@ -87,3 +88,24 @@ def test_predictor_missing_version_message(registry):
         "Failed to find model to use for classification."
         f" Location does not exist: {registry.model_dir('flights')}/v0042."
     )
+
+
+def test_pin_of_another_application_is_not_served(spark, registry, monkeypatch):
+    path = registry.resolve("flights")
+    load_model(path)  # pinned under this application
+    app_id, digest = registry_module._pin_key(path)
+    with registry_module._pinned_lock:
+        model = registry_module._pinned.pop((app_id, digest))
+        registry_module._pinned[("local-stopped", digest)] = model
+    loads = []
+    real_load = registry_module.DecisionTreeRegressionModel.load
+    monkeypatch.setattr(
+        registry_module.DecisionTreeRegressionModel,
+        "load",
+        staticmethod(lambda p: loads.append(p) or real_load(p)),
+    )
+    assert load_model(path).numNodes == model.numNodes
+    assert loads == [path]
+    # The miss pinned the fresh load, so the next call is served.
+    load_model(path)
+    assert loads == [path]

@@ -1,7 +1,11 @@
 """Source and format operators: schema-merge generations, malformed
-CSV accounting and the Python DataSource reader."""
+CSV accounting, the Python DataSource reader and concurrent fixture
+builds."""
 
 from __future__ import annotations
+
+import os
+from concurrent.futures import ThreadPoolExecutor
 
 import pyspark.sql.functions as F
 
@@ -61,3 +65,25 @@ def test_python_datasource_generates_every_partition_once(spark, sf_dir):
     # id range proves no partition was dropped or duplicated
     assert min(r["min_id"] for r in rows.values()) == 0
     assert max(r["max_id"] for r in rows.values()) == total - 1
+
+
+def test_concurrent_fixture_builds_leave_one_copy(spark, sf_dir, tmp_path, monkeypatch):
+    # Two builders of one fixture must not both commit part files (every
+    # later read would count each row twice) nor leave a temporary copy.
+    from decision_tree_analytics_spark.operators.source_io import (
+        _EVENTS_JSON_SCHEMA,
+        _fixture_dir,
+        src_json_events,
+    )
+    from decision_tree_analytics_spark.sources.formats import read_json
+
+    cache = tmp_path / "io_cache"
+    monkeypatch.setenv("SPARK_GRAFT_IO_CACHE_DIR", str(cache))
+    with ThreadPoolExecutor(2) as pool:
+        builds = [pool.submit(src_json_events, spark, sf_dir) for _ in range(2)]
+        for build in builds:
+            build.result(timeout=300)
+    path = _fixture_dir(sf_dir, "events", "json")
+    assert os.listdir(cache) == [os.path.basename(path)]
+    n = read_json(spark, path, _EVENTS_JSON_SCHEMA).count()
+    assert n == load_table(spark, sf_dir, "events").count()
