@@ -97,7 +97,7 @@ def rel_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "day",
         F.coalesce(F.col("n_events"), F.lit(0)).cast("long").alias("n_events"),
-        (F.floor(filled * 1e6 + 0.5) / 1e6).alias("filled_value"),
+        round6(filled).alias("filled_value"),
     )
 
 
@@ -1083,17 +1083,10 @@ def rel_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pair_supp",
             "supp_a",
             "supp_b",
-            (F.floor(F.col("pair_supp") / F.col("supp_a") * 1e6 + 0.5) / 1e6).alias(
-                "conf_ab"
-            ),
-            (
-                F.floor(
-                    (F.col("pair_supp") / F.col("supp_a"))
-                    * (F.col("n_baskets") / F.col("supp_b"))
-                    * 1e6
-                    + 0.5
-                )
-                / 1e6
+            round6(F.col("pair_supp") / F.col("supp_a")).alias("conf_ab"),
+            round6(
+                (F.col("pair_supp") / F.col("supp_a"))
+                * (F.col("n_baskets") / F.col("supp_b"))
             ).alias("lift"),
         )
     )

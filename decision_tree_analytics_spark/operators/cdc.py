@@ -29,6 +29,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
+from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.sources.tables import load_table
 
 BASE_MAX = 400
@@ -256,7 +257,7 @@ def snap_incremental_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta = table.read_incremental(v1, v2)
     return delta.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_new"),
-        (F.floor(F.sum("value") * 1e6 + 0.5) / 1e6).alias("sum_value"),
+        round6(F.sum("value")).alias("sum_value"),
     )
 
 
@@ -281,7 +282,7 @@ def snap_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, v1, _v2 = _events_tt_table(spark, sf_dir)
     old = table.read(v1).groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_v1"),
-        (F.floor(F.sum("value") * 1e6 + 0.5) / 1e6).alias("sum_v1"),
+        round6(F.sum("value")).alias("sum_v1"),
     )
     cur = (
         table.read()
@@ -453,7 +454,7 @@ def cdc_changelog_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("op").alias("last_op"),
         F.when(F.col("op") == "D", 0).otherwise(1).cast("long").alias("alive"),
         F.col("event_id").cast("long").alias("last_event_id"),
-        (F.floor(F.col("value") * 1e6 + 0.5) / 1e6).alias("last_value"),
+        round6(F.col("value")).alias("last_value"),
     )
 
 

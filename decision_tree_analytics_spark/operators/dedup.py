@@ -394,28 +394,15 @@ def dedup_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets (similarity.sim_ann_buckets), confirmed by exact cosine ≥
     0.9.  The quadratic stage only ever sees same-bucket candidates —
     the embedding twin of MinHash-LSH → Jaccard-verify."""
-    from decision_tree_analytics_spark.operators.similarity import (
-        _dot,
-        _norm,
-        _vecd,
-        sim_ann_buckets,
-    )
+    from decision_tree_analytics_spark.operators.similarity import _bucket_pairs, _cos
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vecd("embedding").alias("v")
-    )
-    both = emb.join(sim_ann_buckets(spark, sf_dir), "vec_id").persist()
-    a = both.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"), "bucket")
-    b = both.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), "bucket")
-    pairs = a.join(b, ["bucket"]).filter(F.col("id_a") < F.col("id_b"))
+    pairs, both = _bucket_pairs(spark, sf_dir)
     result = (
-        pairs.select(
+        pairs.filter(F.col("id_a") < F.col("id_b"))
+        .select(
             F.col("id_a").cast("long").alias("vec_a"),
             F.col("id_b").cast("long").alias("vec_b"),
-            round6(
-                _dot(F.col("va"), F.col("vb"))
-                / (_norm(F.col("va")) * _norm(F.col("vb")))
-            ).alias("cos_sim"),
+            round6(_cos("va", "vb")).alias("cos_sim"),
         )
         .filter(F.col("cos_sim") >= 0.9)
         .distinct()
@@ -505,8 +492,8 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_agree",
             "n_sh_a",
             "n_sh_b",
-            (F.floor(j * 1e6 + 0.5) / 1e6).alias("est_jaccard"),
-            (F.floor(cont * 1e6 + 0.5) / 1e6).alias("est_containment"),
+            round6(j).alias("est_jaccard"),
+            round6(cont).alias("est_containment"),
         )
     )
     return tether_cache(result, wide)
@@ -613,9 +600,7 @@ def _prefix_join_from(d: DataFrame) -> DataFrame:
             F.col("n_inter").cast("long").alias("n_inter"),
             F.col("n_a").cast("long").alias("n_a"),
             F.col("n_b").cast("long").alias("n_b"),
-            (F.floor(F.col("n_inter") / union_n * 1e6 + 0.5) / 1e6).alias(
-                "jaccard"
-            ),
+            round6(F.col("n_inter") / union_n).alias("jaccard"),
         )
     )
     return tether_cache(result, toks)
@@ -934,7 +919,7 @@ def dedup_substring_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dup_tokens",
         "n_tokens",
         (
-            F.floor(F.col("dup_tokens") / F.col("n_tokens") * 1e6 + 0.5) / 1e6
+            round6(F.col("dup_tokens") / F.col("n_tokens"))
         ).alias("dup_frac"),  # n_tokens ≥ K for any doc with a span
     )
     return tether_cache(result, *caches)
@@ -1158,19 +1143,12 @@ ORACLES = {
 
 def _embedding_neardup_oracle() -> str:
     from decision_tree_analytics_spark.operators.similarity import (
-        _SQL_EXPLODED,
         _SQL_NORMS,
-        _sql_planes_values,
+        _SQL_SRP_BUCKETS,
     )
 
     return (
-        f"WITH planes(p, i, s) AS (VALUES {_sql_planes_values()}),"
-        f" e AS ({_SQL_EXPLODED}),"
-        " pdots AS (SELECT e.vec_id, pl.p, sum(e.x * pl.s) AS dot"
-        "   FROM e JOIN planes pl ON e.i = pl.i + 1 GROUP BY 1, 2),"
-        " buckets AS (SELECT vec_id,"
-        "   sum(CASE WHEN dot > 0 THEN CAST(pow(2, p) AS BIGINT) ELSE 0 END) AS bucket"
-        "   FROM pdots GROUP BY vec_id),"
+        f"WITH {_SQL_SRP_BUCKETS},"
         f" norms AS ({_SQL_NORMS}),"
         " dots AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, sum(a.x * b.x) AS dot"
         "   FROM e a JOIN buckets ba ON a.vec_id = ba.vec_id"
@@ -1197,19 +1175,12 @@ def _semantic_components_oracle() -> str:
     the same SRP-bucket candidate CTEs as dedup_embedding_neardup,
     then the reach/min-label recursion of _SQL_COMP_CTES."""
     from decision_tree_analytics_spark.operators.similarity import (
-        _SQL_EXPLODED,
         _SQL_NORMS,
-        _sql_planes_values,
+        _SQL_SRP_BUCKETS,
     )
 
     return (
-        f"WITH RECURSIVE planes(p, i, s) AS (VALUES {_sql_planes_values()}),"
-        f" e AS ({_SQL_EXPLODED}),"
-        " pdots AS (SELECT e.vec_id, pl.p, sum(e.x * pl.s) AS dot"
-        "   FROM e JOIN planes pl ON e.i = pl.i + 1 GROUP BY 1, 2),"
-        " buckets AS (SELECT vec_id,"
-        "   sum(CASE WHEN dot > 0 THEN CAST(pow(2, p) AS BIGINT) ELSE 0 END) AS bucket"
-        "   FROM pdots GROUP BY vec_id),"
+        f"WITH RECURSIVE {_SQL_SRP_BUCKETS},"
         f" norms AS ({_SQL_NORMS}),"
         " dots AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, sum(a.x * b.x) AS dot"
         "   FROM e a JOIN buckets ba ON a.vec_id = ba.vec_id"

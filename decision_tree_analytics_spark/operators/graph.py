@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._loop import checkpoint, iterate
+from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.sources.tables import load_table
 
 PR_ITERS = 3
@@ -122,7 +123,7 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = iterate(ranks, rank_round, PR_ITERS, STATE_PARTS)
     result = ranks.select(
         F.col("node").alias("nation"),
-        (F.floor(F.col("rank") * 1e6 + 0.5) / 1e6).alias("pagerank"),
+        round6(F.col("rank")).alias("pagerank"),
     )
     return tether_cache(result, edges)
 
@@ -1093,7 +1094,7 @@ def graph_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_reach",
         "sum_dist_micro",
         "harmonic_micro",
-        (F.floor(closeness * 1e6 + 0.5) / 1e6).alias("closeness"),
+        round6(closeness).alias("closeness"),
     )
     return tether_cache(result, edges)
 

@@ -52,6 +52,25 @@ def q26_dt_train_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     caller's scoring action reads it too instead of re-reading
     lineitem and rebuilding the features.
     """
+    return _fit_price_model(
+        spark,
+        sf_dir,
+        DecisionTreeRegressor(
+            featuresCol=FEATURES_COL,
+            labelCol="label",
+            impurity="variance",
+            maxDepth=5,
+            maxBins=64,
+            seed=12345,
+        ),
+    )
+
+
+def _fit_price_model(spark: SparkSession, sf_dir: str, estimator) -> DataFrame:
+    """Fit ``estimator`` (features in FEATURES_COL, label
+    l_extendedprice) on lineitem and score the same rows as
+    (l_orderkey, l_linenumber, predicted_price), the cached 4-column
+    projection tethered to the result."""
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_extendedprice", *_FEATURES
     )
@@ -65,14 +84,7 @@ def q26_dt_train_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cache()
     )
-    model = DecisionTreeRegressor(
-        featuresCol=FEATURES_COL,
-        labelCol="label",
-        impurity="variance",
-        maxDepth=5,
-        maxBins=64,
-        seed=12345,
-    ).fit(assembled.select(FEATURES_COL, "label"))
+    model = estimator.fit(assembled.select(FEATURES_COL, "label"))
     result = (
         model.setPredictionCol("predicted_price")
         .transform(assembled)
@@ -266,38 +278,19 @@ def ml_rf_train_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ml_pipeline.py."""
     from pyspark.ml.regression import RandomForestRegressor
 
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_extendedprice", *_FEATURES
-    )
-    assembled = (
-        assemble_features(li, _FEATURES)
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            FEATURES_COL,
-            F.col("l_extendedprice").alias("label"),
-        )
-        .cache()
-    )
-    model = RandomForestRegressor(
-        featuresCol=FEATURES_COL,
-        labelCol="label",
-        impurity="variance",
-        numTrees=20,
-        featureSubsetStrategy="sqrt",
-        maxDepth=5,
-        maxBins=64,
-        seed=12345,
-    ).fit(assembled.select(FEATURES_COL, "label"))
-    # tether, don't eagerly unpersist: the returned prediction frame is
-    # lazy, so a finally-block unpersist here would evict the cache
-    # before the scoring pass ever reads it (the transform would
-    # recompute the projection from parquet).
-    return tether_cache(
-        model.setPredictionCol("predicted_price")
-        .transform(assembled)
-        .select("l_orderkey", "l_linenumber", "predicted_price"),
-        assembled,
+    return _fit_price_model(
+        spark,
+        sf_dir,
+        RandomForestRegressor(
+            featuresCol=FEATURES_COL,
+            labelCol="label",
+            impurity="variance",
+            numTrees=20,
+            featureSubsetStrategy="sqrt",
+            maxDepth=5,
+            maxBins=64,
+            seed=12345,
+        ),
     )
 
 
@@ -337,7 +330,7 @@ def ml_baseline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_test"),
         r2(F.sqrt(sse / F.count(F.lit(1)))).alias("rmse"),
         r2(F.avg(F.abs(F.col("y") - F.col("yhat")))).alias("mae"),
-        (F.floor((F.lit(1.0) - sse / sst) * 1e6 + 0.5) / 1e6).alias("r2"),
+        round6(F.lit(1.0) - sse / sst).alias("r2"),
     )
 
 
@@ -794,17 +787,9 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     survivors), because 16 probe groups would otherwise serialize the
     corpus through 16 tasks.  Similarities rounded 1e-6 before
     ranking; votes are a ≤ probes×k-row aggregate."""
-    from decision_tree_analytics_spark.operators.similarity import (
-        _dot,
-        _norm,
-        _vecd,
-    )
+    from decision_tree_analytics_spark.operators.similarity import _cos, _vectors
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        _vecd("embedding").alias("v"),
-        F.col("label").cast("long").alias("label"),
-    )
+    emb = _vectors(spark, sf_dir, F.col("label").cast("long").alias("label"))
     probes = emb.filter(F.col("vec_id") < KNN_PROBES).select(
         F.col("vec_id").alias("probe_id"),
         F.col("v").alias("pv"),
@@ -817,9 +802,7 @@ def ml_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label_true",
         "vec_id",
         F.col("label").alias("nb_label"),
-        round6(
-            _dot(F.col("pv"), F.col("v")) / (_norm(F.col("pv")) * _norm(F.col("v")))
-        ).alias("sim"),
+        round6(_cos("pv", "v")).alias("sim"),
         F.pmod("vec_id", F.lit(_KNN_SALTS)).alias("salt"),
     )
     w1 = Window.partitionBy("probe_id", "salt").orderBy(
@@ -887,6 +870,74 @@ FROM win w JOIN lab pl ON w.probe_id = pl.vec_id WHERE rv = 1
 RIDGE_L2 = 0.1
 
 
+def _det3(c00, c01, c02, c10, c11, c12, c20, c21, c22):
+    """3x3 determinant, cofactor expansion along the first row."""
+    return (
+        c00 * (c11 * c22 - c12 * c21)
+        - c01 * (c10 * c22 - c12 * c20)
+        + c02 * (c10 * c21 - c11 * c20)
+    )
+
+
+def _ridge_beta(feats: DataFrame, *cols: Column) -> DataFrame:
+    """The closed-form ridge fit of y ~ 1 + x1 + x2 (lambda = RIDGE_L2)
+    over feats: one row of coefficients b0, b1, b2, then ``cols``,
+    which may read the nine moments n, s1, s2, sy, s11, s12, s22, s1y
+    and s2y."""
+    lam = float(RIDGE_L2)
+    m = feats.agg(
+        F.count(F.lit(1)).cast("double").alias("n"),
+        F.sum("x1").alias("s1"),
+        F.sum("x2").alias("s2"),
+        F.sum("y").alias("sy"),
+        F.sum(F.col("x1") * F.col("x1")).alias("s11"),
+        F.sum(F.col("x1") * F.col("x2")).alias("s12"),
+        F.sum(F.col("x2") * F.col("x2")).alias("s22"),
+        F.sum(F.col("x1") * F.col("y")).alias("s1y"),
+        F.sum(F.col("x2") * F.col("y")).alias("s2y"),
+    )
+    # A = [[n+λ, s1, s2], [s1, s11+λ, s12], [s2, s12, s22+λ]],
+    # b = [sy, s1y, s2y]; β_i = det(A with col i := b) / det(A).
+    a00, a01, a02 = F.col("n") + lam, F.col("s1"), F.col("s2")
+    a11, a12, a22 = F.col("s11") + lam, F.col("s12"), F.col("s22") + lam
+    b0, b1, b2 = F.col("sy"), F.col("s1y"), F.col("s2y")
+    det = _det3(a00, a01, a02, a01, a11, a12, a02, a12, a22)
+    return m.select(
+        (_det3(b0, a01, a02, b1, a11, a12, b2, a12, a22) / det).alias("b0"),
+        (_det3(a00, b0, a02, a01, b1, a12, a02, b2, a22) / det).alias("b1"),
+        (_det3(a00, a01, b0, a01, a11, b1, a02, a12, b2) / det).alias("b2"),
+        *cols,
+    )
+
+
+def _ridge_beta_sql(*cols: str) -> str:
+    """_ridge_beta as the CTEs m and beta over a CTE f(x1, x2, y)."""
+    lam = float(RIDGE_L2)
+
+    def det3(c):
+        return (
+            f"({c[0]} * ({c[4]} * {c[8]} - {c[5]} * {c[7]})"
+            f" - {c[1]} * ({c[3]} * {c[8]} - {c[5]} * {c[6]})"
+            f" + {c[2]} * ({c[3]} * {c[7]} - {c[4]} * {c[6]}))"
+        )
+
+    a = ["(n + {l})", "s1", "s2", "s1", "(s11 + {l})", "s12", "s2", "s12", "(s22 + {l})"]
+    a = [x.format(l=lam) for x in a]
+    b = ["sy", "s1y", "s2y"]
+    det = det3(a)
+    d0 = det3([b[0], a[1], a[2], b[1], a[4], a[5], b[2], a[7], a[8]])
+    d1 = det3([a[0], b[0], a[2], a[3], b[1], a[5], a[6], b[2], a[8]])
+    d2 = det3([a[0], a[1], b[0], a[3], a[4], b[1], a[6], a[7], b[2]])
+    extra = "".join(f", {c}" for c in cols)
+    return (
+        "m AS (SELECT CAST(count(*) AS DOUBLE) AS n, sum(x1) AS s1, sum(x2) AS s2,\n"
+        "    sum(y) AS sy, sum(x1 * x1) AS s11, sum(x1 * x2) AS s12,\n"
+        "    sum(x2 * x2) AS s22, sum(x1 * y) AS s1y, sum(x2 * y) AS s2y FROM f),\n"
+        f"beta AS (SELECT {d0} / {det} AS b0, {d1} / {det} AS b1,"
+        f" {d2} / {det} AS b2{extra} FROM m)"
+    )
+
+
 def ml_ridge_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closed-form ridge regression by NORMAL EQUATIONS — the third
     fully-oracled trainer, and the one-pass counterpart of the
@@ -911,37 +962,7 @@ def ml_ridge_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").getItem(1).cast("double").alias("x2"),
         F.col("embedding").getItem(2).cast("double").alias("y"),
     ).persist()
-    lam = float(RIDGE_L2)
-    m = feats.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x1").alias("s1"),
-        F.sum("x2").alias("s2"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x1") * F.col("x1")).alias("s11"),
-        F.sum(F.col("x1") * F.col("x2")).alias("s12"),
-        F.sum(F.col("x2") * F.col("x2")).alias("s22"),
-        F.sum(F.col("x1") * F.col("y")).alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).alias("s2y"),
-    )
-    # A = [[n+λ, s1, s2], [s1, s11+λ, s12], [s2, s12, s22+λ]],
-    # b = [sy, s1y, s2y]; β_i = det(A with col i := b) / det(A).
-    a00, a01, a02 = F.col("n") + lam, F.col("s1"), F.col("s2")
-    a11, a12, a22 = F.col("s11") + lam, F.col("s12"), F.col("s22") + lam
-    b0, b1, b2 = F.col("sy"), F.col("s1y"), F.col("s2y")
-
-    def det3(c00, c01, c02, c10, c11, c12, c20, c21, c22):
-        return (
-            c00 * (c11 * c22 - c12 * c21)
-            - c01 * (c10 * c22 - c12 * c20)
-            + c02 * (c10 * c21 - c11 * c20)
-        )
-
-    det = det3(a00, a01, a02, a01, a11, a12, a02, a12, a22)
-    beta = m.select(
-        (det3(b0, a01, a02, b1, a11, a12, b2, a12, a22) / det).alias("b0"),
-        (det3(a00, b0, a02, a01, b1, a12, a02, b2, a22) / det).alias("b1"),
-        (det3(a00, a01, b0, a01, a11, b1, a02, a12, b2) / det).alias("b2"),
-    )
+    beta = _ridge_beta(feats)
     resid = F.col("y") - (
         F.col("b0") + F.col("b1") * F.col("x1") + F.col("b2") * F.col("x2")
     )
@@ -957,30 +978,10 @@ def ml_ridge_normal_eq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _ridge_oracle() -> str:
-    lam = float(RIDGE_L2)
-
-    def det3(c):
-        return (
-            f"({c[0]} * ({c[4]} * {c[8]} - {c[5]} * {c[7]})"
-            f" - {c[1]} * ({c[3]} * {c[8]} - {c[5]} * {c[6]})"
-            f" + {c[2]} * ({c[3]} * {c[7]} - {c[4]} * {c[6]}))"
-        )
-
-    a = ["(n + {l})", "s1", "s2", "s1", "(s11 + {l})", "s12", "s2", "s12", "(s22 + {l})"]
-    a = [x.format(l=lam) for x in a]
-    b = ["sy", "s1y", "s2y"]
-    det = det3(a)
-    d0 = det3([b[0], a[1], a[2], b[1], a[4], a[5], b[2], a[7], a[8]])
-    d1 = det3([a[0], b[0], a[2], a[3], b[1], a[5], a[6], b[2], a[8]])
-    d2 = det3([a[0], a[1], b[0], a[3], a[4], b[1], a[6], a[7], b[2]])
     return f"""
 WITH f AS (SELECT embedding[1]::DOUBLE AS x1, embedding[2]::DOUBLE AS x2,
     embedding[3]::DOUBLE AS y FROM embeddings),
-m AS (SELECT CAST(count(*) AS DOUBLE) AS n, sum(x1) AS s1, sum(x2) AS s2,
-    sum(y) AS sy, sum(x1 * x1) AS s11, sum(x1 * x2) AS s12,
-    sum(x2 * x2) AS s22, sum(x1 * y) AS s1y, sum(x2 * y) AS s2y FROM f),
-beta AS (SELECT {d0} / {det} AS b0, {d1} / {det} AS b1, {d2} / {det} AS b2
-  FROM m)
+{_ridge_beta_sql()}
 SELECT CAST(count(*) AS BIGINT) AS n,
   floor(max(b0) * 1e6 + 0.5) / 1e6 AS b0,
   floor(max(b1) * 1e6 + 0.5) / 1e6 AS b1,
@@ -1924,7 +1925,7 @@ def ml_shap_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum(beta_j * mean_j).  This is the model-explainability readout a
     scoring pipeline ships next to every batch prediction.
 
-    Training reuses ml_ridge_normal_eq's machinery verbatim: one
+    Training is ml_ridge_normal_eq's fit (_ridge_beta): one
     mergeable-moments pass, Cramer 3x3 solve (lambda=0.1 keeps the
     determinant >= lambda^3 > 0 — ANSI-safe), so DuckDB replays the
     fit exactly.  Attribution is then MAP-ONLY: the 1-row (beta,
@@ -1940,34 +1941,8 @@ def ml_shap_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").getItem(1).cast("double").alias("x2"),
         F.col("embedding").getItem(2).cast("double").alias("y"),
     ).persist()
-    lam = float(RIDGE_L2)
-    m = feats.agg(
-        F.count(F.lit(1)).cast("double").alias("n"),
-        F.sum("x1").alias("s1"),
-        F.sum("x2").alias("s2"),
-        F.sum("y").alias("sy"),
-        F.sum(F.col("x1") * F.col("x1")).alias("s11"),
-        F.sum(F.col("x1") * F.col("x2")).alias("s12"),
-        F.sum(F.col("x2") * F.col("x2")).alias("s22"),
-        F.sum(F.col("x1") * F.col("y")).alias("s1y"),
-        F.sum(F.col("x2") * F.col("y")).alias("s2y"),
-    )
-    a00, a01, a02 = F.col("n") + lam, F.col("s1"), F.col("s2")
-    a11, a12, a22 = F.col("s11") + lam, F.col("s12"), F.col("s22") + lam
-    b0, b1, b2 = F.col("sy"), F.col("s1y"), F.col("s2y")
-
-    def det3(c00, c01, c02, c10, c11, c12, c20, c21, c22):
-        return (
-            c00 * (c11 * c22 - c12 * c21)
-            - c01 * (c10 * c22 - c12 * c20)
-            + c02 * (c10 * c21 - c11 * c20)
-        )
-
-    det = det3(a00, a01, a02, a01, a11, a12, a02, a12, a22)
-    beta = m.select(
-        (det3(b0, a01, a02, b1, a11, a12, b2, a12, a22) / det).alias("b0"),
-        (det3(a00, b0, a02, a01, b1, a12, a02, b2, a22) / det).alias("b1"),
-        (det3(a00, a01, b0, a01, a11, b1, a02, a12, b2) / det).alias("b2"),
+    beta = _ridge_beta(
+        feats,
         (F.col("s1") / F.col("n")).alias("xm1"),
         (F.col("s2") / F.col("n")).alias("xm2"),
     )
@@ -1987,30 +1962,10 @@ def ml_shap_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _shap_oracle() -> str:
-    lam = float(RIDGE_L2)
-
-    def det3(c):
-        return (
-            f"({c[0]} * ({c[4]} * {c[8]} - {c[5]} * {c[7]})"
-            f" - {c[1]} * ({c[3]} * {c[8]} - {c[5]} * {c[6]})"
-            f" + {c[2]} * ({c[3]} * {c[7]} - {c[4]} * {c[6]}))"
-        )
-
-    a = ["(n + {l})", "s1", "s2", "s1", "(s11 + {l})", "s12", "s2", "s12", "(s22 + {l})"]
-    a = [x.format(l=lam) for x in a]
-    b = ["sy", "s1y", "s2y"]
-    det = det3(a)
-    d0 = det3([b[0], a[1], a[2], b[1], a[4], a[5], b[2], a[7], a[8]])
-    d1 = det3([a[0], b[0], a[2], a[3], b[1], a[5], a[6], b[2], a[8]])
-    d2 = det3([a[0], a[1], b[0], a[3], a[4], b[1], a[6], a[7], b[2]])
     return f"""
 WITH f AS (SELECT vec_id, embedding[1]::DOUBLE AS x1,
     embedding[2]::DOUBLE AS x2, embedding[3]::DOUBLE AS y FROM embeddings),
-m AS (SELECT CAST(count(*) AS DOUBLE) AS n, sum(x1) AS s1, sum(x2) AS s2,
-    sum(y) AS sy, sum(x1 * x1) AS s11, sum(x1 * x2) AS s12,
-    sum(x2 * x2) AS s22, sum(x1 * y) AS s1y, sum(x2 * y) AS s2y FROM f),
-beta AS (SELECT {d0} / {det} AS b0, {d1} / {det} AS b1, {d2} / {det} AS b2,
-    s1 / n AS xm1, s2 / n AS xm2 FROM m)
+{_ridge_beta_sql("s1 / n AS xm1", "s2 / n AS xm2")}
 SELECT vec_id,
   floor((b0 + b1 * x1 + b2 * x2) * 1e6 + 0.5) / 1e6 AS pred,
   floor((b0 + b1 * xm1 + b2 * xm2) * 1e6 + 0.5) / 1e6 AS base,

@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 )
 
 from decision_tree_analytics_spark.operators._parts import spread
+from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.sources.tables import load_table
 
 META_SCHEMA = StructType(
@@ -383,14 +384,8 @@ def chunk_pairs(d: DataFrame) -> DataFrame:
             "id_a",
             "id_b",
             F.col("n_shared").cast("long").alias("n_shared"),
-            (
-                F.floor(
-                    F.col("n_shared")
-                    / (F.col("na") + F.col("nb") - F.col("n_shared"))
-                    * 1e6
-                    + 0.5
-                )
-                / 1e6
+            round6(
+                F.col("n_shared") / (F.col("na") + F.col("nb") - F.col("n_shared"))
             ).alias("overlap"),
         )
     )

@@ -870,7 +870,7 @@ def rel_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return kmin.select(
         "event_type",
         "n_kept",
-        (F.floor(est * 1e6 + 0.5) / 1e6).alias("est_distinct"),
+        round6(est).alias("est_distinct"),
     )
 
 
@@ -955,10 +955,8 @@ def rel_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
         "type_b",
         "n_union_sample",
         ni.alias("n_inter_sample"),
-        (F.floor(F.col("n_union_sample") / F.col("th") * 1e6 + 0.5) / 1e6).alias(
-            "est_union"
-        ),
-        (F.floor(ni / F.col("th") * 1e6 + 0.5) / 1e6).alias("est_inter"),
+        round6(F.col("n_union_sample") / F.col("th")).alias("est_union"),
+        round6(ni / F.col("th")).alias("est_inter"),
     )
     return tether_cache(result, kmin)
 
@@ -1280,9 +1278,7 @@ def rel_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "ts_us",
         F.count(F.lit(1)).over(w).cast("long").alias("trailing_n"),
-        (F.floor(F.sum("value").over(w) * 1e6 + 0.5) / 1e6).alias(
-            "trailing_sum"
-        ),
+        round6(F.sum("value").over(w)).alias("trailing_sum"),
     )
 
 
@@ -2050,14 +2046,8 @@ def rel_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_exact",
         "est",
         (F.col("est") - F.col("n_exact")).alias("overcount"),
-        (
-            F.floor(
-                (F.col("est") - F.col("n_exact"))
-                / F.col("n_exact").cast("double")
-                * 1e6
-                + 0.5
-            )
-            / 1e6
+        round6(
+            (F.col("est") - F.col("n_exact")) / F.col("n_exact").cast("double")
         ).alias("rel_err"),
     )
     return tether_cache(result, toks)
@@ -2176,21 +2166,15 @@ def rel_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(float(HLL_M)) / F.nullif(v.cast("double"), F.lit(0.0))
     )
     est = F.when((e_raw <= F.lit(2.5 * HLL_M)) & (v > 0), lin).otherwise(e_raw)
-    est_r = F.floor(est * 1e6 + 0.5) / 1e6
+    est_r = round6(est)
     joined = per.join(exact, "event_type")
     result = joined.select(
         "event_type",
         "n_exact",
         "n_hit",
         est_r.alias("est_hll"),
-        (
-            F.floor(
-                F.abs(est_r - F.col("n_exact"))
-                / F.col("n_exact").cast("double")
-                * 1e6
-                + 0.5
-            )
-            / 1e6
+        round6(
+            F.abs(est_r - F.col("n_exact")) / F.col("n_exact").cast("double")
         ).alias("rel_err"),
     )
     return tether_cache(result, d)
@@ -2318,15 +2302,9 @@ def rel_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return purch.agg(
         F.count(F.lit(1)).cast("long").alias("n_converted"),
-        (F.floor(F.percentile("latency_us", 0.25) * 1e6 + 0.5) / 1e6).alias(
-            "p25_us"
-        ),
-        (F.floor(F.percentile("latency_us", 0.5) * 1e6 + 0.5) / 1e6).alias(
-            "p50_us"
-        ),
-        (F.floor(F.percentile("latency_us", 0.9) * 1e6 + 0.5) / 1e6).alias(
-            "p90_us"
-        ),
+        round6(F.percentile("latency_us", 0.25)).alias("p25_us"),
+        round6(F.percentile("latency_us", 0.5)).alias("p50_us"),
+        round6(F.percentile("latency_us", 0.9)).alias("p90_us"),
         F.min("latency_us").cast("long").alias("min_us"),
         F.max("latency_us").cast("long").alias("max_us"),
     )

@@ -46,11 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._loop import iterate
 from decision_tree_analytics_spark.operators._round import round6
-from decision_tree_analytics_spark.operators.similarity import (
-    _dot,
-    _norm,
-    _vecd,
-)
+from decision_tree_analytics_spark.operators.similarity import _cos, _vectors
 from decision_tree_analytics_spark.sources.tables import load_table
 
 # Query terms for the keyword side (fixed probe, like sim_* fix the
@@ -185,22 +181,14 @@ LIMIT 10
 def _cosine_scores(spark: SparkSession, sf_dir: str, probe_id: int) -> DataFrame:
     """(vec_id, cos) — exact cosine of every corpus vector against the
     single broadcast probe vector (one scan, no corpus shuffle)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vecd("embedding").alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     probe = emb.filter(F.col("vec_id") == probe_id).select(
         F.col("v").alias("pv")
     )
     return (
         emb.join(F.broadcast(probe), how="cross")
         .filter(F.col("vec_id") != probe_id)
-        .select(
-            "vec_id",
-            round6(
-                _dot(F.col("pv"), F.col("v"))
-                / (_norm(F.col("pv")) * _norm(F.col("v")))
-            ).alias("cos"),
-        )
+        .select("vec_id", round6(_cos("pv", "v")).alias("cos"))
     )
 
 
@@ -297,10 +285,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(20)
         .withColumnRenamed("cos", "rel")
     )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vecd("embedding").alias("v")
-    )
-    cand_vec = cand.join(emb, "vec_id").persist()
+    cand_vec = cand.join(_vectors(spark, sf_dir), "vec_id").persist()
     a = cand_vec.select(
         F.col("vec_id").alias("a"), F.col("v").alias("va")
     )
@@ -309,14 +294,7 @@ def sim_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = (
         a.join(b, F.col("a") != F.col("b"))
-        .select(
-            "a",
-            "b",
-            round6(
-                _dot(F.col("va"), F.col("vb"))
-                / (_norm(F.col("va")) * _norm(F.col("vb")))
-            ).alias("sim"),
-        )
+        .select("a", "b", round6(_cos("va", "vb")).alias("sim"))
         .persist()
     )
     lam = MMR_LAMBDA
@@ -500,11 +478,7 @@ def ml_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dcg_micro",
         "idcg_micro",
         (
-            F.floor(
-                F.col("dcg_micro") / F.col("idcg_micro").cast("double") * 1e6
-                + 0.5
-            )
-            / 1e6
+            round6(F.col("dcg_micro") / F.col("idcg_micro").cast("double"))
         ).alias("ndcg"),
     )
     return tether_cache(result, tf)

@@ -29,7 +29,7 @@ from __future__ import annotations
 import hashlib
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._parts import spread
@@ -68,13 +68,45 @@ def _norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x))
 
 
+def _cos(a: str, b: str) -> Column:
+    """Exact cosine of two array<double> columns; callers round it."""
+    return _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b)))
+
+
+def _vectors(spark: SparkSession, sf_dir: str, *cols: str | Column) -> DataFrame:
+    """The embeddings as (vec_id, v array<double>, *cols)."""
+    return load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", _vecd("embedding").alias("v"), *cols
+    )
+
+
+def _probe_topk(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """Each probe's k best (probe_id, neighbor_id, score) rows by
+    ``score`` desc, neighbor_id asc, numbered in a BIGINT ``rank``."""
+    w = Window.partitionBy("probe_id").orderBy(
+        F.col(score).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w).cast("long"))
+        .filter(F.col("rank") <= k)
+        .select("probe_id", "neighbor_id", score, "rank")
+    )
+
+
+def _bucket_pairs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """Every ordered same-SRP-bucket pair (bucket, id_a, va, id_b, vb),
+    self-pairs included, and the persisted (vec_id, v, bucket) frame it
+    reads, which the caller tethers to its result."""
+    emb = _vectors(spark, sf_dir)
+    both = emb.join(sim_ann_buckets(spark, sf_dir), "vec_id").persist()
+    a = both.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"), "bucket")
+    b = both.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), "bucket")
+    return a.join(b, ["bucket"]), both
+
+
 def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 cosine neighbors for probes vec_id < 10 (SURVEY Q29)."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vecd("embedding").alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     probes = emb.select(
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
     ).filter(F.col("probe_id") < 10)
@@ -82,18 +114,9 @@ def sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = pairs.select(
         "probe_id",
         F.col("vec_id").alias("neighbor_id"),
-        round6(
-            _dot(F.col("pv"), F.col("v")) / (_norm(F.col("pv")) * _norm(F.col("v")))
-        ).alias("cos_sim"),
+        round6(_cos("pv", "v")).alias("cos_sim"),
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= 5)
-        .select("probe_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _probe_topk(scored, "cos_sim", 5)
 
 
 def sim_embed_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -111,25 +134,9 @@ def sim_embed_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     whose bucket holds no other member have no neighbor row (the
     recall/selectivity trade LSH makes by design; raise N_PLANES to
     tighten buckets, lower it to widen candidates)."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vecd("embedding").alias("v")
-    )
-    both = emb.join(sim_ann_buckets(spark, sf_dir), "vec_id").persist()
-    a = both.select(
-        F.col("vec_id").alias("id_a"), F.col("v").alias("va"), "bucket"
-    )
-    b = both.select(
-        F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), "bucket"
-    )
-    pairs = a.join(b, ["bucket"]).filter(F.col("id_a") != F.col("id_b"))
-    scored = pairs.select(
-        "id_a",
-        "id_b",
-        round6(
-            _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
-        ).alias("cos_sim"),
+    pairs, both = _bucket_pairs(spark, sf_dir)
+    scored = pairs.filter(F.col("id_a") != F.col("id_b")).select(
+        "id_a", "id_b", round6(_cos("va", "vb")).alias("cos_sim")
     )
     w = Window.partitionBy("id_a").orderBy(F.col("cos_sim").desc(), F.col("id_b").asc())
     result = (
@@ -146,9 +153,7 @@ def sim_embed_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def sim_ann_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-random-projection LSH bucket id per vector (scale path)."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vecd("embedding").alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     planes = _hyperplanes()
     bucket = None
     for p, signs in enumerate(planes):
@@ -177,26 +182,9 @@ def sim_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB: buckets are the shuffle key; each bucket's candidate
     set is small, so the pairwise stage is linear in Σ bucket².  Skewed
     (hot) buckets would be split by AQE skew-join handling."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vecd("embedding").alias("v")
-    )
-    buckets = sim_ann_buckets(spark, sf_dir)
-    both = emb.join(buckets, "vec_id").persist()
-    a = both.select(
-        F.col("vec_id").alias("id_a"), F.col("v").alias("va"), "bucket"
-    )
-    b = both.select(
-        F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), "bucket"
-    )
-    pairs = a.join(b, ["bucket"]).filter(F.col("id_a") != F.col("id_b"))
-    scored = pairs.select(
-        "id_a",
-        "id_b",
-        round6(
-            _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
-        ).alias("cos_sim"),
+    pairs, both = _bucket_pairs(spark, sf_dir)
+    scored = pairs.filter(F.col("id_a") != F.col("id_b")).select(
+        "id_a", "id_b", round6(_cos("va", "vb")).alias("cos_sim")
     )
     w = Window.partitionBy("id_a").orderBy(F.col("cos_sim").desc(), F.col("id_b").asc())
     result = (
@@ -225,11 +213,7 @@ def sim_sq_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     per-dim MIN/MAX aggregates (no float-sum order sensitivity), so
     codes are bit-identical across engines and the query carries a
     full DuckDB oracle — unlike engine-seeded KMeans IVF."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vecd("embedding").alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     # 64-row per-dim stats, folded to one row of parallel arrays and
     # broadcast — the quantization "codebook".
     stats = (
@@ -272,18 +256,9 @@ def sim_sq_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     scored = pairs.select(
         "probe_id",
         F.col("vec_id").alias("neighbor_id"),
-        round6(
-            _dot(F.col("pv"), F.col("dv")) / (_norm(F.col("pv")) * _norm(F.col("dv")))
-        ).alias("approx_cos"),
+        round6(_cos("pv", "dv")).alias("approx_cos"),
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "approx_cos", "rank")
-    )
+    return _probe_topk(scored, "approx_cos", k)
 
 
 def sim_sq_refined_topk(
@@ -295,36 +270,18 @@ def sim_sq_refined_topk(
     exact cosine and final top-k.  At 100 TB the expensive stage reads
     probes×k' vectors instead of the corpus — the approximate pass
     bounds all full-precision IO."""
-    from pyspark.sql import Window
-
     cands = sim_sq_topk(spark, sf_dir, k=k_candidates).select(
         "probe_id", "neighbor_id"
     )
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vecd("embedding").alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     p = emb.select(F.col("vec_id").alias("probe_id"), F.col("v").alias("pv"))
     c = emb.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
     scored = (
         cands.join(p, "probe_id")
         .join(c, "neighbor_id")
-        .select(
-            "probe_id",
-            "neighbor_id",
-            round6(
-                _dot(F.col("pv"), F.col("cv"))
-                / (_norm(F.col("pv")) * _norm(F.col("cv")))
-            ).alias("cos_sim"),
-        )
+        .select("probe_id", "neighbor_id", round6(_cos("pv", "cv")).alias("cos_sim"))
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _probe_topk(scored, "cos_sim", k)
 
 
 PQ_SUB = 8  # dims per subspace (64-dim vectors → 8 subspaces)
@@ -365,11 +322,7 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     the one shuffle carries m structs per vector, not m·|C|.  At
     100 TB: no vector ever shuffles at full width; shuffle volume is
     ~m·(8 doubles) per corpus row."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vecd("embedding").alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     n_sub = 64 // PQ_SUB
     to_subs = F.posexplode(
         F.array(*[F.slice("v", s * PQ_SUB + 1, PQ_SUB) for s in range(n_sub)])
@@ -409,18 +362,9 @@ def sim_pq_topk(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     ).select(
         "probe_id",
         F.col("vec_id").alias("neighbor_id"),
-        round6(
-            _dot(F.col("pv"), F.col("rv")) / (_norm(F.col("pv")) * _norm(F.col("rv")))
-        ).alias("approx_cos"),
+        round6(_cos("pv", "rv")).alias("approx_cos"),
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("approx_cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "approx_cos", "rank")
-    )
+    return _probe_topk(scored, "approx_cos", k)
 
 
 def sim_ivf_topk(
@@ -442,12 +386,8 @@ def sim_ivf_topk(
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
-    from pyspark.sql import Window
 
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vecd("embedding").alias("v")
-    )
-    vecs = emb.withColumn("features", array_to_vector("v")).cache()
+    vecs = _vectors(spark, sf_dir).withColumn("features", array_to_vector("v")).cache()
     km = KMeans(k=n_clusters, seed=12345, featuresCol="features", predictionCol="cluster")
     model = km.fit(vecs)
     assigned = model.transform(vecs).select("vec_id", "v", "cluster")
@@ -480,18 +420,9 @@ def sim_ivf_topk(
     scored = cands.select(
         "probe_id",
         F.col("vec_id").alias("neighbor_id"),
-        round6(
-            _dot(F.col("pv"), F.col("v")) / (_norm(F.col("pv")) * _norm(F.col("v")))
-        ).alias("cos_sim"),
+        round6(_cos("pv", "v")).alias("cos_sim"),
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    result = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cos_sim", "rank")
-    )
+    result = _probe_topk(scored, "cos_sim", k)
     return tether_cache(result, vecs)
 
 
@@ -536,11 +467,8 @@ def _ivf_build(spark: SparkSession, sf_dir: str):
     Lloyd step → re-assign), extracted so sim_ivf_oracled (inline)
     and sim_ivf_snapshot (persisted) construct the IDENTICAL index.
     Returns (emb persisted, refined centroids, assignments)."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _vecd("embedding").alias("v"))
-        .persist()  # 2 assignment passes + probes + exact re-rank
-    )
+    # 2 assignment passes + probes + exact re-rank
+    emb = _vectors(spark, sf_dir).persist()
     seeds = emb.filter(
         (F.col("vec_id") % IVF_SEED_STEP == 0)
         & (F.col("vec_id") < IVF_SEED_STEP * IVF_CELLS)
@@ -620,8 +548,6 @@ def sim_ivf_oracled(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     build is a one-off job persisted as a (vec_id, cell) table (the
     component_labels_snapshot pattern) — sim_ivf_snapshot IS that
     variant; here it runs inline."""
-    from pyspark.sql import Window
-
     emb, cent2, a2 = _ivf_build(spark, sf_dir)
 
     probes = emb.filter(F.col("vec_id") < 10).select(
@@ -642,18 +568,9 @@ def sim_ivf_oracled(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     scored = cands.select(
         "probe_id",
         F.col("vec_id").alias("neighbor_id"),
-        round6(
-            _dot(F.col("pv"), F.col("v")) / (_norm(F.col("pv")) * _norm(F.col("v")))
-        ).alias("cos_sim"),
+        round6(_cos("pv", "v")).alias("cos_sim"),
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    result = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cos_sim", "rank")
-    )
+    result = _probe_topk(scored, "cos_sim", k)
     return tether_cache(result, emb)
 
 
@@ -725,14 +642,8 @@ def sim_ivf_snapshot(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     sim_ivf_oracled — the oracle string is literally shared, which is
     itself the check that persistence changed the COST, not the
     answer."""
-    from pyspark.sql import Window
-
     assignments, cent = _ivf_index_snapshot(spark, sf_dir)
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _vecd("embedding").alias("v"))
-        .persist()  # probes + candidate-vector re-join
-    )
+    emb = _vectors(spark, sf_dir).persist()  # probes + candidate re-join
     probes = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
     )
@@ -753,18 +664,9 @@ def sim_ivf_snapshot(spark: SparkSession, sf_dir: str, k: int = 5) -> DataFrame:
     scored = cands.select(
         "probe_id",
         F.col("vec_id").alias("neighbor_id"),
-        round6(
-            _dot(F.col("pv"), F.col("v")) / (_norm(F.col("pv")) * _norm(F.col("v")))
-        ).alias("cos_sim"),
+        round6(_cos("pv", "v")).alias("cos_sim"),
     )
-    w = Window.partitionBy("probe_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    result = (
-        scored.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-        .select("probe_id", "neighbor_id", "cos_sim", "rank")
-    )
+    result = _probe_topk(scored, "cos_sim", k)
     return tether_cache(result, emb)
 
 
@@ -792,11 +694,7 @@ def sim_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern applied to ANN.  The base build here runs inline so the
     whole pipeline stays DuckDB-replayable; in production it reads
     the published sim_ivf_snapshot tables."""
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _vecd("embedding").alias("v"))
-        .persist()  # 2 base assignment passes + 1 delta pass
-    )
+    emb = _vectors(spark, sf_dir).persist()  # 2 base + 1 delta assignment pass
     is_delta = F.col("vec_id") % IVF_DELTA_MOD == IVF_DELTA_RES
     base = emb.filter(~is_delta)
     delta = emb.filter(is_delta)
@@ -933,9 +831,7 @@ def sim_rp_reduce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return emb.select(
         "vec_id",
         *[
-            (F.floor(F.expr(_rp_terms(j, lambda k: k)) * 1e6 + 0.5) / 1e6).alias(
-                f"r{j}"
-            )
+            round6(F.expr(_rp_terms(j, lambda k: k))).alias(f"r{j}")
             for j in range(RP_DIM)
         ],
     )
@@ -969,6 +865,17 @@ _SQL_EXPLODED = (
     " unnest(embedding)::DOUBLE AS x FROM embeddings"
 )
 _SQL_NORMS = "SELECT vec_id, sqrt(sum(x*x)) AS nrm FROM e GROUP BY vec_id"
+# The SRP bucket of every vector as CTEs planes, e, pdots and buckets
+# (vec_id, bucket): sim_ann_buckets' code, replayed.
+_SQL_SRP_BUCKETS = (
+    f"planes(p, i, s) AS (VALUES {_sql_planes_values()}),"
+    f" e AS ({_SQL_EXPLODED}),"
+    " pdots AS (SELECT e.vec_id, pl.p, sum(e.x * pl.s) AS dot"
+    "   FROM e JOIN planes pl ON e.i = pl.i + 1 GROUP BY 1, 2),"
+    " buckets AS (SELECT vec_id,"
+    "   sum(CASE WHEN dot > 0 THEN CAST(pow(2, p) AS BIGINT) ELSE 0 END)"
+    "     AS bucket FROM pdots GROUP BY vec_id)"
+)
 
 # Shared CTE block for the scalar-quantization oracles: per-dim
 # min/max codebook → dequantized corpus → approximate cosine scores
@@ -1025,13 +932,7 @@ ORACLES = {
         " WHERE rank <= 5"
     ),
     "sim_embed_nn": (
-        f"WITH planes(p, i, s) AS (VALUES {_sql_planes_values()}),"
-        f" e AS ({_SQL_EXPLODED}),"
-        " pdots AS (SELECT e.vec_id, pl.p, sum(e.x * pl.s) AS dot"
-        "   FROM e JOIN planes pl ON e.i = pl.i + 1 GROUP BY 1, 2),"
-        " buckets AS (SELECT vec_id,"
-        "   sum(CASE WHEN dot > 0 THEN CAST(pow(2, p) AS BIGINT) ELSE 0 END)"
-        "     AS bucket FROM pdots GROUP BY vec_id),"
+        f"WITH {_SQL_SRP_BUCKETS},"
         f" norms AS ({_SQL_NORMS}),"
         " dots AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, sum(a.x * b.x) AS dot"
         "   FROM e a JOIN buckets ba ON a.vec_id = ba.vec_id"
@@ -1114,13 +1015,7 @@ ORACLES = {
         " WHERE rank <= 5"
     ),
     "sim_ann_topk": (
-        f"WITH planes(p, i, s) AS (VALUES {_sql_planes_values()}),"
-        f" e AS ({_SQL_EXPLODED}),"
-        " pdots AS (SELECT e.vec_id, pl.p, sum(e.x * pl.s) AS dot"
-        "   FROM e JOIN planes pl ON e.i = pl.i + 1 GROUP BY 1, 2),"
-        " buckets AS (SELECT vec_id,"
-        "   sum(CASE WHEN dot > 0 THEN CAST(pow(2, p) AS BIGINT) ELSE 0 END) AS bucket"
-        "   FROM pdots GROUP BY vec_id),"
+        f"WITH {_SQL_SRP_BUCKETS},"
         f" norms AS ({_SQL_NORMS}),"
         " dots AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b, sum(a.x * b.x) AS dot"
         "   FROM e a JOIN buckets ba ON a.vec_id = ba.vec_id"
@@ -1263,17 +1158,10 @@ def sim_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same bound the production near-dup path lives with.  One
     conditional aggregate over the scored pairs; the output is pure
     counts, so a zero-candidate corpus just yields an all-zero row."""
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vecd("embedding").alias("v")
+    pairs, both = _bucket_pairs(spark, sf_dir)
+    scored = pairs.filter(F.col("id_a") < F.col("id_b")).select(
+        round6(_cos("va", "vb")).alias("c")
     )
-    both = emb.join(sim_ann_buckets(spark, sf_dir), "vec_id").persist()
-    a = both.select(F.col("vec_id").alias("id_a"), F.col("v").alias("va"), "bucket")
-    b = both.select(F.col("vec_id").alias("id_b"), F.col("v").alias("vb"), "bucket")
-    pairs = a.join(b, ["bucket"]).filter(F.col("id_a") < F.col("id_b"))
-    cos = round6(
-        _dot(F.col("va"), F.col("vb")) / (_norm(F.col("va")) * _norm(F.col("vb")))
-    )
-    scored = pairs.select(cos.alias("c"))
     aggs = [F.count(F.lit(1)).cast("long").alias("n_candidates")]
     for t in SWEEP_THRESHOLDS:
         tag = str(t).replace("0.", "")
@@ -1291,13 +1179,7 @@ def _threshold_sweep_oracle() -> str:
         for t in SWEEP_THRESHOLDS
     )
     return (
-        f"WITH planes(p, i, s) AS (VALUES {_sql_planes_values()}),"
-        f" e AS ({_SQL_EXPLODED}),"
-        " pdots AS (SELECT e.vec_id, pl.p, sum(e.x * pl.s) AS dot"
-        "   FROM e JOIN planes pl ON e.i = pl.i + 1 GROUP BY 1, 2),"
-        " buckets AS (SELECT vec_id,"
-        "   sum(CASE WHEN dot > 0 THEN CAST(pow(2, p) AS BIGINT) ELSE 0 END)"
-        "     AS bucket FROM pdots GROUP BY vec_id),"
+        f"WITH {_SQL_SRP_BUCKETS},"
         f" norms AS ({_SQL_NORMS}),"
         " dots AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b,"
         "     sum(a.x * b.x) AS dot"
@@ -1349,23 +1231,16 @@ def sim_srp_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate precision.  A probe whose bucket holds fewer than k
     other members contributes fewer ANN rows (the recall cost LSH
     pays by design — this query is the instrument that prices it)."""
-    from pyspark.sql import Window
-
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _vecd("embedding").alias("v")
-    )
+    emb = _vectors(spark, sf_dir)
     probes = emb.filter(F.col("vec_id") < ANN_EVAL_PROBE_MAX).select(
         F.col("vec_id").alias("probe_id"), F.col("v").alias("pv")
-    )
-    cos = lambda a, b: round6(  # noqa: E731
-        _dot(F.col(a), F.col(b)) / (_norm(F.col(a)) * _norm(F.col(b)))
     )
     scored_t = emb.join(
         F.broadcast(probes), F.col("vec_id") != F.col("probe_id")
     ).select(
         "probe_id",
         F.col("vec_id").alias("neighbor_id"),
-        cos("pv", "v").alias("c"),
+        round6(_cos("pv", "v")).alias("c"),
     )
     w = Window.partitionBy("probe_id").orderBy(
         F.col("c").desc(), F.col("neighbor_id").asc()
@@ -1389,7 +1264,7 @@ def sim_srp_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored_a = (
         pa.join(pb, ["cbucket"])
         .filter(F.col("probe_id") != F.col("neighbor_id"))
-        .select("probe_id", "neighbor_id", cos("pv", "nv").alias("c"))
+        .select("probe_id", "neighbor_id", round6(_cos("pv", "nv")).alias("c"))
     )
     ann = (
         scored_a.withColumn("rk", F.row_number().over(w))
@@ -1422,13 +1297,7 @@ def sim_srp_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _srp_recall_oracle() -> str:
     return (
-        f"WITH planes(p, i, s) AS (VALUES {_sql_planes_values()}),"
-        f" e AS ({_SQL_EXPLODED}),"
-        " pdots AS (SELECT e.vec_id, pl.p, sum(e.x * pl.s) AS dot"
-        "   FROM e JOIN planes pl ON e.i = pl.i + 1 GROUP BY 1, 2),"
-        " buckets AS (SELECT vec_id,"
-        "   sum(CASE WHEN dot > 0 THEN CAST(pow(2, p) AS BIGINT) ELSE 0 END)"
-        "     AS bucket FROM pdots GROUP BY vec_id),"
+        f"WITH {_SQL_SRP_BUCKETS},"
         f" norms AS ({_SQL_NORMS}),"
         " tdots AS (SELECT p.vec_id AS probe_id, c.vec_id AS neighbor_id,"
         "   sum(p.x * c.x) AS dot FROM e p JOIN e c ON p.i = c.i"
@@ -1493,8 +1362,6 @@ def sim_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     the shift metrics are windows over that bounded grid.  The md5
     split is content-derived (rule 6), dims stay JVM-side, and both
     engines compute the same rounded expression tree."""
-    from pyspark.sql import Window
-
     e = load_table(spark, sf_dir, "embeddings").select(
         "label",
         (
@@ -1603,12 +1470,7 @@ def ml_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hashpartitioning as the argmin aggregate's output the join
     # needs NO exchange — the vector payload is shuffled exactly once
     # (at cache build) instead of riding every assignment exchange.
-    emb = (
-        load_table(spark, sf_dir, "embeddings")
-        .select("vec_id", _vecd("embedding").alias("v"))
-        .repartition("vec_id")
-        .persist()
-    )
+    emb = _vectors(spark, sf_dir).repartition("vec_id").persist()
     seeds = emb.filter(
         (F.col("vec_id") % KM_SEED_STEP == 0)
         & (F.col("vec_id") < KM_SEED_STEP * KM_K)

@@ -37,6 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.sources.formats import read_csv, read_json, read_orc
 from decision_tree_analytics_spark.sources.snapshots import CHECKOUT_WAREHOUSE
 from decision_tree_analytics_spark.sources.tables import (
@@ -130,7 +131,7 @@ def src_json_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
         F.count("value").cast("long").alias("n_valued"),
-        (F.floor(F.sum("value") * 1e6 + 0.5) / 1e6).alias("sum_value"),
+        round6(F.sum("value")).alias("sum_value"),
     )
 
 

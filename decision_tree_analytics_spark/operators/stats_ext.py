@@ -1636,7 +1636,7 @@ def rel_ewma_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "day",
         "cents",
-        (F.floor(ewma * 1e6 + 0.5) / 1e6).alias("ewma_hist"),
+        round6(ewma).alias("ewma_hist"),
         F.floor(
             (F.col("cents") - ewma) / F.nullif(ewma, F.lit(0.0)) * 1e6 + 0.5
         ).alias("dev_ppm"),
@@ -1714,8 +1714,8 @@ def rel_rolling_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
             "day",
             "cents",
             n.alias("n"),
-            (F.floor(slope * 1e6 + 0.5) / 1e6).alias("slope7"),
-            (F.floor(intercept * 1e6 + 0.5) / 1e6).alias("intercept7"),
+            round6(slope).alias("slope7"),
+            round6(intercept).alias("intercept7"),
         )
         .filter(F.col("n") == OLS_FRAME)
         .select(
@@ -1797,7 +1797,7 @@ def rel_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         "n_customers",
         "total_cents",
-        (F.floor(gini * 1e6 + 0.5) / 1e6).alias("gini"),
+        round6(gini).alias("gini"),
     )
 
 
@@ -1963,9 +1963,7 @@ def rel_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.min("nd").cast("long").alias("n_days"),
         F.min("n_pairs").cast("long").alias("n_pairs"),
-        (F.floor(F.min("ts_slope") * 1e6 + 0.5) / 1e6).alias(
-            "ts_slope_cents_per_day"
-        ),
+        round6(F.min("ts_slope")).alias("ts_slope_cents_per_day"),
         (F.floor((F.sum("r") / F.count(F.lit(1))) * 100 + 0.5) / 100).alias(
             "ts_intercept_cents"
         ),
@@ -2143,16 +2141,11 @@ def ml_mcc_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fp",
         "fn",
         "tn",
-        (F.floor(num / F.nullif(den, F.lit(0.0)) * 1e6 + 0.5) / 1e6).alias(
-            "mcc"
-        ),
+        round6(num / F.nullif(den, F.lit(0.0))).alias("mcc"),
         (
-            F.floor(
-                (po - pe) / F.nullif(F.lit(1.0) - pe, F.lit(0.0)) * 1e6 + 0.5
-            )
-            / 1e6
+            round6((po - pe) / F.nullif(F.lit(1.0) - pe, F.lit(0.0)))
         ).alias("kappa"),
-        (F.floor((tpr + tnr) / 2.0 * 1e6 + 0.5) / 1e6).alias("balanced_acc"),
+        round6((tpr + tnr) / 2.0).alias("balanced_acc"),
     )
 
 
@@ -2250,13 +2243,11 @@ def ml_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     unc = yb * (F.lit(1.0) - yb)
     return agg.select(
         F.col("n"),
-        (F.floor(brier * 1e6 + 0.5) / 1e6).alias("brier"),
-        (F.floor(rel * 1e6 + 0.5) / 1e6).alias("reliability"),
-        (F.floor(res * 1e6 + 0.5) / 1e6).alias("resolution"),
-        (F.floor(unc * 1e6 + 0.5) / 1e6).alias("uncertainty"),
-        (F.floor((brier - (rel - res + unc)) * 1e6 + 0.5) / 1e6).alias(
-            "decomp_gap"
-        ),
+        round6(brier).alias("brier"),
+        round6(rel).alias("reliability"),
+        round6(res).alias("resolution"),
+        round6(unc).alias("uncertainty"),
+        round6(brier - (rel - res + unc)).alias("decomp_gap"),
     )
 
 
@@ -2421,7 +2412,7 @@ def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     return fitted.crossJoin(F.broadcast(test)).select(
         "frac_16ths",
         "n_train",
-        (F.floor(F.col("b") * 1e6 + 0.5) / 1e6).alias("slope"),
+        round6(F.col("b")).alias("slope"),
         (F.floor(F.col("a") * 100 + 0.5) / 100).alias("intercept"),
         (F.floor(mse * 100 + 0.5) / 100).alias("test_mse"),
     )
@@ -2544,9 +2535,9 @@ def ml_threshold_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
         "fp",
         "fn",
         "tn",
-        (F.floor(prec * 1e6 + 0.5) / 1e6).alias("precision"),
-        (F.floor(rec * 1e6 + 0.5) / 1e6).alias("recall"),
-        (F.floor(f1 * 1e6 + 0.5) / 1e6).alias("f1"),
+        round6(prec).alias("precision"),
+        round6(rec).alias("recall"),
+        round6(f1).alias("f1"),
         f1.alias("_f1_raw"),
     )
     wbest = Window.orderBy(F.col("_f1_raw").desc(), F.col("thr_m").asc())

@@ -16,6 +16,7 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.streaming.events_stream import (
     events_stream,
     run_to_memory,
@@ -98,7 +99,7 @@ def stream_rate_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     return wins.crossJoin(F.broadcast(mean)).select(
         "window_start_us",
         "n_events",
-        (F.floor(F.col("n_events") / 60.0 * 1e6 + 0.5) / 1e6).alias("rate_per_min"),
+        round6(F.col("n_events") / 60.0).alias("rate_per_min"),
         (F.col("n_events") > 1.25 * F.col("mean_n")).cast("long").alias("is_spike"),
     )
 
@@ -125,9 +126,7 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.unix_micros("session_start").alias("session_start_us"),
         F.unix_micros("session_end").alias("session_end_us"),
         F.col("n_events").cast("long").alias("n_events"),
-        (F.floor(F.col("session_value") * 1e6 + 0.5) / 1e6).alias(
-            "session_value"
-        ),
+        round6(F.col("session_value")).alias("session_value"),
     )
 
 
@@ -208,7 +207,7 @@ def stream_enrich_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_mktsegment",
         "event_type",
         F.col("n_events").cast("long").alias("n_events"),
-        (F.floor(F.col("sum_value") * 1e6 + 0.5) / 1e6).alias("sum_value"),
+        round6(F.col("sum_value")).alias("sum_value"),
     )
 
 
@@ -228,7 +227,7 @@ def stream_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "n_events",
         "n_alarms",
-        (F.floor(F.col("final_s") * 1e6 + 0.5) / 1e6).alias("final_s"),
+        round6(F.col("final_s")).alias("final_s"),
     )
 
 
@@ -273,7 +272,7 @@ def stream_snapshot_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     landed = SnapshotTable(spark, table_path).read()
     return landed.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
-        (F.floor(F.sum("value") * 1e6 + 0.5) / 1e6).alias("sum_value"),
+        round6(F.sum("value")).alias("sum_value"),
     )
 
 

@@ -340,7 +340,7 @@ def ns_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     nd = F.size(F.array_distinct("sh")).cast("long")
     dup = F.when(
         n > 0,
-        F.floor((1 - nd.cast("double") / n.cast("double")) * 1e6 + 0.5) / 1e6,
+        round6(1 - nd.cast("double") / n.cast("double")),
     )
     return sh.select(
         "doc_id",
@@ -648,7 +648,7 @@ def ns_perplexity_proxy(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFr
         scored.select(
             "doc_id",
             "n_tokens",
-            (F.floor(F.col("xent") * 1e6 + 0.5) / 1e6).alias("bits_per_token"),
+            round6(F.col("xent")).alias("bits_per_token"),
         )
         .orderBy(F.col("bits_per_token").desc(), F.col("doc_id"))
         .limit(k)
@@ -1740,7 +1740,7 @@ def ns_bigram_lm(spark: SparkSession, sf_dir: str, k: int = 50) -> DataFrame:
         scored.select(
             "doc_id",
             "n_bigrams",
-            (F.floor(F.col("xent") * 1e6 + 0.5) / 1e6).alias("bits_per_bigram"),
+            round6(F.col("xent")).alias("bits_per_bigram"),
         )
         .orderBy(F.col("bits_per_bigram").desc(), F.col("doc_id"))
         .limit(k)

@@ -18,6 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from decision_tree_analytics_spark.operators._round import round6
 from decision_tree_analytics_spark.sources.tables import load_table
 
 
@@ -206,11 +207,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = load_table(spark, sf_dir, "supplier")
     rev = li.groupBy("l_suppkey").agg(
         (
-            F.floor(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))) * 1e6
-                + 0.5
-            )
-            / 1e6
+            round6(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))))
         ).alias("total_revenue")
     )
     top = rev.orderBy(

@@ -421,7 +421,7 @@ def udf_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "tok",
             "cnt",
-            (F.floor(F.col("cnt") / F.col("n") * 1e6 + 0.5) / 1e6).alias("frac"),
+            round6(F.col("cnt") / F.col("n")).alias("frac"),
         )
     )
     return tether_cache(result, toks)
@@ -579,7 +579,7 @@ def udf_holt_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     daily = ev.groupBy("event_type", "day").agg(
-        (F.floor(F.avg("value") * 1e6 + 0.5) / 1e6).alias("x")
+        round6(F.avg("value")).alias("x")
     )
     return daily.groupBy("event_type").applyInPandas(_holt_group, _HOLT_SCHEMA)
 

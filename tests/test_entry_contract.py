@@ -112,3 +112,25 @@ def test_modules_and_files_are_named_by_family_not_round():
             names += [f for f in files if f.endswith(".py")]
     offenders = sorted(n for n in names if bad.search(n))
     assert not offenders, f"round-numbered or pending names: {offenders}"
+
+
+def test_sweep_script_imports_its_own_checkout(tmp_path, monkeypatch):
+    # run_sweep.py puts the checkout it sits in first on sys.path, so a
+    # copy in a second checkout sweeps that checkout's code.
+    import importlib.util
+    import pathlib
+    import shutil
+    import sys
+
+    script = pathlib.Path(".claude", "skills", "verify", "run_sweep.py")
+    src = pathlib.Path(__file__).resolve().parent.parent / script
+    dst = tmp_path / script
+    dst.parent.mkdir(parents=True)
+    shutil.copy(src, dst)
+    monkeypatch.setattr(sys, "path", list(sys.path))
+    monkeypatch.setattr(sys, "argv", [str(dst), "--shard", "2/3"])
+    spec = importlib.util.spec_from_file_location("run_sweep_copy", dst)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    assert sys.path[0] == str(tmp_path)
+    assert mod.SHARD == (2, 3)

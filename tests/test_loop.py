@@ -4,8 +4,9 @@ The checkpoint width decides what partitioning the next round sees, so
 the two width forms are locked by the exchanges a consumer plans, each
 against the form it replaces or excludes.  A source guard keeps every
 ``localCheckpoint`` call inside the helper, every
-``defaultParallelism`` read inside ``operators/_parts.py``, and every
-tree save and load inside ``ml/registry.py``.
+``defaultParallelism`` read inside ``operators/_parts.py``, every
+tree save and load inside ``ml/registry.py``, and the embedding-vector
+load and SRP bucket CTEs inside ``operators/similarity.py``.
 """
 
 from __future__ import annotations
@@ -100,6 +101,8 @@ def test_iterate_checkpoints_every_round_but_the_last(spark):
         ("DecisionTreeRegressionModel.load(", "ml/registry.py"),
         (".write()", "ml/registry.py"),
         ("VectorAssembler", None),
+        ('_vecd("embedding")', "operators/similarity.py"),
+        ("pdots AS (", "operators/similarity.py"),
     ],
     ids=[
         "localCheckpoint",
@@ -108,12 +111,15 @@ def test_iterate_checkpoints_every_round_but_the_last(spark):
         "model_load",
         "model_write",
         "VectorAssembler",
+        "embedding_vectors",
+        "srp_bucket_ctes",
     ],
 )
 def test_token_only_in_its_home_module(token, home):
     # Lineage truncation lives in _loop.py, partition counts in
-    # _parts.py, and tree save/load in ml/registry.py (which pins what
-    # it saves and loads); a removed helper's name must not come back.
+    # _parts.py, tree save/load in ml/registry.py (which pins what it
+    # saves and loads), and the vector-search building blocks in
+    # similarity.py; a removed helper's name must not come back.
     helper = PACKAGE / home if home else None
     offenders = [
         f"{path.relative_to(PACKAGE)}:{n}"
