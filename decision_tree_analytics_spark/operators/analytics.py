@@ -17,7 +17,7 @@ stage is a Catalyst-planned shuffle on bounded keys:
   not mean N scans.
 
 Cross-engine notes (CLAUDE.md rules): the day key is
-``(ts div 1000) div 86_400_000_000`` ≡ DuckDB
+``ts_bucket(US_PER_DAY)`` ≡ DuckDB
 ``epoch_us(ts) // 86400000000``; all ratios floor-rounded at 1e-6 on
 both sides; count-ish columns cast to BIGINT.
 """
@@ -27,17 +27,14 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import (
+    US_PER_DAY,
+    hex_int,
+    round6,
+    ts_bucket,
+    ts_us,
+)
 from decision_tree_analytics_spark.sources.tables import load_table
-
-US_PER_DAY = 86_400_000_000
-
-
-def _day():
-    """Epoch-day key: int64-ns → µs → day, all integer division
-    (CLAUDE.md rule 1; a column expression must be built lazily —
-    no active SparkContext at import time)."""
-    return F.expr(f"(ts div 1000) div {US_PER_DAY}")
 
 
 def rel_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,7 +47,7 @@ def rel_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups on (cohort_day, day_offset) — bounded by span², regardless
     of user count."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", _day().alias("day")
+        "user_id", ts_bucket(US_PER_DAY).alias("day")
     )
     w = Window.partitionBy("user_id")
     c = e.withColumn("cohort_day", F.min("day").over(w))
@@ -78,7 +75,7 @@ def rel_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the data), so the running ``last(ignorenulls)`` never leaves
     a leading NULL."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", _day().alias("day"), "value"
+        "user_id", ts_bucket(US_PER_DAY).alias("day"), "value"
     )
     daily = e.groupBy("user_id", "day").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -148,7 +145,7 @@ def rel_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     touch (organic) are dropped here; a left variant would keep them
     with NULL channel."""
     e = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", "event_type", F.expr("ts div 1000").alias("t")
+        "event_id", "user_id", "event_type", ts_us().alias("t")
     )
     w = (
         Window.partitionBy("user_id")
@@ -262,7 +259,7 @@ def rel_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     closes each version.  No self-join, no MERGE loop; the open
     (current) version carries NULL valid_to on both engines."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", F.expr("ts div 1000").alias("t")
+        "user_id", "event_id", "event_type", ts_us().alias("t")
     )
     w = Window.partitionBy("user_id").orderBy("t", "event_id")
     changes = e.withColumn("prev", F.lag("event_type").over(w)).filter(
@@ -286,7 +283,9 @@ def rel_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the input to per-day new-user counts, and the running sum runs
     over the tiny day-cardinality table.  The unpartitioned window is
     deliberate and safe: by then the data is one row per day."""
-    e = load_table(spark, sf_dir, "events").select("user_id", _day().alias("day"))
+    e = load_table(spark, sf_dir, "events").select(
+        "user_id", ts_bucket(US_PER_DAY).alias("day")
+    )
     days = e.select("day").distinct()
     first = e.groupBy("user_id").agg(F.min("day").alias("day"))
     new = first.groupBy("day").agg(F.count(F.lit(1)).alias("new_users"))
@@ -322,7 +321,7 @@ def rel_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-plan exactly like graph_pagerank (and mirrored as chained CTEs
     in the oracle, so the whole estimator is hash-verified)."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", F.expr("ts div 1000").alias("t")
+        "user_id", "event_id", "event_type", ts_us().alias("t")
     )
     w = Window.partitionBy("user_id").orderBy("t", "event_id")
     seq = e.select(
@@ -431,7 +430,7 @@ def rel_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single-row conditional rollup; the z arithmetic is projection
     over that one row."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", F.expr("ts div 1000").alias("t")
+        "user_id", "event_id", "event_type", ts_us().alias("t")
     )
     w = Window.partitionBy("user_id").orderBy("t", "event_id")
     # Metric: activation — the user's FIRST event is a purchase.  A
@@ -448,15 +447,7 @@ def rel_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     arm_a = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ab-"), F.col("user_id").cast("string"))),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
+        hex_int(F.md5(F.concat(F.lit("ab-"), F.col("user_id").cast("string"))))
         % 2
         == 0
     )
@@ -501,10 +492,10 @@ def rel_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single exchange + sort.  ANSI: the duration denominator is
     nullif-guarded — a user whose events all share one timestamp
     yields NULL twap identically in both engines (CLAUDE.md ANSI
-    rule).  Time key: epoch-µs via ``ts div 1000`` ≡ epoch_us(ts);
+    rule).  Time key: epoch-µs via ``ts_us()`` ≡ epoch_us(ts);
     segment weights are exact integer µs."""
     ev = load_table(spark, sf_dir, "events")
-    t = F.expr("ts div 1000")
+    t = ts_us()
     w = Window.partitionBy("user_id").orderBy(t, F.col("event_id"))
     seg = ev.select(
         "user_id",
@@ -793,7 +784,7 @@ def rel_pit_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_type",
         "value",
-        F.expr("ts div 1000").alias("ts_us"),
+        ts_us().alias("ts_us"),
     )
     w_life = (
         Window.partitionBy("user_id")

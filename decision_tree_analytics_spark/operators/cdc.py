@@ -29,7 +29,12 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import (
+    US_PER_DAY,
+    hex_int,
+    round6,
+    ts_bucket,
+)
 from decision_tree_analytics_spark.sources.tables import load_table
 
 BASE_MAX = 400
@@ -506,7 +511,7 @@ def snap_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     that models it; sizes are exact BIGINT character sums so both
     engines compute identical bytes (props is ASCII JSON)."""
     ev = load_table(spark, sf_dir, "events")
-    day = F.expr("ts div 1000 div 86400000000")
+    day = ts_bucket(US_PER_DAY)
     files = ev.groupBy(
         F.col("event_type"), day.alias("day")
     ).agg(
@@ -586,10 +591,9 @@ def _order_layout_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("long")
         .alias("day"),
-        F.expr(
-            "CAST(conv(substring(md5(CAST(o_orderkey AS STRING)), 1, 8),"
-            f" 16, 10) AS BIGINT) % {N_HASH_FILES}"
-        ).alias("hash_fid"),
+        (hex_int(F.md5(F.col("o_orderkey").cast("string"))) % N_HASH_FILES).alias(
+            "hash_fid"
+        ),
     )
     e = o.select(
         F.explode(
@@ -815,14 +819,8 @@ def snap_vacuum_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     files = man.select(
         "file_id",
         (F.col("n_rows") * VACUUM_ROW_BYTES).cast("long").alias("bytes"),
-        F.expr(
-            "CAST(conv(substring(md5(CAST(file_id AS STRING)), 1, 8),"
-            " 16, 10) AS BIGINT) % 4"
-        ).alias("born"),
-        F.expr(
-            "CAST(conv(substring(md5(CAST(file_id AS STRING)), 9, 8),"
-            " 16, 10) AS BIGINT) % 3"
-        ).alias("extra"),
+        (hex_int(F.md5(F.col("file_id").cast("string"))) % 4).alias("born"),
+        (hex_int(F.md5(F.col("file_id").cast("string")), 9, 8) % 3).alias("extra"),
     ).select(
         "file_id",
         "bytes",

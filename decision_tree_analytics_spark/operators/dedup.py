@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._loop import checkpoint
 from decision_tree_analytics_spark.operators._parts import label_parts, spread
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import hex_int, round6
 from decision_tree_analytics_spark.sources.tables import (
     load_table,
     parquet_footer_tag,
@@ -113,8 +113,8 @@ def _minhash_wide(d: DataFrame) -> DataFrame:
         F.explode(F.array_distinct(_word_shingles(F.col("toks")))).alias("shingle"),
     )
     base = F.md5(F.col("shingle"))
-    h1 = F.conv(F.substring(base, 1, 8), 16, 10).cast("long")
-    h2 = F.conv(F.substring(base, 9, 8), 16, 10).cast("long") * 2 + 1
+    h1 = hex_int(base)
+    h2 = hex_int(base, 9, 8) * 2 + 1
     hashed = shingled.select(
         "doc_id",
         *[((h1 + i * h2) % MINHASH_PRIME).alias(f"h{i}") for i in range(MINHASH_K)],
@@ -1389,11 +1389,7 @@ def dedup_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def pos_array():
         return F.array(
-            *[
-                F.conv(F.substring("fp", 1 + 8 * j, 8), 16, 10).cast("long")
-                % BLOOM_BITS
-                for j in range(BLOOM_K)
-            ]
+            *[hex_int("fp", 1 + 8 * j, 8) % BLOOM_BITS for j in range(BLOOM_K)]
         )
 
     bits = (

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._loop import checkpoint, iterate
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import round6
 from decision_tree_analytics_spark.sources.tables import load_table
 
 PR_ITERS = 3
@@ -622,7 +622,7 @@ def graph_mst(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: costs are BIGINT micro-units made DISTINCT by
     appending the edge's rank in (a, b) order (cost*1024 + rank —
     ≤300 edges < 1024, no collision, and the perturbation never
-    reorders真distinct costs); ZERO floats anywhere, so no rounding
+    reorders distinct costs); ZERO floats anywhere, so no rounding
     is needed at all.  The rank window and the O(n³) squaring run on
     the CONTRACTED entity graph (≤25 nodes / ≤300 edges — the
     bounded-grid rule): at 100 TB the expensive stage is the fact

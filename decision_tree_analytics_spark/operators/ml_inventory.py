@@ -19,7 +19,12 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from decision_tree_analytics_spark.ml.features import FEATURES_COL, assemble_features
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._loop import checkpoint, iterate
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import (
+    US_PER_HOUR,
+    hex_int,
+    round6,
+    ts_bucket,
+)
 from decision_tree_analytics_spark.sources.tables import load_table
 
 _FEATURES = {"l_quantity": 0, "l_discount": 1, "l_tax": 2}
@@ -309,12 +314,7 @@ def ml_baseline_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_returnflag", F.col("l_extendedprice").alias("y")
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % 10
-    )
+    bucket = hex_int(F.md5(F.col("l_orderkey").cast("string"))) % 10
     b = li.withColumn("bucket", bucket)
     means = (
         b.filter(F.col("bucket") < 8)
@@ -353,12 +353,7 @@ def ml_cv_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_returnflag", "l_linestatus",
         F.col("l_extendedprice").alias("y"),
     )
-    bucket = (
-        F.conv(
-            F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 8), 16, 10
-        ).cast("long")
-        % 10
-    )
+    bucket = hex_int(F.md5(F.col("l_orderkey").cast("string"))) % 10
     b = li.withColumn("bucket", bucket).persist()
     train = b.filter(F.col("bucket") < 7)
     val = b.filter((F.col("bucket") >= 7) & (F.col("bucket") <= 8))
@@ -661,12 +656,7 @@ def ml_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         F.regexp_extract_all(F.lower("text"), F.lit("[a-z]+"), 0).alias("toks"),
-        (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-            ).cast("long")
-            % 10
-        ).alias("bucket"),
+        (hex_int(F.md5(F.col("doc_id").cast("string"))) % 10).alias("bucket"),
     )
     train = d.filter(F.col("bucket") < 8)
     test = d.filter(F.col("bucket") >= 8)
@@ -1573,12 +1563,7 @@ def ml_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.least(F.floor(F.col("l_discount") * 100), F.lit(PSI_BINS - 1))
         .cast("long")
         .alias("bin"),
-        (
-            F.conv(
-                F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 8), 16, 10
-            ).cast("long")
-            % 10
-        ).alias("bucket"),
+        (hex_int(F.md5(F.col("l_orderkey").cast("string"))) % 10).alias("bucket"),
     )
     g = li.filter((F.col("bucket") < 8) | (F.col("bucket") == 9)).groupBy(
         "bin"
@@ -1717,14 +1702,7 @@ def ml_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     smoothed encoding is always defined."""
     o = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("category"),
-        (
-            F.conv(
-                F.substring(F.md5(F.col("o_orderkey").cast("string")), 1, 8),
-                16,
-                10,
-            ).cast("long")
-            % TE_FOLDS
-        ).alias("fold"),
+        (hex_int(F.md5(F.col("o_orderkey").cast("string"))) % TE_FOLDS).alias("fold"),
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
     )
     g = o.groupBy("category", "fold").agg(
@@ -1805,16 +1783,9 @@ def ml_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("l_quantity").cast("double").alias("x"),
             F.col("l_extendedprice").alias("y"),
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(F.col("l_orderkey").cast("string")), 1, 8
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % 10
-            ).alias("bucket"),
+            (hex_int(F.md5(F.col("l_orderkey").cast("string"))) % 10).alias(
+                "bucket"
+            ),
         )
         .persist()
     )
@@ -2015,7 +1986,7 @@ def ml_quantile_reg(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = ev.select(
         "event_type",
         F.floor(F.col("value") * 100 + F.lit(0.5)).alias("y"),
-        F.expr("((ts div 1000) div 3600000000) % 24").alias("h"),
+        (ts_bucket(US_PER_HOUR) % 24).alias("h"),
     )
     sums = []
     for i, (a, b) in enumerate(QREG_COMBOS):

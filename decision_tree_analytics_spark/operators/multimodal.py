@@ -39,7 +39,7 @@ from pyspark.sql.types import (
 )
 
 from decision_tree_analytics_spark.operators._parts import spread
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import hex_int, round6
 from decision_tree_analytics_spark.sources.tables import load_table
 
 META_SCHEMA = StructType(
@@ -520,9 +520,7 @@ def mm_shard_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.octet_length("text").cast("long").alias("n_bytes"),
-        F.conv(F.substring(F.md5(F.col("text")), 1, 8), 16, 10)
-        .cast("long")
-        .alias("h"),
+        hex_int(F.md5(F.col("text"))).alias("h"),
     )
     bucket = F.expr(f"doc_id div {SHARD_BUCKET_DOCS}")
     w = (

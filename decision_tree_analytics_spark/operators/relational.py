@@ -18,7 +18,7 @@ Cross-engine determinism rules (every query here has a DuckDB oracle):
 * DuckDB ``SUM(integer)`` returns HUGEINT — oracles cast back to
   BIGINT;
 * ``events.ts`` time arithmetic uses integer epoch-µs on both engines
-  (Spark: ``ts div 1000`` of the nanos int64; DuckDB: ``epoch_us(ts)``
+  (Spark: ``ts_us()`` of the nanos int64; DuckDB: ``epoch_us(ts)``
   after its ns→µs read truncation);
 * ``timestamp_ntz`` columns (``o_orderdate``, ``l_shipdate``) are
   naive on both engines, so date-part extraction is timezone-free.
@@ -33,7 +33,14 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._parts import spread
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import (
+    US_PER_DAY,
+    US_PER_HOUR,
+    hex_int,
+    round6,
+    ts_bucket,
+    ts_us,
+)
 from decision_tree_analytics_spark.operators.dedup import tokens
 from decision_tree_analytics_spark.sources.tables import load_table
 
@@ -232,8 +239,8 @@ def q17_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Integer `div`, never float division: int64-ns magnitudes exceed
     # double's 53-bit mantissa, so (ts/1000).cast would mis-key ~12% of
     # rows by 1µs (CLAUDE.md rule 1).
-    ts_us = F.expr("ts div 1000")
-    w = Window.partitionBy("user_id").orderBy(ts_us, F.col("event_id"))
+    us = ts_us()
+    w = Window.partitionBy("user_id").orderBy(us, F.col("event_id"))
     return ev.select(
         "event_id",
         "user_id",
@@ -444,15 +451,15 @@ def rel_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rel_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     gap_us = 30 * 60 * 1_000_000
-    ts_us = F.expr("ts div 1000")
-    w = Window.partitionBy("user_id").orderBy(ts_us, F.col("event_id"))
+    us = ts_us()
+    w = Window.partitionBy("user_id").orderBy(us, F.col("event_id"))
     with_gap = ev.select(
         "event_id",
         "user_id",
         "value",
-        ts_us.alias("t"),
+        us.alias("t"),
         F.when(
-            (ts_us - F.lag(ts_us).over(w)) > gap_us, F.lit(1)
+            (us - F.lag(us).over(w)) > gap_us, F.lit(1)
         ).otherwise(F.lit(0)).alias("is_new"),
     )
     wc = Window.partitionBy("user_id").orderBy("t", "event_id").rowsBetween(
@@ -490,11 +497,11 @@ def rel_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # aggregation: one shuffle on user_id, no self-join.
 def rel_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    ts_us = F.expr("ts div 1000")
+    us = ts_us()
     steps = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", ts_us)).alias("t_signup"),
+        F.min(F.when(F.col("event_type") == "signup", us)).alias("t_signup"),
         F.max(
-            F.when(F.col("event_type") == "purchase", ts_us)
+            F.when(F.col("event_type") == "purchase", us)
         ).alias("t_last_purchase"),
     )
     return steps.select(
@@ -668,7 +675,7 @@ RANGE_JOIN_US = 300_000_000  # 5 minutes in µs
 def rel_range_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = (
         load_table(spark, sf_dir, "events")
-        .select("event_id", "user_id", F.expr("ts div 1000").alias("us"))
+        .select("event_id", "user_id", ts_us().alias("us"))
         .filter(F.col("user_id") < 20)
     )
     a = ev.select(
@@ -712,7 +719,7 @@ def rel_stats_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events").select(
         "event_type",
         "value",
-        F.expr(f"(ts div 1000) div {DAY_US}").cast("double").alias("day_idx"),
+        ts_bucket(US_PER_DAY).cast("double").alias("day_idx"),
     )
     return ev.groupBy("event_type").agg(
         round6(F.corr("value", "day_idx")).alias("corr_value_day"),
@@ -850,12 +857,9 @@ def rel_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     u = d.select(
         "event_type",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 13), 16, 10
-            ).cast("long")
-            / KMV_SCALE
-        ).alias("u"),
+        (hex_int(F.md5(F.col("user_id").cast("string")), 1, 13) / KMV_SCALE).alias(
+            "u"
+        ),
     )
     w = Window.partitionBy("event_type").orderBy("u")
     kmin = (
@@ -898,12 +902,9 @@ def rel_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     u = d.select(
         "event_type",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 13), 16, 10
-            ).cast("long")
-            / KMV_SCALE
-        ).alias("u"),
+        (hex_int(F.md5(F.col("user_id").cast("string")), 1, 13) / KMV_SCALE).alias(
+            "u"
+        ),
     )
     w = Window.partitionBy("event_type").orderBy("u")
     ranked = u.withColumn("rn", F.row_number().over(w))
@@ -979,7 +980,7 @@ def rel_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "event_id",
         "event_type",
-        F.expr("ts div 1000").alias("ts_us"),
+        ts_us().alias("ts_us"),
     )
     seq = ev.groupBy("user_id").agg(
         F.array_join(
@@ -1002,8 +1003,6 @@ def rel_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-HOUR_US = 3_600_000_000
-DAY_US = 24 * HOUR_US
 # Retention cutoff: epoch-µs of 2000-01-01 — the rollup ignores
 # anything older (the hypertable retention-window pattern; the filter
 # is a pushable integer predicate on the scan).
@@ -1024,11 +1023,11 @@ def rel_time_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the cross-engine time-key contract; grouping_id disambiguates
     NULL-bucket rows from real NULLs."""
     ev = load_table(spark, sf_dir, "events").select(
-        F.expr("ts div 1000").alias("us"), "event_type", "value"
+        ts_us().alias("us"), "event_type", "value"
     )
     b = ev.filter(F.col("us") >= ROLLUP_CUTOFF_US).select(
-        F.expr(f"us div {DAY_US} * {DAY_US}").alias("day_us"),
-        F.expr(f"us div {HOUR_US} * {HOUR_US}").alias("hour_us"),
+        F.expr(f"us div {US_PER_DAY} * {US_PER_DAY}").alias("day_us"),
+        F.expr(f"us div {US_PER_HOUR} * {US_PER_HOUR}").alias("hour_us"),
         "event_type",
         "value",
     )
@@ -1071,7 +1070,7 @@ def rel_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     tagged = ev.filter(F.col("event_type").isin("view", "purchase")).select(
         "event_id",
         "user_id",
-        F.expr("ts div 1000").alias("us"),
+        ts_us().alias("us"),
         F.when(F.col("event_type") == "purchase", F.lit(1))
         .otherwise(F.lit(0))
         .alias("is_left"),
@@ -1121,9 +1120,7 @@ def rel_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-visible; sampled ids are checked by the membership test in
     tests/test_stratified_sample.py."""
     ev = load_table(spark, sf_dir, "events")
-    bucket = F.conv(
-        F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
-    ).cast("long") % SAMPLE_MOD
+    bucket = hex_int(F.md5(F.col("event_id").cast("string"))) % SAMPLE_MOD
     kept = ev.filter(bucket < SAMPLE_KEEP)
     return kept.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_sampled"),
@@ -1137,9 +1134,7 @@ def stratified_sample_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     query aggregates per stratum so the oracle pins the rates; this is
     what a pipeline would actually consume)."""
     ev = load_table(spark, sf_dir, "events")
-    bucket = F.conv(
-        F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
-    ).cast("long") % SAMPLE_MOD
+    bucket = hex_int(F.md5(F.col("event_id").cast("string"))) % SAMPLE_MOD
     return ev.filter(bucket < SAMPLE_KEEP)
 
 
@@ -1231,12 +1226,9 @@ def rel_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         # also an ANSI divide-by-zero (one appeared at sf0.1).
         .filter(F.col("value") > 0)
     )
-    u = (
-        F.conv(
-            F.substring(F.md5(F.col("event_id").cast("string")), 1, 13), 16, 10
-        ).cast("long")
-        + 1
-    ) / F.lit(_WS_DENOM)
+    u = (hex_int(F.md5(F.col("event_id").cast("string")), 1, 13) + 1) / F.lit(
+        _WS_DENOM
+    )
     pr = F.floor(F.log(u) / F.col("value") * 1e9 + 0.5) / 1e9
     w = Window.partitionBy("event_type").orderBy(
         F.col("pr").desc(), F.col("event_id").asc()
@@ -1266,7 +1258,7 @@ def rel_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     physical order).  One shuffle on user_id; frame state is bounded
     by events-per-hour-per-user."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", F.expr("ts div 1000").alias("ts_us"), "value"
+        "user_id", "event_id", ts_us().alias("ts_us"), "value"
     )
     w = (
         Window.partitionBy("user_id")
@@ -1319,7 +1311,7 @@ def rel_table_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderstatus",
         F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long"),
     )
-    h = F.conv(F.substring(F.md5(canon), 1, 8), 16, 10).cast("long")
+    h = hex_int(F.md5(canon))
     return o.select(h.alias("h")).agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
         F.sum("h").cast("long").alias("sum_hash"),
@@ -1479,7 +1471,7 @@ ORACLES = {
     ),
     "rel_stats_fns": (
         f"WITH b AS (SELECT event_type, value,"
-        f"   CAST(epoch_us(ts) // {DAY_US} AS DOUBLE) AS day_idx FROM events)"
+        f"   CAST(epoch_us(ts) // {US_PER_DAY} AS DOUBLE) AS day_idx FROM events)"
         " SELECT event_type,"
         " floor(corr(value, day_idx) * 1e6 + 0.5) / 1e6 AS corr_value_day,"
         " floor(stddev_samp(value) * 1e6 + 0.5) / 1e6 AS stddev_value,"
@@ -1624,8 +1616,8 @@ ORACLES = {
         " FROM t"
     ),
     "rel_time_rollup": (
-        f"WITH b AS (SELECT (epoch_us(ts) // {DAY_US}) * {DAY_US} AS day_us,"
-        f"   (epoch_us(ts) // {HOUR_US}) * {HOUR_US} AS hour_us,"
+        f"WITH b AS (SELECT (epoch_us(ts) // {US_PER_DAY}) * {US_PER_DAY} AS day_us,"
+        f"   (epoch_us(ts) // {US_PER_HOUR}) * {US_PER_HOUR} AS hour_us,"
         "   event_type, value FROM events"
         f"   WHERE epoch_us(ts) >= {ROLLUP_CUTOFF_US})"
         " SELECT day_us, hour_us, event_type,"
@@ -2013,13 +2005,7 @@ def rel_countmin_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def pos_cols():
         md = F.md5(F.col("tok"))
-        return F.array(
-            *[
-                F.conv(F.substring(md, 1 + 8 * j, 8), 16, 10).cast("long")
-                % CMS_W
-                for j in range(CMS_D)
-            ]
-        )
+        return F.array(*[hex_int(md, 1 + 8 * j, 8) % CMS_W for j in range(CMS_D)])
 
     posed = toks.select("tok", F.posexplode(pos_cols()).alias("j", "pos"))
     sketch = posed.groupBy("j", "pos").agg(
@@ -2121,11 +2107,7 @@ def rel_hll_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     h = d.select(
         "event_type",
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 13), 16, 10
-        )
-        .cast("long")
-        .alias("hv"),
+        hex_int(F.md5(F.col("user_id").cast("string")), 1, 13).alias("hv"),
     )
     b = h.select(
         "event_type",
@@ -2228,7 +2210,7 @@ FROM est
 # days).  Day key: epoch-µs integer division (rule 1 — never float).
 def rel_gaps_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    day = F.expr("ts div 1000 div 86400000000")
+    day = ts_bucket(US_PER_DAY)
     days = ev.select("user_id", day.alias("day")).distinct()
     w = Window.partitionBy("user_id").orderBy("day")
     grp = days.withColumn("grp", F.col("day") - F.row_number().over(w))
@@ -2285,12 +2267,12 @@ def rel_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     interpolate at rank p·(n−1); interpolation between exact integers
     is the identical single IEEE op on both engines)."""
     ev = load_table(spark, sf_dir, "events")
-    ts_us = F.expr("ts div 1000")
+    us = ts_us()
     per_user = ev.groupBy("user_id").agg(
-        F.min(F.when(F.col("event_type") == "signup", ts_us)).alias("t_signup")
+        F.min(F.when(F.col("event_type") == "signup", us)).alias("t_signup")
     )
     purch = (
-        ev.select("user_id", F.col("event_type"), ts_us.alias("t"))
+        ev.select("user_id", F.col("event_type"), us.alias("t"))
         .join(per_user, "user_id")
         .filter(
             (F.col("event_type") == "purchase") & (F.col("t") > F.col("t_signup"))

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._loop import iterate
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import round6
 from decision_tree_analytics_spark.operators.similarity import _cos, _vectors
 from decision_tree_analytics_spark.sources.tables import load_table
 

@@ -33,7 +33,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._parts import spread
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import hex_int, round6
 from decision_tree_analytics_spark.sources.tables import load_table
 
 N_PLANES = 16
@@ -1364,12 +1364,7 @@ def sim_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines compute the same rounded expression tree."""
     e = load_table(spark, sf_dir, "embeddings").select(
         "label",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("vec_id").cast("string")), 1, 8), 16, 10
-            ).cast("long")
-            % 2
-        ).alias("split"),
+        (hex_int(F.md5(F.col("vec_id").cast("string"))) % 2).alias("split"),
         F.posexplode(_vecd("embedding")).alias("i", "x"),
     )
     g = e.groupBy("label", "split", "i").agg(

@@ -37,7 +37,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import round6
 from decision_tree_analytics_spark.sources.formats import read_csv, read_json, read_orc
 from decision_tree_analytics_spark.sources.snapshots import CHECKOUT_WAREHOUSE
 from decision_tree_analytics_spark.sources.tables import (

@@ -22,7 +22,7 @@ two bounded-key aggregate passes:
 * chi-square reduces to the |types|×|dow| contingency table, then a
   handful of single-row joins — all post-contingency tables are tiny.
 
-Cross-engine notes (CLAUDE.md rules): time keys via ``ts div 1000``;
+Cross-engine notes (CLAUDE.md rules): time keys via ``ts_us()``;
 doubles floor-rounded at 1e-6 on both sides; counts cast BIGINT;
 Spark exact ``percentile`` ≡ DuckDB ``quantile_cont`` (both
 interpolate at rank p·(n-1)).
@@ -33,11 +33,15 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import (
+    US_PER_DAY,
+    hex_int,
+    round6,
+    ts_bucket,
+    ts_us,
+)
 from decision_tree_analytics_spark.operators.dedup import tokens
 from decision_tree_analytics_spark.sources.tables import load_table
-
-US_PER_DAY = 86_400_000_000
 
 
 def rel_regression_fns(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -75,7 +79,7 @@ def rel_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny matrix, not a second scan.  The classic funnel/behavior
     model build — at 100 TB the matrix is still 25 rows."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", F.expr("ts div 1000").alias("t")
+        "user_id", "event_id", "event_type", ts_us().alias("t")
     )
     w = Window.partitionBy("user_id").orderBy("t", "event_id")
     pairs = e.withColumn("next_type", F.lead("event_type").over(w)).filter(
@@ -151,7 +155,7 @@ def rel_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     actually reads); the global χ² is the sum of `contrib`."""
     e = load_table(spark, sf_dir, "events").select(
         F.col("event_type"),
-        ((F.expr(f"(ts div 1000) div {US_PER_DAY}") + 4) % 7).alias("dow"),
+        ((ts_bucket(US_PER_DAY) + 4) % 7).alias("dow"),
     )
     cells = e.groupBy("event_type", "dow").agg(
         F.count(F.lit(1)).cast("double").alias("o")
@@ -188,7 +192,7 @@ def rel_seq_patterns(spark: SparkSession, sf_dir: str, k: int = 20) -> DataFrame
     TakeOrderedAndProject (per-partition heads, no global sort).
     Tie-break: pattern lexicographic, so the cut is deterministic."""
     e = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", F.expr("ts div 1000").alias("t")
+        "user_id", "event_id", "event_type", ts_us().alias("t")
     )
     w = Window.partitionBy("user_id").orderBy("t", "event_id")
     tri = (
@@ -216,7 +220,7 @@ def rel_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e-6."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        ((F.expr(f"(ts div 1000) div {US_PER_DAY}") + 4) % 7).alias("dow"),
+        ((ts_bucket(US_PER_DAY) + 4) % 7).alias("dow"),
     )
     cells = e.groupBy("dow", "event_type").agg(
         F.count(F.lit(1)).cast("double").alias("n")
@@ -317,8 +321,7 @@ def ml_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     = the document's language column.  Map-only assignment + one
     bounded aggregate."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    bucket = F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-                    ).cast("long") % 10
+    bucket = hex_int(F.md5(F.col("doc_id").cast("string"))) % 10
     split = (
         F.when(bucket < SPLIT_BUCKETS[0], "train")
         .when(bucket < SPLIT_BUCKETS[0] + SPLIT_BUCKETS[1], "val")
@@ -372,7 +375,7 @@ def rel_top_movers(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
     that tiny grid.  Deterministic cut: |Δ| desc, then type/week."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.expr(f"(ts div 1000) div {US_PER_DAY * 7}").alias("week"),
+        ts_bucket(US_PER_DAY * 7).alias("week"),
     )
     cells = e.groupBy("event_type", "week").agg(
         F.count(F.lit(1)).cast("long").alias("n")
@@ -409,7 +412,7 @@ def rel_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus size), so the deliberately global window is a constant-size
     driver-of-one-task stage, not a scale hazard."""
     e = load_table(spark, sf_dir, "events").select(
-        F.expr(f"(ts div 1000) div {US_PER_DAY}").alias("day")
+        ts_bucket(US_PER_DAY).alias("day")
     )
     daily = e.groupBy("day").agg(F.count(F.lit(1)).cast("double").alias("n"))
     w = Window.orderBy("day")
@@ -436,7 +439,7 @@ def rel_agg_quantifiers(spark: SparkSession, sf_dir: str) -> DataFrame:
     branch ranks the |types|×7 cell grid."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        ((F.expr(f"(ts div 1000) div {US_PER_DAY}") + 4) % 7).alias("dow"),
+        ((ts_bucket(US_PER_DAY) + 4) % 7).alias("dow"),
         "value",
     )
     cells = e.groupBy("event_type", "dow").agg(F.count(F.lit(1)).alias("n"))
@@ -650,7 +653,7 @@ def rel_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = load_table(spark, sf_dir, "events").select(
         F.col("event_type"),
-        ((F.expr(f"(ts div 1000) div {US_PER_DAY}") + 4) % 7).alias("dow"),
+        ((ts_bucket(US_PER_DAY) + 4) % 7).alias("dow"),
     )
     cells = (
         e.groupBy("event_type", "dow")
@@ -990,7 +993,7 @@ def rel_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
-            F.expr(f"(ts div 1000) div {US_PER_DAY}").alias("day"),
+            ts_bucket(US_PER_DAY).alias("day"),
             "value",
         )
     )
@@ -1038,7 +1041,7 @@ def rel_freshness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     mark joins back as a 1-row broadcast.  Times are integer epoch-µs
     (rule 2: never emit timestamp-typed columns)."""
     ev = load_table(spark, sf_dir, "events").select(
-        "event_type", F.expr("ts div 1000").alias("t_us")
+        "event_type", ts_us().alias("t_us")
     )
     per_type = ev.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n_events"),
@@ -1151,12 +1154,7 @@ def ml_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("value").isNotNull()
     ).select(
         "value",
-        (
-            F.conv(
-                F.substring(F.md5(F.col("event_id").cast("string")), 1, 8), 16, 10
-            ).cast("long")
-            % 2
-        ).alias("split"),
+        (hex_int(F.md5(F.col("event_id").cast("string"))) % 2).alias("split"),
     )
     rng = ev.agg(
         F.min("value").alias("lo"), F.max("value").alias("hi")
@@ -1455,7 +1453,7 @@ def rel_viterbi_states(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected counts and asserts exact equality (the Kruskal-style
     algorithmic cross-check)."""
     ev = load_table(spark, sf_dir, "events").select(
-        "user_id", F.expr(f"(ts div 1000) div {US_PER_DAY}").alias("day")
+        "user_id", ts_bucket(US_PER_DAY).alias("day")
     )
     min_day = ev.agg(F.min("day").alias("d0"))
     w = (
@@ -1607,7 +1605,7 @@ def rel_ewma_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagates identically in both engines."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.expr(f"(ts div 1000) div {US_PER_DAY}").alias("day"),
+        ts_bucket(US_PER_DAY).alias("day"),
         F.floor(F.col("value") * 100 + 0.5).alias("cents"),
     )
     daily = e.groupBy("event_type", "day").agg(
@@ -1690,7 +1688,7 @@ def rel_rolling_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     grid; the window partitions by event_type over it."""
     e = load_table(spark, sf_dir, "events").select(
         "event_type",
-        F.expr(f"(ts div 1000) div {US_PER_DAY}").alias("day"),
+        ts_bucket(US_PER_DAY).alias("day"),
         F.floor(F.col("value") * 100 + 0.5).alias("cents"),
     )
     daily = e.groupBy("event_type", "day").agg(
@@ -1912,7 +1910,7 @@ def rel_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     The intercept repeats the trick on per-day residuals
     y_i − slope·x_i with x rebased to day − min(day)."""
     e = load_table(spark, sf_dir, "events").select(
-        F.expr(f"(ts div 1000) div {US_PER_DAY}").alias("day"),
+        ts_bucket(US_PER_DAY).alias("day"),
         F.floor(F.col("value") * 100 + 0.5).alias("cents"),
     )
     daily = e.groupBy("day").agg(F.sum("cents").cast("long").alias("y"))
@@ -2016,7 +2014,7 @@ def rel_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one corpus-collapsing aggregate, then window + rank over
     the bounded grid."""
     e = load_table(spark, sf_dir, "events").select(
-        F.expr(f"(ts div 1000) div {US_PER_DAY}").alias("day"),
+        ts_bucket(US_PER_DAY).alias("day"),
         F.floor(F.col("value") * 100 + 0.5).alias("cents"),
     )
     daily = e.groupBy("day").agg(F.sum("cents").cast("long").alias("y"))
@@ -2334,21 +2332,15 @@ def ml_learning_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     nullif rather than raising, rule 8)."""
     li = load_table(spark, sf_dir, "lineitem").select(
         (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "-",
-                            F.col("l_orderkey").cast("string"),
-                            F.col("l_linenumber").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
+            hex_int(
+                F.md5(
+                    F.concat_ws(
+                        "-",
+                        F.col("l_orderkey").cast("string"),
+                        F.col("l_linenumber").cast("string"),
+                    )
+                )
+            )
             % LC_BUCKETS
         ).alias("bucket"),
         F.col("l_quantity").cast("long").alias("x"),
@@ -2630,21 +2622,15 @@ def ml_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         F.explode(F.sequence(F.lit(0), F.lit(BOOT_REPLICAS - 1))).alias("b"),
     )
-    draw = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "-",
-                    F.col("o_orderkey").cast("string"),
-                    F.col("b").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    draw = hex_int(
+        F.md5(
+            F.concat_ws(
+                "-",
+                F.col("o_orderkey").cast("string"),
+                F.col("b").cast("string"),
+            )
+        )
+    )
     w = (
         F.when(draw < BOOT_T0, 0)
         .when(draw < BOOT_T1, 1)
@@ -2754,7 +2740,7 @@ def rel_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: per-user X/Y are exact BIGINT cent sums (one
     conditional-aggregation pass over events, pre/post split on the
-    integer epoch-day key `ts div 1000 div 86400000000` — the µs-exact
+    integer epoch-day key `ts_bucket(US_PER_DAY)` — the µs-exact
     rule-1 idiom); the moment sums Σx, Σy, Σx², Σxy are exact BIGINTs
     (bounded: cents ≤ ~1e6/user ⇒ x·y ≤ 1e12, Σ ≤ 1e12·|users| — fine
     through sf100, rescale to dollars beyond); θ combines them in
@@ -2764,7 +2750,7 @@ def rel_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arms via md5(user_id) parity (rule 6).  Scale: two aggregates and
     a broadcast of one scalar row — map-side combinable everywhere."""
     ev = load_table(spark, sf_dir, "events")
-    day = F.expr("ts div 1000 div 86400000000")
+    day = ts_bucket(US_PER_DAY)
     cents = F.floor(F.col("value") * 100 + 0.5).cast("long")
     is_p = F.col("event_type") == "purchase"
     per_user = ev.groupBy("user_id").agg(
@@ -2778,11 +2764,7 @@ def rel_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "x",
         "y",
-        (
-            F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-            .cast("long")
-            % 2
-        ).alias("arm"),
+        (hex_int(F.md5(F.col("user_id").cast("string"))) % 2).alias("arm"),
     )
     mom = per_user.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -2911,13 +2893,9 @@ def ml_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the grid is still ≤ arms×days rows.  Rule 5: day is the
     unique in-arm tie-break by construction."""
     ev = load_table(spark, sf_dir, "events")
-    day = F.expr("ts div 1000 div 86400000000")
+    day = ts_bucket(US_PER_DAY)
     per_day = ev.select(
-        (
-            F.conv(F.substring(F.md5(F.col("user_id").cast("string")), 1, 8), 16, 10)
-            .cast("long")
-            % 2
-        ).alias("arm"),
+        (hex_int(F.md5(F.col("user_id").cast("string"))) % 2).alias("arm"),
         day.alias("day"),
         F.when(F.col("event_type") == "purchase", 1).otherwise(0).alias("x"),
     ).groupBy("arm", "day").agg(
@@ -3127,7 +3105,7 @@ def rel_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     user-level first-event window + one scalar rollup; the lift grid
     is a 4-literal broadcast."""
     ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", "event_type", F.expr("ts div 1000").alias("t")
+        "user_id", "event_id", "event_type", ts_us().alias("t")
     )
     w = Window.partitionBy("user_id").orderBy("t", "event_id")
     u = (
@@ -3236,11 +3214,8 @@ def rel_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rows = ev.select(
         "event_type",
-        F.expr(
-            "CAST(conv(substring(md5(CAST(user_id AS STRING)), 1, 8),"
-            " 16, 10) AS BIGINT) % 2"
-        ).alias("arm"),
-        F.expr("(ts div 1000) div 86400000000").alias("day"),
+        (hex_int(F.md5(F.col("user_id").cast("string"))) % 2).alias("arm"),
+        ts_bucket(US_PER_DAY).alias("day"),
         F.floor(F.col("value") * 100 + F.lit(0.5)).alias("cents"),
     )
     bounds = rows.agg(
@@ -3369,7 +3344,7 @@ def rel_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         ev.select(
             "event_type",
-            F.expr("(ts div 1000) div 86400000000").alias("day"),
+            ts_bucket(US_PER_DAY).alias("day"),
             F.floor(F.col("value") * 100 + F.lit(0.5)).alias("cents"),
         )
         .groupBy("event_type", "day")

@@ -16,7 +16,7 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import US_PER_HOUR, round6
 from decision_tree_analytics_spark.streaming.events_stream import (
     events_stream,
     run_to_memory,
@@ -27,9 +27,8 @@ from decision_tree_analytics_spark.streaming.events_stream import (
 
 from decision_tree_analytics_spark.streaming.sessionize import session_aggregate
 
-HOUR_US = 3_600_000_000
 SESSION_GAP_US = 1_800_000_000  # 30 minutes, session_aggregate default
-HALF_HOUR_US = HOUR_US // 2
+HALF_HOUR_US = US_PER_HOUR // 2
 
 
 def stream_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -342,12 +341,12 @@ ORACLES = {
         f" AND b.us >= a.us - {PAIRS_LOOKBACK_US}"
     ),
     "stream_windowed_counts": (
-        f"SELECT (epoch_us(ts) // {HOUR_US}) * {HOUR_US} AS window_start_us,"
+        f"SELECT (epoch_us(ts) // {US_PER_HOUR}) * {US_PER_HOUR} AS window_start_us,"
         " event_type, COUNT(*) AS n_events, SUM(value) AS sum_value"
         " FROM events GROUP BY 1, 2"
     ),
     "stream_topk": (
-        f"WITH wc AS (SELECT (epoch_us(ts) // {HOUR_US}) * {HOUR_US}"
+        f"WITH wc AS (SELECT (epoch_us(ts) // {US_PER_HOUR}) * {US_PER_HOUR}"
         "     AS window_start_us,"
         "   event_type, CAST(COUNT(*) AS BIGINT) AS n_events"
         "   FROM events GROUP BY 1, 2)"
@@ -390,7 +389,7 @@ ORACLES = {
         " FROM s GROUP BY user_id, sid"
     ),
     "stream_window_dedup": (
-        f"SELECT (epoch_us(ts) // {HOUR_US}) * {HOUR_US} AS window_start_us,"
+        f"SELECT (epoch_us(ts) // {US_PER_HOUR}) * {US_PER_HOUR} AS window_start_us,"
         " user_id, event_type,"
         " arg_max(value, event_id) AS last_value,"
         " CAST(COUNT(*) AS BIGINT) AS n_versions"

@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._parts import spread
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import hex_int, round6
 from decision_tree_analytics_spark.operators.dedup import tokens
 from decision_tree_analytics_spark.sources.tables import load_table
 
@@ -235,7 +235,7 @@ def ns_text_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "doc_id",
         "i",
-        F.conv(F.substring(F.md5("g"), 1, 8), 16, 10).cast("long").alias("fp"),
+        hex_int(F.md5("g")).alias("fp"),
     )
     win = (
         Window.partitionBy("doc_id").orderBy("i").rowsBetween(0, WINNOW_W - 1)
@@ -532,10 +532,7 @@ def ns_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     from decision_tree_analytics_spark.operators.dedup import _word_shingles
 
     d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 10
-    )
+    bucket = hex_int(F.md5(F.col("doc_id").cast("string"))) % 10
     toked = d.select("doc_id", bucket.alias("bucket"), tokens().alias("toks"))
     sh = toked.select(
         "doc_id",
@@ -574,11 +571,10 @@ def ns_lang_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = c.crossJoin(F.broadcast(m)).select(
         "lang", "n", F.expr("(mn * 1000000) div n").alias("rate_ppm")
     )
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit("rebal-"), F.col("doc_id").cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("long") % 1_000_000
+    h = (
+        hex_int(F.md5(F.concat(F.lit("rebal-"), F.col("doc_id").cast("string"))))
+        % 1_000_000
+    )
     kept = (
         d.join(F.broadcast(r), "lang")
         .filter(h < F.col("rate_ppm"))
@@ -695,10 +691,7 @@ def _manifest_packed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 10
-    )
+    bucket = hex_int(F.md5(F.col("doc_id").cast("string"))) % 10
     keep_exact = (
         d.select(fingerprint_col().alias("fp"), "doc_id")
         .groupBy("fp")
@@ -756,10 +749,7 @@ def ns_curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 10
-    )
+    bucket = hex_int(F.md5(F.col("doc_id").cast("string"))) % 10
     ke = (
         d.select(fingerprint_col().alias("fp"), "doc_id")
         .groupBy("fp")
@@ -911,9 +901,7 @@ def ns_shard_interleave(spark: SparkSession, sf_dir: str) -> DataFrame:
     ANSI: adjacent-pair fraction guards nullif(n-1, 0)."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
     key = F.md5(F.col("doc_id").cast("string"))
-    shard = (
-        F.conv(F.substring(key, 1, 8), 16, 10).cast("long") % N_LOADER_SHARDS
-    )
+    shard = hex_int(key) % N_LOADER_SHARDS
     s = d.select("doc_id", "source", key.alias("k"), shard.alias("shard"))
     w = Window.partitionBy("shard").orderBy("k", "doc_id")
     seq = s.withColumn(
@@ -1545,10 +1533,7 @@ def ns_incremental_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     d = load_table(spark, sf_dir, "documents")
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("long") % 10
-    )
+    bucket = hex_int(F.md5(F.col("doc_id").cast("string"))) % 10
     n_tok = F.size(F.split(F.col("text"), " ")).cast("long")
     existing = d.filter(F.col("doc_id") < DELTA_SPLIT)
     batch = d.filter((F.col("doc_id") >= DELTA_SPLIT) & (bucket < 8))
@@ -1951,12 +1936,7 @@ def ns_quality_model(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             for i, lang in enumerate(QM_LANGS)
         ],
-        (
-            F.conv(
-                F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10
-            ).cast("long")
-            % 10
-        ).alias("bucket"),
+        (hex_int(F.md5(F.col("doc_id").cast("string"))) % 10).alias("bucket"),
     ).persist()
     train = feats.filter(F.col("bucket") < 8)
     test = feats.filter(F.col("bucket") >= 8)
@@ -2250,21 +2230,15 @@ def ns_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_spans",
         F.explode(F.sequence(F.lit(0), F.col("n_spans") - 1)).alias("span_id"),
     )
-    draw = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    "-",
-                    F.col("doc_id").cast("string"),
-                    F.col("span_id").cast("string"),
-                )
-            ),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
+    draw = hex_int(
+        F.md5(
+            F.concat_ws(
+                "-",
+                F.col("doc_id").cast("string"),
+                F.col("span_id").cast("string"),
+            )
+        )
+    )
     span_len = (F.lit(2) + draw % 3).cast("long")
     # stratum k covers tokens [k*S, (k+1)*S); the span starts at a
     # md5-derived offset that keeps start+len inside the stratum
@@ -2340,11 +2314,9 @@ def ns_manifest_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         F.size(tokens()).cast("long").alias("n_tok"),
-        (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-            .cast("long")
-            % MDIFF_BUCKETS
-        ).alias("bucket"),
+        (hex_int(F.md5(F.col("doc_id").cast("string"))) % MDIFF_BUCKETS).alias(
+            "bucket"
+        ),
     )
     g1 = d.filter(
         (F.col("bucket") != 0) & (F.col("n_tok") >= MDIFF_G1_GATE)

@@ -18,7 +18,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import round6
 from decision_tree_analytics_spark.sources.tables import load_table
 
 

@@ -39,7 +39,12 @@ from pyspark.sql.types import (
 )
 
 from decision_tree_analytics_spark.operators._parts import arrow_parts, spread
-from decision_tree_analytics_spark.operators._round import round6
+from decision_tree_analytics_spark.operators._rules import (
+    US_PER_DAY,
+    round6,
+    ts_bucket,
+    ts_us,
+)
 from decision_tree_analytics_spark.operators.dedup import tokens
 from decision_tree_analytics_spark.operators.multimodal import with_binary_payload
 from decision_tree_analytics_spark.sources.tables import load_table
@@ -241,7 +246,7 @@ def udf_user_gap_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inter-event gap statistics per user over the time-ordered event
     sequence (count, mean/max/min gap in µs)."""
     ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "event_id", F.expr("ts div 1000").alias("ts_us")
+        "user_id", "event_id", ts_us().alias("ts_us")
     )
     return ev.groupBy("user_id").applyInPandas(_gap_group, _GAP_SCHEMA)
 
@@ -312,7 +317,7 @@ def udf_secondary_sort(spark: SparkSession, sf_dir: str) -> DataFrame:
     via repartition + sortWithinPartitions + a streaming mapInPandas
     consumer (see module note on the secondary-sort contract)."""
     ev = load_table(spark, sf_dir, "events").select(
-        "user_id", F.expr("ts div 1000").alias("ts_us"), "event_id", "value"
+        "user_id", ts_us().alias("ts_us"), "event_id", "value"
     )
     part = ev.repartition(
         arrow_parts(sf_dir, "events"), "user_id"
@@ -516,7 +521,6 @@ ORACLES = {
 
 HOLT_ALPHA = 0.5  # level smoothing
 HOLT_BETA = 0.3  # trend smoothing
-_US_PER_DAY = 86_400_000_000
 
 _HOLT_SCHEMA = StructType(
     [
@@ -574,7 +578,7 @@ def udf_holt_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select(
             "event_type",
-            F.expr(f"(ts div 1000) div {_US_PER_DAY}").alias("day"),
+            ts_bucket(US_PER_DAY).alias("day"),
             "value",
         )
     )
@@ -587,7 +591,7 @@ def udf_holt_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
 QUERIES["udf_holt_smooth"] = udf_holt_smooth
 ORACLES["udf_holt_smooth"] = f"""
 WITH RECURSIVE d0 AS (SELECT event_type,
-    epoch_us(ts) // {_US_PER_DAY} AS day,
+    epoch_us(ts) // {US_PER_DAY} AS day,
     floor(avg(value) * 1e6 + 0.5) / 1e6 AS x
   FROM events WHERE value IS NOT NULL GROUP BY 1, 2),
 seq AS (SELECT *, row_number() OVER (PARTITION BY event_type ORDER BY day)
@@ -681,7 +685,7 @@ def udf_dtw_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("value").isNotNull())
         .select(
             "user_id",
-            F.expr(f"(ts div 1000) div {_US_PER_DAY}").alias("day"),
+            ts_bucket(US_PER_DAY).alias("day"),
             "value",
         )
     )
@@ -721,7 +725,7 @@ def udf_dtw_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _dtw_oracle() -> str:
     n = DTW_DAYS
     parts = [
-        f"WITH ev AS (SELECT user_id, epoch_us(ts) // {_US_PER_DAY} AS day,"
+        f"WITH ev AS (SELECT user_id, epoch_us(ts) // {US_PER_DAY} AS day,"
         " value FROM events WHERE value IS NOT NULL),",
         "mx AS (SELECT max(day) AS mx FROM ev),",
         f"grid AS (SELECT i, mx - {n - 1} + i AS day"

@@ -29,7 +29,7 @@ Scale notes
   directly as BIGINT regardless of the timestamp logical annotation)
   and normalizes it to **epoch nanoseconds** by the footer-declared
   unit.  All engine time arithmetic on events keeps the original
-  contract: integer epoch-microseconds via ``ts div 1000``, which is
+  contract: integer epoch-microseconds via ``ts_us()``, which is
   exactly DuckDB's ``epoch_us(ts)`` after its own →µs truncation — a
   timezone-free, engine-portable contract immune to both the file's
   unit and Spark's timestamp type politics.

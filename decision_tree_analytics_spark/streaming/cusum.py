@@ -87,8 +87,11 @@ def _update_cusum(
 def user_cusum(stream: DataFrame) -> DataFrame:
     """Apply the CUSUM state machine per user over an event stream
     (expects the events_stream schema with its ns ``ts``)."""
+    # Imported here: importing the operators package imports this module.
+    from decision_tree_analytics_spark.operators._rules import ts_us
+
     keyed = stream.filter(F.col("value").isNotNull()).select(
-        "user_id", "event_id", F.expr("ts div 1000").alias("t"), "value"
+        "user_id", "event_id", ts_us().alias("t"), "value"
     )
     return keyed.groupBy("user_id").applyInPandasWithState(
         _update_cusum,

@@ -40,6 +40,9 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ts`` is read as raw INT64 in the file's native unit and
     normalized to epoch-ns exactly like the batch reader
     (sources/tables.py) so the two plans share one time contract."""
+    # Imported here: importing the operators package imports this module.
+    from decision_tree_analytics_spark.operators._rules import ts_us
+
     prepare_session(spark)
     # File stream sources take a directory; select just the events
     # file via glob (a production stream points at a landing dir).
@@ -51,9 +54,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale = events_ts_scale(sf_dir)
     if scale != 1:
         raw = raw.withColumn("ts", (F.col("ts") * F.lit(scale)).cast("long"))
-    return raw.withColumn(
-        "event_time", F.timestamp_micros(F.expr("ts div 1000"))
-    )
+    return raw.withColumn("event_time", F.timestamp_micros(ts_us()))
 
 
 def windowed_event_counts(stream: DataFrame, window: str = "1 hour",

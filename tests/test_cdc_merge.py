@@ -5,8 +5,6 @@ sweep-line and vacuum accounting formulas both engines run."""
 
 from __future__ import annotations
 
-import hashlib
-
 import pandas as pd
 import pyspark.sql.functions as F
 from hypothesis import given, settings
@@ -23,6 +21,7 @@ from decision_tree_analytics_spark.operators.cdc import (
     snap_vacuum_plan,
 )
 from decision_tree_analytics_spark.sources.tables import load_table
+from tests.oracle_harness import md5_bucket
 
 
 def test_merge_all_four_outcomes(spark):
@@ -93,10 +92,6 @@ def test_compaction_plan_replays_in_pandas(spark, sf_dir):
         assert (grp.bin_bytes == grp.bytes.sum()).all()
 
 
-def _hash_fid(key: int) -> int:
-    return int(hashlib.md5(str(key).encode()).hexdigest()[:8], 16) % N_HASH_FILES
-
-
 # ------------------------------------------------------------------
 # shared manifest replay
 # ------------------------------------------------------------------
@@ -113,7 +108,7 @@ def _manifest_replay(spark, sf_dir) -> pd.DataFrame:
     rows = []
     for layout, fid in (
         ("clustered", days // CLUSTER_DAYS),
-        ("hashed", o["o_orderkey"].map(_hash_fid)),
+        ("hashed", o["o_orderkey"].map(lambda k: md5_bucket(k, N_HASH_FILES))),
     ):
         g = pd.DataFrame({"file_id": fid, "day": days}).groupby("file_id")
         m = g["day"].agg(["min", "max", "size"]).reset_index()

@@ -203,10 +203,8 @@ def test_pit_features_exclude_label_time_ties(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from decision_tree_analytics_spark.operators.analytics import (
-        US_PER_DAY,
-        rel_pit_features,
-    )
+    from decision_tree_analytics_spark.operators._rules import US_PER_DAY
+    from decision_tree_analytics_spark.operators.analytics import rel_pit_features
 
     t0 = 1_700_000_000_000_000  # label instant, epoch-µs
     day = US_PER_DAY
@@ -248,12 +246,10 @@ def test_dtw_profile_zero_for_single_user(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from decision_tree_analytics_spark.operators.udf_inventory import (
-        _US_PER_DAY,
-        udf_dtw_profile,
-    )
+    from decision_tree_analytics_spark.operators._rules import US_PER_DAY
+    from decision_tree_analytics_spark.operators.udf_inventory import udf_dtw_profile
 
-    day_us = _US_PER_DAY
+    day_us = US_PER_DAY
     base = 1_700_000_000_000_000
     def write(dirpath, rows):
         table = pa.table(

@@ -5,13 +5,15 @@ the two width forms are locked by the exchanges a consumer plans, each
 against the form it replaces or excludes.  A source guard keeps every
 ``localCheckpoint`` call inside the helper, every
 ``defaultParallelism`` read inside ``operators/_parts.py``, every
-tree save and load inside ``ml/registry.py``, and the embedding-vector
-load and SRP bucket CTEs inside ``operators/similarity.py``.
+tree save and load inside ``ml/registry.py``, the embedding-vector
+load and SRP bucket CTEs inside ``operators/similarity.py``, and the
+event-time key and md5 hex slice inside ``operators/_rules.py``.
 """
 
 from __future__ import annotations
 
 import pathlib
+import re
 import uuid
 
 import pyspark.sql.functions as F
@@ -103,6 +105,7 @@ def test_iterate_checkpoints_every_round_but_the_last(spark):
         ("VectorAssembler", None),
         ('_vecd("embedding")', "operators/similarity.py"),
         ("pdots AS (", "operators/similarity.py"),
+        ("ts div 1000", "operators/_rules.py"),
     ],
     ids=[
         "localCheckpoint",
@@ -113,13 +116,15 @@ def test_iterate_checkpoints_every_round_but_the_last(spark):
         "VectorAssembler",
         "embedding_vectors",
         "srp_bucket_ctes",
+        "event_time_key",
     ],
 )
 def test_token_only_in_its_home_module(token, home):
     # Lineage truncation lives in _loop.py, partition counts in
     # _parts.py, tree save/load in ml/registry.py (which pins what it
     # saves and loads), and the vector-search building blocks in
-    # similarity.py; a removed helper's name must not come back.
+    # similarity.py, and the event-time key in _rules.py; a removed
+    # helper's name must not come back.
     helper = PACKAGE / home if home else None
     offenders = [
         f"{path.relative_to(PACKAGE)}:{n}"
@@ -127,5 +132,21 @@ def test_token_only_in_its_home_module(token, home):
         if path != helper
         for n, line in enumerate(path.read_text().splitlines(), 1)
         if token in line
+    ]
+    assert offenders == []
+
+
+def test_md5_hex_slice_only_in_rules_module():
+    # Rule 6's hex-slice-to-integer has one Spark-side form,
+    # _rules.hex_int.  Whitespace runs are collapsed so a call split
+    # over lines, and the Spark-SQL-text spelling, match too;
+    # multimodal's conv(F.hex(...)) decodes bytes and is not matched.
+    slice_to_int = re.compile(r"conv\(\s*(F\.)?substring\(")
+    helper = PACKAGE / "operators/_rules.py"
+    offenders = [
+        str(path.relative_to(PACKAGE))
+        for path in sorted(PACKAGE.rglob("*.py"))
+        if path != helper
+        and slice_to_int.search(re.sub(r"\s+", " ", path.read_text()))
     ]
     assert offenders == []

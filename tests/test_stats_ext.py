@@ -236,8 +236,6 @@ def test_brier_decomposition_identity_and_direct_mean(spark, sf_dir):
 
 
 def test_learning_curve_matches_numpy_per_fraction(spark, sf_dir):
-    import hashlib
-
     from decision_tree_analytics_spark.operators.stats_ext import (
         LC_BUCKETS,
         ml_learning_curve,
@@ -257,7 +255,7 @@ def test_learning_curve_matches_numpy_per_fraction(spark, sf_dir):
         .toPandas()
     )
     li["bucket"] = [
-        int(hashlib.md5(f"{o}-{l}".encode()).hexdigest()[:8], 16) % LC_BUCKETS
+        md5_bucket(f"{o}-{l}", LC_BUCKETS)
         for o, l in zip(li["l_orderkey"], li["l_linenumber"])
     ]
     test = li[li["bucket"] == LC_BUCKETS - 1]
