@@ -32,7 +32,11 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
     scan that arrives in more partitions than cores is merged down and
     each task grows with the data.  Three Arrow lanes
     (udf_batch_inference, udf_heavy_hitters, mm_byte_stats) use this
-    rather than ``arrow_parts``; moving them would change their plans."""
+    rather than ``arrow_parts``; moving them would change their plans.
+    Every decision-tree fit spreads its raw feature and label columns
+    here before assembly and caching (``ml/trainer.py`` on all of them,
+    ``ml_inventory._fit_price_model`` on the lineitem key), so MLlib's
+    per-fit passes over the cache run one task per core."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
 
 

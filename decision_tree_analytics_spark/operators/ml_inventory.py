@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from decision_tree_analytics_spark.ml.features import FEATURES_COL, assemble_features
 from decision_tree_analytics_spark.operators._cache import tether_cache
 from decision_tree_analytics_spark.operators._loop import checkpoint, iterate
+from decision_tree_analytics_spark.operators._parts import spread
 from decision_tree_analytics_spark.operators._rules import (
     US_PER_HOUR,
     hex_int,
@@ -53,6 +54,11 @@ def q26_dt_train_predict(spark: SparkSession, sf_dir: str) -> DataFrame:
     (keys + vector + label), not the 16-column lineitem row — the
     projection prunes the parquet scan and every per-level pass
     (~25% faster at sf0.1, and the gap widens with row width).
+    That projection is spread over every core before it is cached
+    (see ``_fit_price_model``): at sf0.1, a one-file table, q26 went
+    from 3.4-3.7 s to 3.1-3.2 s on 4 cores.  At sf1 lineitem already
+    arrives one partition per core and the spread is no faster
+    (9.7-10.8 s before, 10.8-11.0 s after).
     The cache is tethered to the result (``tether_cache``), so the
     caller's scoring action reads it too instead of re-reading
     lineitem and rebuilding the features.
@@ -75,9 +81,17 @@ def _fit_price_model(spark: SparkSession, sf_dir: str, estimator) -> DataFrame:
     """Fit ``estimator`` (features in FEATURES_COL, label
     l_extendedprice) on lineitem and score the same rows as
     (l_orderkey, l_linenumber, predicted_price), the cached 4-column
-    projection tethered to the result."""
-    li = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_linenumber", "l_extendedprice", *_FEATURES
+    projection tethered to the result.  The 6-column projection is
+    hash-spread on (l_orderkey, l_linenumber) over every core before
+    assembly, so the cache holds one partition per core: the fit's
+    passes and the scoring that reads the tethered cache run one task
+    per core instead of one task over a single-file table."""
+    li = spread(
+        load_table(spark, sf_dir, "lineitem").select(
+            "l_orderkey", "l_linenumber", "l_extendedprice", *_FEATURES
+        ),
+        "l_orderkey",
+        "l_linenumber",
     )
     assembled = (
         assemble_features(li, _FEATURES)

@@ -118,6 +118,11 @@ NAMES = [
     # PREF_POOL-bounded so both windows and the pair groupBy are
     # skew-free; expected ~linear in corpus size.
     "ns_preference_pairs",
+    # The paper's tree fit and scoring (q26): its lineitem projection
+    # is hash-spread over every core before the fit's cache.  That wins
+    # on a one-partition table; at 10x lineitem already arrives one
+    # partition per core, so the probe shows what the shuffle costs.
+    "q26_dt_train_predict",
 ]
 
 

@@ -2,7 +2,15 @@
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
+import pytest
+
 import __spark_entry__ as entry_mod
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_entry_returns_rows(spark):
@@ -134,3 +142,29 @@ def test_sweep_script_imports_its_own_checkout(tmp_path, monkeypatch):
     spec.loader.exec_module(mod)
     assert sys.path[0] == str(tmp_path)
     assert mod.SHARD == (2, 3)
+
+
+@pytest.mark.parametrize(
+    "module",
+    [
+        "ml",
+        "ml.trainer",
+        "pipeline",
+        "operators",
+        "streaming.events_stream",
+        "streaming.cusum",
+    ],
+)
+def test_module_imports_first_in_a_fresh_process(module):
+    # The trainer imports operators._parts (so operators/__init__), and
+    # operators imports streaming while building its ORACLES: a
+    # circular import only fails in a process whose first import is
+    # the wrong module, which an in-process import never is.
+    done = subprocess.run(
+        [sys.executable, "-c", f"import decision_tree_analytics_spark.{module}"],
+        cwd=REPO,
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert done.returncode == 0, done.stderr[-2000:]

@@ -4,6 +4,8 @@ flight fixture) plus the behavioral contracts from FIXTURES.md §A3."""
 
 from __future__ import annotations
 
+import os
+import re
 import uuid
 
 import pyspark.sql.functions as F
@@ -145,11 +147,11 @@ def test_understated_cardinality_fails(spark, model_dir):
         DecisionTreeTrainerStage(cfg, model_dir).run(flights.flight_train_df(spark))
 
 
-def _jobs_run_by(spark, fn):
-    """``fn()``'s result and the number of Spark jobs it started,
-    counted in a fresh job group."""
+def _run_in_group(spark, fn):
+    """``fn()``'s result and the ids of the Spark jobs it started, read
+    from a fresh job group."""
     sc = spark.sparkContext
-    group = f"model-pin-{uuid.uuid4().hex}"
+    group = f"ml-pipeline-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
     try:
         out = fn()
@@ -157,7 +159,13 @@ def _jobs_run_by(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _jobs_run_by(spark, fn):
+    """``fn()``'s result and the number of Spark jobs it started."""
+    out, jobs = _run_in_group(spark, fn)
+    return out, len(jobs)
 
 
 def _train(spark, model_dir, name, max_depth):
@@ -397,3 +405,145 @@ def test_q26_scoring_reads_the_tethered_cache(spark, sf_dir):
     while cached_rdds() & ours and time.monotonic() < deadline:
         time.sleep(0.1)
     assert not cached_rdds() & ours
+
+
+# The paper's price model on lineitem at sf0.01 (60k rows): large
+# enough that MLlib samples its split candidates (more than 10,000
+# rows) and grows a tree of several hundred nodes.
+LINEITEM_FEATURES = "l_quantity,l_discount,l_tax"
+LINEITEM_LABEL = "l_extendedprice"
+
+
+@pytest.fixture(scope="module")
+def sf001_dir(sf_dir):
+    path = os.path.join(os.path.dirname(os.path.abspath(sf_dir)), "sf0.01")
+    if not os.path.isdir(path):
+        pytest.skip(f"no sf0.01 corpus beside {sf_dir}")
+    return path
+
+
+def _lineitem_source(spark, sf_dir):
+    from decision_tree_analytics_spark.sources.tables import load_table
+
+    return load_table(spark, sf_dir, "lineitem").select(
+        *LINEITEM_FEATURES.split(","), LINEITEM_LABEL
+    )
+
+
+def _fit_lineitem(spark, model_dir, source):
+    cfg = TrainerConfig(
+        file_set_name=f"lineitem-{uuid.uuid4().hex}",
+        feature_fields_to_include=LINEITEM_FEATURES,
+        label_field=LINEITEM_LABEL,
+    )
+    return DecisionTreeTrainerStage(cfg, model_dir).run(source)
+
+
+_PREDICT = re.compile(r"Predict: (\S+)")
+
+
+def _tree_text(model):
+    """``toDebugString`` without its first line, which names the
+    model's uid."""
+    return model.toDebugString.split("\n", 1)[1]
+
+
+def _tree_shape(model):
+    """The tree's text with every leaf value blanked, and the leaf
+    values in order."""
+    text = _tree_text(model)
+    return _PREDICT.sub("Predict: _", text), [float(v) for v in _PREDICT.findall(text)]
+
+
+@pytest.fixture(scope="module")
+def lineitem_fit(spark, model_dir, sf001_dir):
+    """One fit of the one-partition lineitem source, with the ids of
+    the jobs it ran."""
+    source = _lineitem_source(spark, sf001_dir)
+    assert source.rdd.getNumPartitions() == 1  # a single-file table
+    model, jobs = _run_in_group(spark, lambda: _fit_lineitem(spark, model_dir, source))
+    return source, model, jobs
+
+
+def test_tree_fit_does_not_depend_on_the_input_layout(spark, model_dir, lineitem_fit):
+    """The trainer spreads its input over every core before the cache,
+    so a source that arrives in 7 partitions fits the same tree as the
+    one-partition table: same structure, split features and
+    thresholds; leaf means equal up to summation order."""
+    source, model, jobs = lineitem_fit
+    wide = _fit_lineitem(spark, model_dir, source.repartition(7))
+    assert (wide.numNodes, wide.depth) == (model.numNodes, model.depth)
+    assert model.numNodes > 100
+    splits, leaves = _tree_shape(model)
+    wide_splits, wide_leaves = _tree_shape(wide)
+    assert wide_splits == splits
+    assert wide_leaves == pytest.approx(leaves, rel=1e-9)
+
+    again = _fit_lineitem(spark, model_dir, source)
+    assert _tree_text(again) == _tree_text(model)
+
+    tracker = spark.sparkContext.statusTracker()
+    stages = [
+        tracker.getStageInfo(stage)
+        for job in jobs
+        for stage in tracker.getJobInfo(job).stageIds
+    ]
+    metadata = [s for s in stages if s and s.name.startswith("aggregate at DecisionTreeMetadata")]
+    assert [s.numTasks for s in metadata] == [spark.sparkContext.defaultParallelism]
+
+
+def _leaf_means(scored, prediction, label):
+    """{prediction: (row count, mean label of the rows predicted it)}."""
+    rows = scored.groupBy(prediction).agg(F.count("*"), F.avg(label)).collect()
+    return {r[0]: (r[1], r[2]) for r in rows}
+
+
+def _assert_leaf_means(means):
+    assert len(means) > 10
+    for p, (_, mean) in means.items():
+        assert mean == pytest.approx(p, rel=1e-9)
+
+
+def test_every_leaf_predicts_the_mean_label_of_its_rows(
+    spark, sf001_dir, lineitem_fit, monkeypatch
+):
+    """A variance-impurity regression tree predicts each leaf's mean
+    label, so on its own training rows the mean label of the rows
+    predicted p is p, whatever the partitioning: checked for the
+    trainer's tree and for the tree q26 fits and scores with.
+
+    (l_orderkey, l_linenumber) repeats in lineitem, so q26's output
+    cannot be joined back to its labels; the test keeps the tree q26
+    fits, scores lineitem with it, and checks that q26 output the same
+    predictions as often."""
+    from pyspark.ml.regression import DecisionTreeRegressor
+
+    from decision_tree_analytics_spark.operators.ml_inventory import (
+        _FEATURES,
+        q26_dt_train_predict,
+    )
+    from decision_tree_analytics_spark.sources.tables import load_table
+
+    source, model, _ = lineitem_fit
+    scored = model.transform(assemble_features(source, _FEATURES))
+    _assert_leaf_means(_leaf_means(scored, "prediction", LINEITEM_LABEL))
+
+    fitted = []
+    fit = DecisionTreeRegressor._fit
+
+    def recording_fit(self, dataset):
+        fitted.append(fit(self, dataset))
+        return fitted[-1]
+
+    monkeypatch.setattr(DecisionTreeRegressor, "_fit", recording_fit)
+    q26 = q26_dt_train_predict(spark, sf001_dir)
+    (q26_model,) = fitted
+    lineitem = load_table(spark, sf001_dir, "lineitem")
+    q26_means = _leaf_means(
+        q26_model.transform(assemble_features(lineitem, _FEATURES)),
+        q26_model.getPredictionCol(),
+        LINEITEM_LABEL,
+    )
+    _assert_leaf_means(q26_means)
+    counts = q26.groupBy("predicted_price").count().collect()
+    assert {r[0]: r[1] for r in counts} == {p: n for p, (n, _) in q26_means.items()}
